@@ -47,11 +47,13 @@ def release_transients() -> None:
 
 
 def release_session_caches() -> None:
-    """Full reset: transient persists AND the deliberately
-    session-scoped shared intermediates (shingle tables, co-order
-    edge tables)."""
+    """Full reset: transient persists, the deliberately session-scoped
+    shared intermediates (shingle tables, co-order edge tables) and
+    the scan-width layout probes, which a rewritten source path would
+    otherwise keep answering from a stale layout."""
     release_transients()
     from kcore_spark.operators import graph as graph_ops
+    from kcore_spark.operators import relational
     from kcore_spark.queries import dedup as dedup_queries
 
     for df in dedup_queries._SHINGLES.values():
@@ -66,3 +68,4 @@ def release_session_caches() -> None:
         except Exception:
             pass
     graph_ops._CO_EDGES.clear()
+    relational._SCAN_WIDTH.clear()

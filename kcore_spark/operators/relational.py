@@ -69,8 +69,9 @@ def spread(df: DataFrame, *keys: str | Column) -> DataFrame:
 
 # Layout-probe cache: (defaultParallelism, input-file set | caller
 # key) → effective scan width. Layout metadata only (never data or
-# results); one probe per table layout per process. Callers that scan
-# a stable path pass ``cache_key`` so repeat constructions skip even
+# results); one probe per table layout until
+# caching.release_session_caches() clears it. Callers that scan a
+# stable path pass ``cache_key`` so repeat constructions skip even
 # the file listing (measured ~0.2 s/construction under load).
 _SCAN_WIDTH: dict[tuple[int, object], int] = {}
 
@@ -78,10 +79,8 @@ _SCAN_WIDTH: dict[tuple[int, object], int] = {}
 def _parquet_row_groups(files: tuple[str, ...]) -> int | None:
     """Total row groups across locally readable parquet files, or None
     when any footer is unreachable (object-store path, missing file)."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow is a test-env dep
-        return None
+    import pyarrow.parquet as pq
+
     total = 0
     for uri in files:
         path = uri[len("file:"):] if uri.startswith("file:") else uri

@@ -27,327 +27,34 @@ class QuerySpec:
     doc: str = ""
 
 
-# Names that already carry a driver-signed correctness row (union of
-# CORRECTNESS_r01..r06). The driver snapshots only the FIRST 50 registry
-# entries each round, so all_queries() orders never-driver-verified queries
-# first — rotating the window until every family has an external signature
-# (VERDICT r5 "Next round #1"). Append each round's newly-signed names here.
-_DRIVER_VERIFIED: frozenset[str] = frozenset({
-    # CORRECTNESS_r07 window (graph/extensions/topiclog/text block):
-    "q_activity_islands", "q_apply_in_pandas_gaps", "q_basket_pmi",
-    "q_bfs_reach", "q_bigram_lm_score", "q_bloom_prefilter_join",
-    "q_bm25_topk", "q_bpe_pair_stats", "q_clustering_coefficient",
-    "q_cohort_retention", "q_corpus_curation", "q_cumulative_distinct_users",
-    "q_cuped_adjustment", "q_cusum_changepoint", "q_dp_noisy_counts",
-    "q_embedding_quantize", "q_event_pattern_regex", "q_event_transitions",
-    "q_ewma_smoothing", "q_fingerprints", "q_frame_sample",
-    "q_funnel_conversions", "q_gopher_repetition", "q_hypertable_rollup",
-    "q_incremental_agg_maintenance", "q_k_anonymity", "q_kcore_subgraph",
-    "q_lang_id_confusion", "q_multi_touch_attribution",
-    "q_multimodal_features", "q_multimodal_router", "q_pagerank_purchases",
-    "q_pagerank_weighted", "q_pandas_udf_tokens", "q_resample_hourly_ffill",
-    "q_rolling_zscore_anomalies", "q_setsim_ppjoin",
-    "q_stream_topic_source_counts", "q_stream_tws_sessions",
-    "q_supplier_triangles", "q_text_quality", "q_text_stats",
-    "q_token_totals", "q_topic_fetch_range", "q_topic_list_offsets",
-    "q_topic_offsets_for_ts", "q_topic_pyds_read", "q_topic_time_travel",
-    "q_two_stage_retrieval", "q_woe_binning",
-    # CORRECTNESS_r06 window (dedup/similarity/quality/streaming block):
-    "q_ann_ivf_topk", "q_batch_inference", "q_cdc_chunk_dups",
-    "q_char_entropy", "q_cosine_topk", "q_decontaminate_ngram",
-    "q_dedup_clusters", "q_dedup_exact", "q_dedup_survivorship",
-    "q_embedding_neardup", "q_embedding_neardup_lsh", "q_fuzzy_blocked_match",
-    "q_fuzzy_clusters", "q_incremental_dedup", "q_ivf_pq_search",
-    "q_label_centroids", "q_mad_outliers", "q_merge_upsert_orders",
-    "q_minhash_lsh_pairs", "q_near_dup_jaccard",
-    "q_near_dup_jaccard_df_filtered", "q_ngram_containment", "q_pq_encode",
-    "q_range_join_binned", "q_scd2_history", "q_schema_governed_produce",
-    "q_semantic_clusters", "q_simhash_fingerprints", "q_simhash_neardup",
-    "q_split_leakage", "q_stream_dedup_counts", "q_stream_dlq_split",
-    "q_stream_session_windows", "q_stream_sliding_10m",
-    "q_stream_stateful_user_stats", "q_stream_static_join",
-    "q_stream_stream_full_join", "q_stream_stream_join",
-    "q_stream_stream_left_join", "q_stream_timeout_sessions",
-    "q_stream_topic_sink_roundtrip", "q_stream_tumbling_counts",
-    "q_table_checksum", "q_tfidf_top_terms", "q_topic_compacted_read",
-    "q_topic_consumer_lag", "q_topic_pattern_scan", "q_topic_pyds_write",
-    "q_unigram_kl_drift", "q_winsorized_mean",
-    # CORRECTNESS_r01..r05 union:
-    "q01_pricing_summary", "q03_shipping_priority", "q05_local_supplier_volume",
-    "q06_forecast_revenue", "q07_nation_volume", "q08_market_share",
-    "q09_profit_by_nation_year", "q10_returned_items", "q12_priority_by_shipyear",
-    "q13_customer_distribution", "q14_promo_revenue_share", "q15_top_supplier",
-    "q16_supplier_counts", "q19_disjunctive_revenue", "q_agg_extras",
-    "q_anti_join_never_bought", "q_array_funcs", "q_asof_event_order",
-    "q_brand_volume", "q_case_null", "q_cube_orders", "q_date_funcs",
-    "q_datediff_fulfillment", "q_distinct_flags", "q_events_corrupt_json",
-    "q_events_dedup_first", "q_events_enriched", "q_events_json_props",
-    "q_events_props_map", "q_events_sessions", "q_events_sliding_10m",
-    "q_events_tumbling_1h", "q_events_variant", "q_except_buyers",
-    "q_filter_predicates", "q_grouped_lists", "q_grouping_sets",
-    "q_hash_sample", "q_intersect_all_quantities", "q_intersect_buyers",
-    "q_like_filters", "q_math_funcs", "q_percentiles", "q_pivot_status",
-    "q_rollup_returns", "q_semi_join_buyers", "q_stratified_sample",
-    "q_string_agg_nations", "q_string_funcs", "q_string_funcs2",
-    "q_topk_orders", "q_union_all_counts", "q_unpivot_metrics",
-    "q_window_analytics", "q_window_exclude_current", "q_window_ranks",
-    "q_window_running_totals", "q_window_time_range", "q_window_topk_orders",
-    "q_xml_funcs",
-})
-
-
-# Module order sets the driver's 50-query window: never-driver-verified
-# families first (dedup/similarity/quality/streaming/topiclog are the
-# headline LLM-pipeline blocks, then the extension batches in age order,
-# with the long-signed TPC-H/windows/setops/scalars/events families last).
-# ONE list drives both import and registration (ADVICE r10: the old
-# duplicated import-block + iteration tuple could silently drop a module
-# present in only one of them); _assert_module_order_complete() below
-# additionally fails fast if an extensions_* file exists on disk but is
-# missing from this list.
-_MODULE_ORDER: tuple[str, ...] = (
-    "dedup",
-    "extensions_r7",
-    "similarity",
-    "quality_q",
-    "streaming",
-    "topiclog",
-    "text",
-    "timeseries",
-    "ranking",
-    "udfs",
-    "subqueries",
-    "sources_q",
-    "recursive",
-    "tpch3",
-    "scale_q",
-    "packing_q",
-    "sampling_q",
-    "curation_q",
-    "extensions_r8",
-    "extensions_r8b",
-    "extensions_r8c",
-    "extensions_r8d",
-    "extensions_r8e",
-    "extensions_r8f",
-    "extensions_r8g",
-    "extensions_r9",
-    "extensions_r9b",
-    "extensions_r9c",
-    "extensions_r9d",
-    "extensions_r9e",
-    "extensions_r9f",
-    "extensions_r9g",
-    "extensions_r9h",
-    "extensions_r9i",
-    "extensions_r9j",
-    "extensions_r9k",
-    "extensions_r9l",
-    "extensions_r9m",
-    "extensions_r9n",
-    "extensions_r9o",
-    "extensions_r9p",
-    "extensions_r9q",
-    "extensions_r9r",
-    "extensions_r9s",
-    "extensions_r9t",
-    "extensions_r9u",
-    "extensions_r9v",
-    "extensions_r9w",
-    "extensions_r9x",
-    "extensions_r9y",
-    "extensions_r9z",
-    "extensions_r9aa",
-    "extensions_r9ab",
-    "extensions_r9ac",
-    "extensions_r9ad",
-    "extensions_r9ae",
-    "extensions_r9af",
-    "extensions_r9ag",
-    "extensions_r9ah",
-    "extensions_r9ai",
-    "extensions_r10",
-    "extensions_r10b",
-    "extensions_r10c",
-    "extensions_r10d",
-    "extensions_r10e",
-    "extensions_r10f",
-    "extensions_r10g",
-    "extensions_r10h",
-    "extensions_r10i",
-    "extensions_r10j",
-    "extensions_r10k",
-    "extensions_r10l",
-    "extensions_r10m",
-    "extensions_r10n",
-    "extensions_r10o",
-    "extensions_r10p",
-    "extensions_r10q",
-    "extensions_r10r",
-    "extensions_r10s",
-    "extensions_r10t",
-    "extensions_r10u",
-    "extensions_r10v",
-    "extensions_r10w",
-    "extensions_r10x",
-    "extensions_r10y",
-    "extensions_r10z",
-    "extensions_r10aa",
-    "extensions_r10ab",
-    "extensions_r10ac",
-    "extensions_r10ad",
-    "extensions_r10ae",
-    "extensions_r10af",
-    "extensions_r10ag",
-    "extensions_r10ah",
-    "extensions_r10ai",
-    "extensions_r10aj",
-    "extensions_r10ak",
-    "extensions_r10al",
-    "extensions_r10am",
-    "extensions_r10an",
-    "extensions_r10ao",
-    "extensions_r10ap",
-    "extensions_r10aq",
-    "extensions_r10ar",
-    "extensions_r10as",
-    "extensions_r10at",
-    "extensions_r10au",
-    "extensions_r10av",
-    "extensions_r10aw",
-    "extensions_r10ax",
-    "extensions_r10ay",
-    "extensions_r10az",
-    "extensions_r10ba",
-    "extensions_r10bb",
-    "extensions_r10bc",
-    "extensions_r10bd",
-    "extensions_r10be",
-    "extensions_r10bf",
-    "extensions_r10bg",
-    "extensions_r10bh",
-    "extensions_r10bi",
-    "extensions_r10bj",
-    "extensions_r10bk",
-    "extensions_r10bl",
-    "extensions_r10bm",
-    "extensions_r10bn",
-    "extensions_r10bo",
-    "extensions_r10bp",
-    "extensions_r10bq",
-    "extensions_r10br",
-    "extensions_r10bs",
-    "extensions_r10bt",
-    "extensions_r10bu",
-    "extensions_r10bv",
-    "extensions_r10bw",
-    "extensions_r10bx",
-    "extensions_r10by",
-    "extensions_r10bz",
-    "extensions_r10ca",
-    "extensions_r10cb",
-    "extensions_r10cc",
-    "extensions_r10cd",
-    "extensions_r10ce",
-    "extensions_r10cf",
-    "extensions_r10cg",
-    "extensions_r10ch",
-    "extensions_r10ci",
-    "extensions_r10cj",
-    "extensions_r10ck",
-    "extensions_r10cl",
-    "extensions_r10cm",
-    "extensions_r10cn",
-    "extensions_r10co",
-    "extensions_r10cp",
-    "extensions_r10cq",
-    "extensions_r10cr",
-    "extensions_r10cs",
-    "extensions_r10ct",
-    "extensions_r10cu",
-    "extensions_r10cv",
-    "extensions_r10cw",
-    "extensions_r10cx",
-    "extensions_r10cy",
-    "extensions_r10cz",
-    "extensions_r10da",
-    "extensions_r10db",
-    "extensions_r10dc",
-    "extensions_r10dd",
-    "extensions_r10de",
-    "extensions_r10df",
-    "extensions_r10dg",
-    "extensions_r10dh",
-    "extensions_r10di",
-    "extensions_r10dj",
-    "extensions_r10dk",
-    "extensions_r10dl",
-    "extensions_r10dm",
-    "extensions_r10dn",
-    "extensions_r10do",
-    "extensions_r10dp",
-    "extensions_r10dq",
-    "tpch",
-    "tpch2",
-    "windows",
-    "setops",
-    "scalars",
-    "events",
-)
-
-
-def _assert_module_order_complete() -> None:
-    """Every extensions_* module on disk must be registered in
-    _MODULE_ORDER (minus the three adjudicated r8g re-exports).
-
-    Catches the realistic mistake the duplicate-name guard cannot: a
-    new extensions_* batch file committed without a registry entry,
-    whose queries would otherwise silently never reach the driver.
-    LIMIT: a new NON-extensions_* query module (e.g. a hypothetical
-    geo.py) is not detectable here — _KNOWN_NON_EXTENSION_MODULES is
-    derived from _MODULE_ORDER itself, so that namespace is guarded
-    only by convention: new query batches use the extensions_ prefix."""
-    import os
-
-    here = os.path.dirname(__file__)
-    on_disk = {
-        f[:-3]
-        for f in os.listdir(here)
-        if f.endswith(".py") and (f.startswith("extensions_") or f[:-3] in _KNOWN_NON_EXTENSION_MODULES)
-    }
-    # Modules registered INDIRECTLY through an aggregator shim that pins
-    # original registration order (the r9-verdict file split left
-    # extensions_r8g.py re-exporting these three):
-    reexported = {"extensions_r8g_dq", "extensions_r8g_product", "extensions_r8g_stats"}
-    missing = on_disk - set(_MODULE_ORDER) - reexported
-    if missing:
-        raise RuntimeError(
-            f"query modules on disk but not in _MODULE_ORDER (their queries "
-            f"would be silently dropped from the registry): {sorted(missing)}"
-        )
-
-
-# Non-extensions_* modules that carry a QUERIES dict (closed set; a new one
-# must be added BOTH here and to _MODULE_ORDER — the assertion keeps the
-# two honest for the open-ended extensions_* namespace where mistakes
-# actually happen).
-_KNOWN_NON_EXTENSION_MODULES: frozenset[str] = frozenset(
-    n for n in _MODULE_ORDER if not n.startswith("extensions_")
+# Query modules registered INDIRECTLY through the extensions_r8g.py shim,
+# which re-registers them in their pre-split order.
+_REEXPORTED: frozenset[str] = frozenset(
+    {"extensions_r8g_dq", "extensions_r8g_product", "extensions_r8g_stats"}
 )
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    import importlib
+    """Every query module on disk, in sorted module order, with the
+    names that carry no signed correctness row first.
 
-    _assert_module_order_complete()
+    The external correctness check snapshots only the FIRST 50 entries
+    per run, so the unsigned-first order rotates its window until every
+    family carries an external signature. Every module must define ``QUERIES``: one
+    without it raises AttributeError instead of silently dropping."""
+    import importlib
+    import pkgutil
+
     out: dict[str, QuerySpec] = {}
-    for name in _MODULE_ORDER:
-        mod = importlib.import_module(f"kcore_spark.queries.{name}")
+    for info in sorted(pkgutil.iter_modules(__path__), key=lambda m: m.name):
+        if info.name in _REEXPORTED:
+            continue
+        mod = importlib.import_module(f"{__name__}.{info.name}")
         for k, v in mod.QUERIES.items():
             if k in out:
                 raise ValueError(f"duplicate query name: {k}")
             out[k] = v
-    signed = _DRIVER_VERIFIED | _driver_signed_from_disk()
+    signed = _driver_signed_from_disk()
     unverified = {k: v for k, v in out.items() if k not in signed}
     verified = {k: v for k, v in out.items() if k in signed}
     return {**unverified, **verified}
@@ -356,13 +63,11 @@ def all_queries() -> dict[str, QuerySpec]:
 def _driver_signed_from_disk() -> frozenset[str]:
     """Names green in any CORRECTNESS_r*.json the driver has written.
 
-    This removes the per-round bookkeeping hazard (VERDICT r6 #1 and
-    r7 #1: the hand-maintained frozenset above was repeatedly one
-    round behind, wasting a rotation of the driver's 50-query window):
-    the union of the driver's own files IS the signed set, so newly
+    The union of those files IS the signed set, so newly
     signed names rotate out of the window the moment the next round
-    starts, with no edit required. The frozenset stays as belt and
-    braces for environments where the files are absent."""
+    starts, with no hand-kept list to fall behind. Without the files
+    every name counts as unsigned: only the window order changes, never
+    correctness."""
     import glob
     import json
     import os

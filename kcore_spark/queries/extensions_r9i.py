@@ -292,8 +292,10 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of Exchange(c,i) + Exchange(c), no window sort, and the
     # persisted table holds one array row per customer instead of CAP
     # item rows. Memory boundary: the aggregation buffer holds each
-    # customer's distinct item set pre-cap — same per-key state the
-    # old window sort carried, bounded by the catalog's part count.
+    # customer's distinct item set pre-cap, bounded by the catalog's
+    # part count. Unlike the old window sort, which could spill
+    # partway through a key, a collect_set buffer cannot: one key's
+    # whole set must fit in executor memory.
     # transient_persist: baskets feeds the pair explode AND n_i;
     # released by the harness after the terminal collect.
     baskets = transient_persist(

@@ -1,39 +1,55 @@
 #!/usr/bin/env python3
-"""Scaling-curve bench (VERDICT r2 #4): run the headline queries at
-sf0.01, sf0.1 and a derived 10× set ("sf1", scripts/make_scale_data.py)
-and report per-query time ratios. With fixtures only spanning 100×,
-the curve — not an absolute number — is the evidence that the plans
-hold: a query whose 0.1→1 ratio is ≈10 (or less, where fixed overhead
-dominates) scales linearly in data volume; anything super-linear is a
-plan that would not survive 100 TB.
+"""Scaling-curve sweep (VERDICT r2 #4): run query sets at sf0.01, sf0.1
+and a derived 10x set ("sf1", scripts/make_scale_data.py) and report
+per-query time ratios. With fixtures only spanning 100x, the curve —
+not an absolute number — is the evidence that the plans hold: a query
+whose 0.1->1 ratio is ~10 (or less, where fixed overhead dominates)
+scales linearly in data volume; anything above its budget is a plan
+that would not survive 100 TB.
 
-Writes SCALING.md and prints it.
+Usage: python3 scripts/bench_scaling.py [SECTION ...]
+
+SECTION names an entry of SECTIONS (default: all of them). Each section
+owns the text between its begin/end markers in SCALING.md; only that
+text is rewritten, so hand-written notes outside the markers survive.
+Exits 1 when any measured query is super-linear.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
+from dataclasses import dataclass, field
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from make_scale_data import ensure
+from bench import EXTRAS, HEADLINE  # same sets as bench.py
 
-from kcore_spark.queries import all_queries
-from kcore_spark.session import get_spark
-
-from bench import EXTRAS, HEADLINE  # same sets as the driver bench
-
-SFS = [
-    ("0.01", "/root/testdata/sf0.01"),
-    ("0.1", "/root/testdata/sf0.1"),
-]
+SCALING_MD = os.path.join(REPO, "SCALING.md")
+TIERS = ("0.01", "0.1", "1")
+DEFAULT_BUDGET = 12.0  # linear with headroom for timer noise at seconds
 
 
-FOOTNOTES = """
+@dataclass(frozen=True)
+class Section:
+    marker: str
+    title: str
+    intro: str
+    queries: tuple[str, ...]
+    # x 0.1->1 ratio above which a query is flagged, when not DEFAULT_BUDGET
+    budgets: dict[str, float] = field(default_factory=dict)
+    # never measured, even when listed in `queries` (reason in the footnotes)
+    skip_at_scale: frozenset[str] = frozenset()
+    footnotes: str = ""
+
+    def measured(self) -> list[str]:
+        return [q for q in self.queries if q not in self.skip_at_scale]
+
+
+HEADLINE_FOOTNOTES = """\
 q_fellegi_sunter is excluded from the derived-sf1 sweep for the same
 reason as q_fuzzy_blocked_match (see skip_at_scale in
 scripts/bench_scaling.py): its blocking key is nation (25 fixed
@@ -56,114 +72,208 @@ table, which the derived fixture grows 10x by construction (disjoint
 per-copy vocabulary) — real corpora grow vocabulary sub-linearly
 (Heaps' law), so the measured ratio is an upper bound."""
 
+SECTIONS: dict[str, Section] = {
+    s.marker: s
+    for s in (
+        Section(
+            marker="headline-curves",
+            title="# Scaling curve — headline + extra operators at sf0.01 / sf0.1 / sf1 (derived 10x)",
+            intro="""\
+sf1 is a deterministic 10x derivation of sf0.1 (key-shifted copies,
+per-copy disjoint document vocabulary, hash-perturbed embedding
+copies so near-dup truth stays linear — scripts/make_scale_data.py);
+correctness is still gated exclusively on the original fixtures.""",
+            queries=(*HEADLINE, *EXTRAS),
+            # Ops whose cost is quadratic in a BLOCK that grows with the
+            # data because the fixture's blocking key is degenerate (8
+            # nouns; nation for fellegi_sunter): a 10x fixture makes every
+            # block 10x -> 100x pairs, which reads as super-linear when it
+            # is the key, not the plan, that is wrong.
+            skip_at_scale=frozenset({"q_fuzzy_blocked_match", "q_fellegi_sunter"}),
+            footnotes=HEADLINE_FOOTNOTES,
+        ),
+        Section(
+            marker="r13-rewrite-curves",
+            title="## Round-13: sf1 curves for the r12 prefix-sum rewrites (VERDICT r12 #6)",
+            intro="""\
+The nine queries moved onto _dist_cumsum/_dist_rank_cumsum in r12
+(their tie tables measured row/user-count-sized, so the old
+single-partition global windows were the scale hazard), re-measured
+with the sf1 point. `x 0.1->1` at ~10 or below = the 32-way
+distributed plan holds linear where a single-task sort would knee.""",
+            queries=(
+                "q_spearman_corr",
+                "q_kruskal_wallis",
+                "q_wilcoxon_signed_rank",
+                "q_pr_auc",
+                "q_auc_roc",
+                "q_mood_median_test",
+                "q_conover_squared_ranks",
+                "q_time_to_convert",
+                "q_sample_quantile_error",
+            ),
+        ),
+        Section(
+            marker="r14-curves",
+            title="## Round-14: sf1 curves for the r13/r14 parallelization family",
+            intro="""\
+The r13 spread/persist/numpy rewrites still in force, plus the r14
+touches (gated spreads, basket collapse, shared co-order edges, tiled
+two-NN). The shared co-order edge table is rebuilt inside whichever
+graph query runs first, so that row includes the build. The sf1
+lineitem scans ~2-wide (DuckDB writes ~122k-row row groups), so the
+r14 layout probe keeps the spread there, the regime it exists for.""",
+            queries=(
+                "q01_pricing_summary",
+                "q_brand_volume",
+                "q_corr_matrix",
+                "q_breusch_pagan",
+                "q_croston",
+                "q_weighted_median",
+                "q_fleiss_kappa",
+                "q_tokenizer_apply",
+                "q_xyz_classification",
+                "q_two_nn_intrinsic_dim",
+                "q_item_item_cosine",
+                "q_kcore_subgraph",
+                "q_core_numbers",
+                "q_ktruss",
+            ),
+            # two_nn's truth is quadratic per block (10x rows = 100x pair
+            # space); its budget is the numpy walk absorbing that
+            budgets={"q_two_nn_intrinsic_dim": 110.0},
+        ),
+    )
+}
 
-def main() -> None:
-    sf1_dir = ensure(10)
-    sfs = SFS + [("1 (derived 10x)", sf1_dir)]
-    spark = get_spark("kcore_spark_scaling")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm
+METHOD = """\
+min-of-2 per point, fresh session per tier, session caches released
+between queries; `load` is the 1-minute loadavg sampled before each
+query at sf0.01/sf0.1/sf1. `x 0.1->1` is the wall-clock ratio for 10x
+the data: ~10 or below (fixed overhead amortizing) = linear; above the
+query's budget (12x unless noted) = super-linear, flagged."""
+
+
+def measure(tier_dirs: dict[str, str], names: list[str]):
+    """(times, loads): min-of-2 seconds and pre-query loadavg per
+    query per tier.
+
+    Fresh executor state per tier: a ~200-collect single session
+    accumulates cached blocks / catalog state / GC debt that lands on
+    whichever queries run LAST (the r8 sweep mis-read three late linear
+    queries as super-linear until this isolation). The first of the two
+    runs also absorbs one-time per-process fixture staging
+    (sources_q._stage), so the curve measures the operator."""
+    from kcore_spark.caching import release_session_caches, release_transients
+    from kcore_spark.queries import all_queries
+    from kcore_spark.session import get_spark
+
     qs = all_queries()
     times: dict[str, dict[str, float]] = {}
-    # Excluded from the derived-sf1 sweep: ops whose cost is quadratic
-    # in a BLOCK whose size grows with the data because the fixture's
-    # blocking key is degenerate (8 nouns). The operator is bounded by
-    # key choice in production (see operators/text.py docstring); a
-    # 10x fixture makes every block 10x → 100x pairs, which would read
-    # as super-linear when it is the key, not the plan, that is wrong.
-    skip_at_scale = {
-        "q_fuzzy_blocked_match",
-        # q_fuzzy_clusters left IN the sweep as of r9: the rewrite
-        # verifies over the DISTINCT-NAME domain (constant 64 names in
-        # the derived fixture — key-shifted copies keep p_name verbatim),
-        # so the quadratic verify no longer grows with rows and the
-        # query should now curve linear. The row-pair variant above
-        # stays skipped (its candidate set is row-quadratic by design).
-        # q_semantic_clusters un-skipped as of r10: the derived fixture
-        # now PERTURBS cross-copy embedding vectors (deterministic
-        # hash-seeded 50/50 blend, cross-copy cosine ~0.3 — see
-        # make_scale_data.py), so embedding-family near-dup TRUTH is
-        # linear in corpus size and the whole family gets real curves.
-        # same degenerate-blocking-key argument: nation (25 fixed values)
-        # blocks grow 10x under the derivation -> within-block pair TRUTH
-        # grows 100x (measured 77x wall, SCALING.md round-8 note)
-        "q_fellegi_sunter",
-    }
-    measured = HEADLINE + [n for n in EXTRAS if n in qs and n not in skip_at_scale]
-    from kcore_spark.caching import release_transients
-
-    for label, d in sfs:
-        # fresh executor state per tier: a ~200-collect single session
-        # accumulates cached blocks / catalog state / GC debt that
-        # lands on whichever queries run LAST — the r8 sweep mis-read
-        # three late-order linear queries as super-linear (18x wall
-        # inflation, reproduced nowhere in a fresh session) until this
-        # isolation; per-query release_transients drops each query's
-        # own persisted intermediates the moment it finishes
-        spark.stop()
+    loads: dict[str, dict[str, float]] = {}
+    for tier, d in tier_dirs.items():
         spark = get_spark("kcore_spark_scaling")
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm
-        # Sources that stage a one-time per-session fixture copy
-        # (sources_q._stage caches per (sf_dir, fmt)) get one untimed
-        # run so the curve measures the OPERATOR, not fixture staging:
-        # q_binaryfile_source writes one tiny file per sampled doc, and
-        # at the derived sf1 that staging read as a phantom 15.9x
-        # super-linear flag (r9; operator itself re-measured 1.7s).
-        for name in ("q_binaryfile_source", "q_avro_source"):
-            if name in qs:
+        for name in names:
+            loads.setdefault(name, {})[tier] = os.getloadavg()[0]
+            best = float("inf")
+            for _ in range(2):
+                t0 = time.time()
                 qs[name].spark(spark, d).collect()
+                best = min(best, time.time() - t0)
                 release_transients()
-        for name in measured:
-            t0 = time.time()
-            qs[name].spark(spark, d).collect()
-            times.setdefault(name, {})[label] = round(time.time() - t0, 2)
-            release_transients()
+            times.setdefault(name, {})[tier] = round(best, 2)
+            release_session_caches()
             spark.catalog.clearCache()
+        spark.stop()
+    return times, loads
+
+
+def render(section: Section, times, loads) -> tuple[str, list[str]]:
+    """The section's text between its markers, and its flagged names."""
     lines = [
-        "# Scaling curve — headline + extra operators at sf0.01 / sf0.1 / sf1 (derived 10x)",
         "",
-        "sf1 is a deterministic 10x derivation of sf0.1 (key-shifted copies,",
-        "per-copy disjoint document vocabulary, hash-perturbed embedding",
-        "copies so near-dup truth stays linear — scripts/make_scale_data.py);",
-        "correctness is still gated exclusively on the driver's fixtures.",
-        "`x 0.1->1` is the wall-clock ratio for 10x the data: ~10 or below",
-        "(fixed overhead amortizing) = linear; materially above 10 = super-",
-        "linear, flagged.",
+        section.title,
         "",
-        "| query | sf0.01 | sf0.1 | sf1 | x 0.1->1 | verdict |",
-        "|---|---|---|---|---|---|",
+        section.intro,
+        "",
+        METHOD,
+        "",
+        "| query | sf0.01 | sf0.1 | sf1 | x 0.1->1 | verdict | load |",
+        "|---|---|---|---|---|---|---|",
     ]
     flagged = []
-    for name in measured:
-        t001, t01 = times[name]["0.01"], times[name]["0.1"]
-        t1 = times[name]["1 (derived 10x)"]
+    names = section.measured()
+    for name in names:
+        t001, t01, t1 = (times[name][t] for t in TIERS)
         ratio = t1 / t01 if t01 > 0 else float("inf")
-        # linear in data with some amortized overhead; leave headroom
-        # before calling a query super-linear (timer noise at seconds)
-        verdict = "linear" if ratio <= 12.0 else "SUPER-LINEAR"
-        if verdict != "linear":
+        budget = section.budgets.get(name, DEFAULT_BUDGET)
+        if ratio > budget:
+            verdict = "SUPER-LINEAR"
             flagged.append(name)
+        elif ratio > DEFAULT_BUDGET:
+            verdict = f"within {budget:g}x budget"
+        else:
+            verdict = "linear"
+        load = "/".join(f"{loads[name][t]:.1f}" for t in TIERS)
         lines.append(
-            f"| {name} | {t001:.2f}s | {t01:.2f}s | {t1:.2f}s | {ratio:.1f}x | {verdict} |"
+            f"| {name} | {t001:.2f}s | {t01:.2f}s | {t1:.2f}s | {ratio:.1f}x | {verdict} | {load} |"
         )
-    totals = {
-        lbl: round(sum(times[n][lbl] for n in measured), 1) for lbl, _ in sfs
-    }
+    totals = {t: sum(times[n][t] for n in names) for t in TIERS}
     lines += [
         "",
-        f"Totals: sf0.01 {totals['0.01']}s · sf0.1 {totals['0.1']}s · "
-        f"sf1 {totals['1 (derived 10x)']}s "
-        f"(x{totals['1 (derived 10x)'] / totals['0.1']:.1f} for 10x data).",
+        f"Totals: sf0.01 {totals['0.01']:.1f}s · sf0.1 {totals['0.1']:.1f}s · "
+        f"sf1 {totals['1']:.1f}s (x{totals['1'] / totals['0.1']:.1f} for 10x data).",
         "",
-        f"Super-linear queries: {', '.join(flagged) if flagged else 'none'}.",
-        FOOTNOTES,
+        f"Super-linear: {', '.join(flagged) if flagged else 'none'}.",
     ]
-    out = "\n".join(lines) + "\n"
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"), "w") as f:
-        f.write(out)
-    print(out)
-    print(json.dumps({"totals": totals, "flagged": flagged}))
-    spark.stop()
+    if section.footnotes:
+        lines += ["", section.footnotes]
+    return "\n".join(lines) + "\n\n", flagged
+
+
+def replace_section(doc: str, marker: str, body: str) -> str:
+    """``doc`` with the text between ``marker``'s begin and end lines
+    replaced by ``body``; every other byte is kept."""
+    begin, end = f"<!-- {marker}:begin -->\n", f"<!-- {marker}:end -->"
+    if doc.count(begin) != 1 or doc.count(end) != 1 or doc.index(begin) > doc.index(end):
+        raise ValueError(f"SCALING.md must hold exactly one {marker} begin/end pair")
+    head, rest = doc.split(begin)
+    return head + begin + body + end + rest.split(end, 1)[1]
+
+
+def write_sections(path: str, bodies: dict[str, str]) -> None:
+    """Rewrite only the marked sections of ``path`` named in ``bodies``."""
+    with open(path) as f:
+        doc = f.read()
+    for marker, body in bodies.items():
+        doc = replace_section(doc, marker, body)
+    with open(path, "w") as f:
+        f.write(doc)
+
+
+def main(argv: list[str]) -> None:
+    unknown = [a for a in argv if a not in SECTIONS]
+    if unknown:
+        raise SystemExit(f"unknown section(s) {unknown}; choose from {list(SECTIONS)}")
+    chosen = [SECTIONS[a] for a in argv] or list(SECTIONS.values())
+
+    from make_scale_data import BASE, ensure
+
+    sf001 = os.path.join(os.path.dirname(BASE), "sf0.01")
+    tier_dirs = dict(zip(TIERS, (sf001, BASE, ensure(10))))
+    names = list(dict.fromkeys(q for s in chosen for q in s.measured()))
+    times, loads = measure(tier_dirs, names)
+
+    bodies, flagged = {}, []
+    for section in chosen:
+        bodies[section.marker], bad = render(section, times, loads)
+        flagged += bad
+        print(bodies[section.marker])
+    write_sections(SCALING_MD, bodies)
+    if flagged:
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

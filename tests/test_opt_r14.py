@@ -41,6 +41,16 @@ def test_effective_scan_width_sees_serial_fixture_layout(spark):
     assert effective_scan_width(li) == 1
 
 
+def test_release_session_caches_clears_scan_width_probes():
+    # a rewritten source path must be re-probed after a full reset
+    from kcore_spark.caching import release_session_caches
+    from kcore_spark.operators import relational
+
+    relational._SCAN_WIDTH[(4, "/stale/path")] = 1
+    release_session_caches()
+    assert not relational._SCAN_WIDTH
+
+
 def test_spread_if_serial_fires_on_fixture_layout(spark):
     li = load_table(spark, SF_DIR, "lineitem")
     out = spread_if_serial(li, "l_orderkey")

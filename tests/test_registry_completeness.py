@@ -1,48 +1,42 @@
-"""Registry single-source-of-truth guard (ADVICE r10 #2).
-
-all_queries() is driven by ONE _MODULE_ORDER list; the failure the old
-duplicated import-block + iteration-tuple design allowed — a module on
-disk whose queries silently never reach the registry — is now caught by
-_assert_module_order_complete(). Both directions pinned here. No
-SparkSession needed.
+"""Registry derived from disk: all_queries() imports every module under
+kcore_spark/queries in sorted order, so a module on disk cannot be left
+out of the registry. No SparkSession needed.
 """
 
 from __future__ import annotations
 
-import os
+import importlib
+import pkgutil
 
 import pytest
 
 from kcore_spark import queries as qpkg
 
 
-def test_module_order_matches_disk():
-    """The committed state passes: every extensions_* file on disk is
-    either registered directly or one of the three adjudicated r8g
-    re-exports."""
-    qpkg._assert_module_order_complete()
+def test_order_is_deterministic():
+    assert list(qpkg.all_queries()) == list(qpkg.all_queries())
 
 
-def test_module_order_has_no_ghost_entries():
-    """Every name in _MODULE_ORDER corresponds to a real module file —
-    a deleted/renamed file would otherwise fail only at import time
-    inside all_queries()."""
-    here = os.path.dirname(qpkg.__file__)
-    for name in qpkg._MODULE_ORDER:
-        assert os.path.isfile(os.path.join(here, f"{name}.py")), name
+def test_registry_is_union_of_every_module_on_disk():
+    names: set[str] = set()
+    for info in pkgutil.iter_modules(qpkg.__path__):
+        mod = importlib.import_module(f"{qpkg.__name__}.{info.name}")
+        names |= set(mod.QUERIES)
+    registry = qpkg.all_queries()
+    assert set(registry) == names
+    assert len(registry) == 747
 
 
-def test_unregistered_module_on_disk_fails_fast(monkeypatch):
-    """A new extensions_* batch file committed without a _MODULE_ORDER
-    entry must raise, not silently drop its queries."""
-    here = os.path.dirname(qpkg.__file__)
-    real = os.listdir(here)
-    monkeypatch.setattr(
-        os, "listdir", lambda p: real + ["extensions_r99_forgotten.py"]
-    )
-    with pytest.raises(RuntimeError, match="extensions_r99_forgotten"):
-        qpkg._assert_module_order_complete()
+def test_unsigned_names_come_first():
+    signed = qpkg._driver_signed_from_disk()
+    flags = [name in signed for name in qpkg.all_queries()]
+    assert flags == sorted(flags)
 
 
-def test_module_order_is_duplicate_free():
-    assert len(qpkg._MODULE_ORDER) == len(set(qpkg._MODULE_ORDER))
+def test_duplicate_name_raises(monkeypatch):
+    from kcore_spark.queries import dedup, tpch
+
+    clash = next(iter(dedup.QUERIES))
+    monkeypatch.setattr(tpch, "QUERIES", {**tpch.QUERIES, clash: dedup.QUERIES[clash]})
+    with pytest.raises(ValueError, match=clash):
+        qpkg.all_queries()
