@@ -9,6 +9,15 @@ Spark analytics (and the Structured Streaming source) pick them up.
 This is exactly Kafka's own shape: page-cache log + async flush,
 with Spark playing the consumer-of-record role.
 
+Storage keeps Kafka's zero-copy shape too: Produce checks a batch
+(CRC, fencing, idempotence) and stores its bytes as sent, with only
+baseOffset and partitionLeaderEpoch rewritten — both lie outside the
+CRC. A read_uncommitted Fetch answers with the stored batches that
+lie wholly inside its window, byte for byte; only a batch cut by the
+window's start or end re-encodes its records inside the window.
+Record-level readers (read, read_committed, tiering, flush) decode
+just the batches they touch, without checking the CRC again.
+
 Provenance: Produce/Fetch are declared-unimplemented in the reference
 (`/root/reference/README.md:47-48`); record encoding was delegated to its
 absent sarama fork (`/root/reference/go.mod:10,51`) — records.py is the
@@ -18,6 +27,7 @@ from-scratch public-spec codec these handlers sit on.
 from __future__ import annotations
 
 import struct
+from bisect import bisect_right
 from dataclasses import dataclass, field
 
 from kcore_spark.protocol import wire
@@ -25,6 +35,7 @@ from kcore_spark.protocol.records import (
     Record,
     batch_producer_info,
     decode_record_batch,
+    decode_verified_batch,
     encode_record_batch,
 )
 
@@ -37,17 +48,76 @@ ERR_INVALID_TXN_STATE = 48
 
 @dataclass
 class _Partition:
-    records: list[Record] = field(default_factory=list)
-    base: int = 0  # log start offset; records[i] has offset base + i
+    """One partition's log as stored magic-v2 batches. ``batches[i]``
+    holds offsets [its baseOffset, ends[i]); offsets are dense across
+    batches, so ``ends`` is sorted and bisects an offset to its batch.
+    Offsets below ``base`` are deleted: whole batches below it are
+    dropped, and one that straddles it stays for readers to clip."""
+
+    batches: list[bytes] = field(default_factory=list)
+    ends: list[int] = field(default_factory=list)
+    base: int = 0  # log start offset
     flushed_upto: int = 0  # offsets below this are in the parquet log
     # KIP-405 tiered-storage boundary: offsets < local_start live only
     # in the remote tier (still readable — remote fetch); None = no
     # tiering, the local log starts at ``base``
     local_start: int | None = None
 
+    @property
+    def hw(self) -> int:
+        return self.ends[-1] if self.ends else self.base
+
+    def overlapping(self, lo: int, hi: int):
+        """(first offset, end offset, batch) of each stored batch that
+        holds an offset in [lo, hi)."""
+        if lo >= hi:
+            return
+        for i in range(bisect_right(self.ends, lo), len(self.ends)):
+            batch = self.batches[i]
+            start = struct.unpack_from(">q", batch)[0]
+            if start >= hi:
+                return
+            yield start, self.ends[i], batch
+
+    def decode(self, lo: int, hi: int) -> list[Record]:
+        """Records at offsets [lo, hi), decoding only their batches."""
+        out: list[Record] = []
+        for start, _end, batch in self.overlapping(lo, hi):
+            out += decode_verified_batch(batch)[max(lo - start, 0) : hi - start]
+        return out
+
+
+class _Produced(list):
+    """The records of a Produce batch that passed every check, with the
+    batch's bytes: WireLog.append stores those bytes, not a new
+    encoding, when their offsets are already dense."""
+
+    def __init__(self, records: list[Record], batch: bytes) -> None:
+        super().__init__(records)
+        self.batch = batch
+
+
+def _is_dense(batch: bytes, records: list[Record]) -> bool:
+    """Whether the batch's inner offset deltas are 0..n-1 and its
+    lastOffsetDelta is n-1 — a batch that may be stored as sent."""
+    base = struct.unpack_from(">q", batch)[0]
+    last_delta = struct.unpack_from(">i", batch, 23)[0]
+    return last_delta == len(records) - 1 and all(
+        r.offset == base + i for i, r in enumerate(records)
+    )
+
+
+def _rebased(batch: bytes, base_offset: int) -> bytes:
+    """The batch with baseOffset set to its assigned offset and
+    partitionLeaderEpoch to 0. The CRC covers neither, so it holds."""
+    out = bytearray(batch)
+    struct.pack_into(">q", out, 0, base_offset)
+    struct.pack_into(">i", out, 12, 0)
+    return bytes(out)
+
 
 class WireLog:
-    """In-memory per-partition record log with dense offsets."""
+    """In-memory per-partition log of record batches with dense offsets."""
 
     def __init__(self) -> None:
         self._parts: dict[tuple[str, int], _Partition] = {}
@@ -286,16 +356,15 @@ class WireLog:
         ships aborted-txn metadata for client-side filtering — same
         visible result.)"""
         lso = self.last_stable_offset(topic, partition)
-        start = max(offset, self.log_start(topic, partition))
+        pos = max(offset, self.log_start(topic, partition))
         aborted = self._aborted.get((topic, partition), [])
-        out = []
-        for r in self.read(topic, partition, start, max(0, lso - start)):
-            if any(s <= r.offset < e for s, e in aborted):
-                continue
-            out.append(r)
-            if len(out) >= max_records:
-                break
-        return out
+        out: list[Record] = []
+        # decode a window at a time, not the whole log up to the LSO
+        while pos < lso and len(out) < max_records:
+            window = self.read(topic, partition, pos, min(max_records, lso - pos))
+            out += [r for r in window if not any(s <= r.offset < e for s, e in aborted)]
+            pos += len(window)
+        return out[:max_records]
 
     def check_sequence(
         self, topic: str, partition: int, pid: int, epoch: int, base_seq: int, n: int
@@ -361,17 +430,36 @@ class WireLog:
         if part is None:
             return 0
         return sum(
-            len(r.key or b"") + len(r.value or b"") for r in part.records
+            len(r.key or b"") + len(r.value or b"")
+            for r in part.decode(part.base, part.hw)
         )
 
     def has(self, topic: str, partition: int) -> bool:
         return (topic, partition) in self._parts
 
     def append(self, topic: str, partition: int, records: list[Record]) -> int:
+        """Append ``records`` at the high watermark with dense offsets
+        and return the first one; an empty list stores nothing and
+        returns the high watermark. Records decoded from a Produce
+        batch (``_Produced``) whose offsets are already dense store the
+        batch as sent; any others are renumbered and encoded into one
+        new stored batch."""
         part = self._parts[(topic, partition)]
-        base = part.base + len(part.records)
-        for i, r in enumerate(records):
-            part.records.append(Record(r.key, r.value, r.timestamp_ms, base + i, r.headers))
+        base = part.hw
+        if not records:
+            return base
+        if isinstance(records, _Produced) and _is_dense(records.batch, records):
+            stored = _rebased(records.batch, base)
+        else:
+            stored = encode_record_batch(
+                [
+                    Record(r.key, r.value, r.timestamp_ms, base + i, r.headers)
+                    for i, r in enumerate(records)
+                ],
+                base_offset=base,
+            )
+        part.batches.append(stored)
+        part.ends.append(base + len(records))
         # KIP-405: enforce local-retention tiering as data arrives (the
         # role of Kafka's log-retention pass); no-op unless the topic
         # opted in via remote.storage.enable
@@ -381,12 +469,28 @@ class WireLog:
 
     def read(self, topic: str, partition: int, offset: int, max_records: int) -> list[Record]:
         part = self._parts[(topic, partition)]
-        i = max(offset, part.base) - part.base
-        return part.records[i : i + max_records]
+        lo = max(offset, part.base)
+        return part.decode(lo, min(part.hw, lo + max_records))
+
+    def read_batches(self, topic: str, partition: int, offset: int, max_records: int) -> bytes:
+        """The records ``read`` returns, as the record set of a
+        read_uncommitted Fetch. Stored batches wholly inside the window
+        go out byte for byte; a batch cut by the window's start or end
+        re-encodes only its records inside it."""
+        part = self._parts[(topic, partition)]
+        lo = max(offset, part.base)
+        hi = min(part.hw, lo + max_records)
+        out = []
+        for start, end, batch in part.overlapping(lo, hi):
+            if lo <= start and end <= hi:
+                out.append(batch)
+            else:
+                recs = part.decode(max(lo, start), min(hi, end))
+                out.append(encode_record_batch(recs, base_offset=recs[0].offset))
+        return b"".join(out)
 
     def high_watermark(self, topic: str, partition: int) -> int:
-        part = self._parts[(topic, partition)]
-        return part.base + len(part.records)
+        return self._parts[(topic, partition)].hw
 
     def log_start(self, topic: str, partition: int) -> int:
         return self._parts[(topic, partition)].base
@@ -416,7 +520,7 @@ class WireLog:
         realization). Clamped to [log_start, high_watermark]. Returns
         the new local log start."""
         part = self._parts[(topic, partition)]
-        hw = part.base + len(part.records)
+        hw = part.hw
         lo = max(part.base, min(upto_offset, hw))
         if part.local_start is not None:
             lo = max(lo, part.local_start)  # tiering never retreats
@@ -439,7 +543,8 @@ class WireLog:
             return self.local_log_start(topic, partition)
         part = self._parts[(topic, partition)]
         local0 = self.local_log_start(topic, partition)
-        hw = part.base + len(part.records)
+        hw = part.hw
+        records = part.decode(part.base, hw)  # records[i] has offset base + i
         boundary = local0
         ret_bytes = cfg.get("local.retention.bytes")
         if ret_bytes is not None and int(ret_bytes) >= 0:
@@ -448,7 +553,7 @@ class WireLog:
             # walk the local suffix newest-first until the byte budget
             # is spent; everything older is tiered
             for off in range(hw - 1, local0 - 1, -1):
-                rec = part.records[off - part.base]
+                rec = records[off - part.base]
                 sz = len(rec.value or b"")
                 if budget - sz < 0:
                     break
@@ -457,10 +562,10 @@ class WireLog:
             boundary = max(boundary, keep_from)
         ret_ms = cfg.get("local.retention.ms")
         if ret_ms is not None and int(ret_ms) >= 0 and hw > part.base:
-            now_ms = max(r.timestamp_ms for r in part.records)
+            now_ms = max(r.timestamp_ms for r in records)
             cutoff = now_ms - int(ret_ms)
             off = local0
-            while off < hw and part.records[off - part.base].timestamp_ms < cutoff:
+            while off < hw and records[off - part.base].timestamp_ms < cutoff:
                 off += 1
             boundary = max(boundary, off)
         if boundary > local0:
@@ -470,17 +575,20 @@ class WireLog:
     def delete_records(self, topic: str, partition: int, before_offset: int) -> int:
         """DeleteRecords (API key 21): advance the log start offset to
         before_offset (-1 = high watermark, i.e. delete everything) and
-        free the truncated prefix. Returns the new low watermark.
+        free the batches wholly below it (a batch straddling it stays;
+        readers clip it). Returns the new low watermark.
         Raises ValueError if before_offset is beyond the high watermark
         (the wire handler maps this to OFFSET_OUT_OF_RANGE)."""
         part = self._parts[(topic, partition)]
-        hw = part.base + len(part.records)
+        hw = part.hw
         if before_offset == -1:
             before_offset = hw
         if before_offset > hw:
             raise ValueError(f"offset {before_offset} beyond high watermark {hw}")
         if before_offset > part.base:
-            del part.records[: before_offset - part.base]
+            gone = bisect_right(part.ends, before_offset)
+            del part.batches[:gone]
+            del part.ends[:gone]
             part.base = before_offset
             part.flushed_upto = max(part.flushed_upto, before_offset)
         return part.base
@@ -506,7 +614,7 @@ class WireLog:
         for (t, p), part in self._parts.items():
             if t != topic:
                 continue
-            for r in part.records[max(part.flushed_upto - part.base, 0) :]:
+            for r in part.decode(max(part.flushed_upto, part.base), part.hw):
                 rows.append(
                     {
                         "key": bytes(r.key) if r.key is not None else None,
@@ -516,7 +624,7 @@ class WireLog:
                         "timestamp_ms": r.timestamp_ms,
                     }
                 )
-            pending.append((part, part.base + len(part.records)))
+            pending.append((part, part.hw))
         if not rows:
             return 0
         from pyspark.sql import functions as F
@@ -875,7 +983,9 @@ def handle_produce(log: WireLog, payload: bytes, authorize=None, throttle_ms: in
                 part_results.append((p.index, wire.ERR_CORRUPT_MESSAGE, -1))
                 continue
             try:
-                _base, records, _ = decode_record_batch(p.batch)
+                _base, records, batch_end = decode_record_batch(p.batch)
+                if batch_end > len(p.batch):
+                    raise ValueError("record batch longer than the bytes sent")
                 pid, epoch, base_seq, n_recs, transactional = batch_producer_info(p.batch)
             except (
                 ValueError,
@@ -896,6 +1006,12 @@ def handle_produce(log: WireLog, payload: bytes, authorize=None, throttle_ms: in
                 # partition gets CORRUPT_MESSAGE, the rest of the
                 # request proceeds, as a real broker answers.
                 part_results.append((p.index, wire.ERR_CORRUPT_MESSAGE, -1))
+                continue
+            if batch_end != len(p.batch):
+                # a second batch or trailing bytes: Produce v3+ takes
+                # exactly one batch per partition, so the whole
+                # partition is refused rather than silently truncated
+                part_results.append((p.index, wire.ERR_INVALID_RECORD, -1))
                 continue
             if transactional and log.producer_epoch(pid) != epoch:
                 # zombie fencing: a newer instance of this logical
@@ -929,7 +1045,7 @@ def handle_produce(log: WireLog, payload: bytes, authorize=None, throttle_ms: in
                         (p.index, ERR_OUT_OF_ORDER_SEQUENCE, -1)
                     )
                     continue
-            base = log.append(name, p.index, records)
+            base = log.append(name, p.index, _Produced(records, p.batch))
             if pid >= 0 and base_seq >= 0:
                 log.record_sequence(name, p.index, pid, epoch, base_seq, len(records), base)
             if transactional:
@@ -1005,12 +1121,11 @@ def _read_partition(log: WireLog, name, p, isolation_level, max_records):
         # below the log start (truncated away) or past the end:
         # OFFSET_OUT_OF_RANGE, per the Kafka fetch contract
         return (p.index, wire.ERR_OFFSET_OUT_OF_RANGE, hw, None)
-    recs = (
-        log.read_committed(name, p.index, p.fetch_offset, max_records)
-        if committed_only
-        else log.read(name, p.index, p.fetch_offset, max_records)
-    )
-    batch = encode_record_batch(recs, base_offset=recs[0].offset) if recs else None
+    if committed_only:
+        recs = log.read_committed(name, p.index, p.fetch_offset, max_records)
+        batch = encode_record_batch(recs, base_offset=recs[0].offset) if recs else None
+    else:
+        batch = log.read_batches(name, p.index, p.fetch_offset, max_records) or None
     return (p.index, wire.ERR_NONE, hw, log.log_start(name, p.index), batch)
 
 

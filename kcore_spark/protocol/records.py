@@ -299,17 +299,29 @@ def decode_record_batch(buf: bytes, pos: int = 0) -> tuple[int, list[Record], in
     Raises ValueError on CRC mismatch or unsupported magic/compression."""
     base_offset = struct.unpack_from(">q", buf, pos)[0]
     batch_len = struct.unpack_from(">i", buf, pos + 8)[0]
-    p = pos + 12
-    end = p + batch_len
-    p += 4  # partitionLeaderEpoch
-    magic = buf[p]
-    p += 1
+    end = pos + 12 + batch_len
+    magic = buf[pos + 16]  # after partitionLeaderEpoch
     if magic != 2:
         raise ValueError(f"unsupported magic {magic}")
-    crc_stored = struct.unpack_from(">I", buf, p)[0]
-    p += 4
-    if crc32c(buf[p:end]) != crc_stored:
+    crc_stored = struct.unpack_from(">I", buf, pos + 17)[0]
+    if crc32c(buf[pos + 21 : end]) != crc_stored:
         raise ValueError("record batch CRC mismatch")
+    return base_offset, _decode_records(buf, pos, end), end
+
+
+def decode_verified_batch(batch: bytes) -> list[Record]:
+    """Records of one whole batch whose CRC has already been checked —
+    a batch the broker validated on Produce and stored. The same parse
+    as decode_record_batch without recomputing the CRC, as Kafka's read
+    path does."""
+    return _decode_records(batch, 0, len(batch))
+
+
+def _decode_records(buf: bytes, pos: int, end: int) -> list[Record]:
+    """The records of the batch at buf[pos:end]. Parses the header
+    from baseOffset on and skips the CRC, which the caller has checked."""
+    base_offset = struct.unpack_from(">q", buf, pos)[0]
+    p = pos + 21
     attributes = struct.unpack_from(">h", buf, p)[0]
     codec = attributes & 0x07
     if codec not in CODEC_NAMES:
@@ -321,10 +333,9 @@ def decode_record_batch(buf: bytes, pos: int = 0) -> tuple[int, list[Record], in
     p += 8 + 8 + 2 + 4  # maxTs, producerId, producerEpoch, baseSequence
     n = struct.unpack_from(">i", buf, p)[0]
     p += 4
-    batch_end = end
     if codec != 0:
         buf = decompress_block(CODEC_NAMES[codec], buf[p:end])
-        p, end = 0, len(buf)
+        p = 0
     records = []
     for _ in range(n):
         _rec_len, p = decode_varint(buf, p)
@@ -356,7 +367,7 @@ def decode_record_batch(buf: bytes, pos: int = 0) -> tuple[int, list[Record], in
         records.append(
             Record(key, value, base_ts + ts_delta, base_offset + off_delta, headers)
         )
-    return base_offset, records, batch_end
+    return records
 
 
 def decode_all_batches(buf: bytes) -> list[Record]:

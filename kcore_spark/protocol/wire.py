@@ -88,6 +88,7 @@ ERR_CORRUPT_MESSAGE = 2
 ERR_OFFSET_OUT_OF_RANGE = 1
 ERR_UNSUPPORTED_VERSION = 35
 ERR_UNKNOWN_TOPIC_ID = 100
+ERR_INVALID_RECORD = 87
 
 # (api_key, min_version, max_version) advertised by this broker.
 SUPPORTED_APIS: tuple[tuple[int, int, int], ...] = (

@@ -9,6 +9,8 @@ import struct
 
 import pytest
 
+from kcore_spark.protocol import broker as broker_mod
+from kcore_spark.protocol import records as records_mod
 from kcore_spark.protocol import wire
 from kcore_spark.protocol.broker import (
     WireLog,
@@ -183,7 +185,7 @@ def test_socket_produce_fetch_end_to_end():
 # ------------------------------------------------------ Spark flush bridge
 
 
-def test_flush_bridge_to_parquet_log(spark, tmp_path):
+def test_flush_bridge_to_parquet_log(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
 
     from kcore_spark.sources.topic_log import TopicLog
@@ -194,13 +196,23 @@ def test_flush_bridge_to_parquet_log(spark, tmp_path):
     wl.create_topic("t", 2)
     wl.append("t", 0, _sample_records())
     wl.append("t", 1, _sample_records()[:1])
+    # the stored batches were checked when appended: flush must not
+    # compute a CRC again
+    crcs = _count_calls(monkeypatch, records_mod, "crc32c")
     flushed = wl.flush_to_topic_log(spark, tlog, "t")
     assert flushed == 4
     assert wl.flush_to_topic_log(spark, tlog, "t") == 0  # idempotent
+    assert crcs == []
 
     rows = tlog.scan("t").orderBy("partition", "offset").collect()
     assert [(r["partition"], r["offset"]) for r in rows] == [(0, 0), (0, 1), (0, 2), (1, 0)]
     assert rows[0]["key"] == bytearray(b"k1") or rows[0]["key"] == b"k1"
+    want = _sample_records() + _sample_records()[:1]
+    assert [(_opt_bytes(r["key"]), _opt_bytes(r["value"])) for r in rows] == [
+        (w.key, w.value) for w in want
+    ]
+    ms = tlog.scan("t").orderBy("partition", "offset").select(F.unix_millis("timestamp")).collect()
+    assert [m[0] for m in ms] == [w.timestamp_ms for w in want]
     wm = tlog._watermarks("t")
     assert wm == {0: 3, 1: 1}
     # appends after flush continue the same offset sequence
@@ -324,3 +336,169 @@ def test_fetch_v13_unknown_topic_id():
     assert tid == ghost  # unresolvable id echoed back
     assert err == wire.ERR_UNKNOWN_TOPIC_ID
     assert batch is None
+
+
+# ------------------------------------------------ stored batches
+
+
+def _opt_bytes(b):
+    return None if b is None else bytes(b)
+
+
+def _count_calls(monkeypatch, module, name: str) -> list:
+    """Wrap module.name so each call appends its args to the returned list."""
+    calls: list = []
+    orig = getattr(module, name)
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+def _fetched(log: WireLog, topic: str, offset: int, cap: int = 1000):
+    """(error, records bytes) of a read_uncommitted Fetch v4."""
+    _, out = decode_fetch_response(
+        handle_fetch(log, _fetch_payload(topic, 0, offset), max_records_per_partition=cap)
+    )
+    (_name, [(_idx, err, _hw, batch)]) = out[0]
+    return err, batch
+
+
+def _produced(log: WireLog, topic: str, batch: bytes) -> int:
+    _, results, _ = decode_produce_response(handle_produce(log, _produce_payload(topic, 0, batch)))
+    return results[0][1][0][1]
+
+
+def _sent_batch(n: int, first: int, **kw) -> bytes:
+    """A producer's batch of n records (values first..first+n-1), with a
+    client-side baseOffset and partitionLeaderEpoch the broker replaces."""
+    recs = [Record(b"k%d" % i, b"v%d" % i, 1700000000000 + i) for i in range(first, first + n)]
+    batch = bytearray(encode_record_batch(recs, **kw))
+    struct.pack_into(">i", batch, 12, 7)  # partitionLeaderEpoch: outside the CRC
+    return bytes(batch)
+
+
+def test_whole_stored_batches_fetch_byte_for_byte(monkeypatch):
+    """A Fetch made of whole stored batches returns the produced bytes,
+    with only baseOffset and partitionLeaderEpoch rewritten, and neither
+    encodes a record nor computes a CRC."""
+    log = WireLog()
+    log.create_topic("t", 1)
+    sent = [
+        _sent_batch(3, 0),
+        _sent_batch(4, 3, producer_id=5, producer_epoch=0, base_sequence=0),
+        _sent_batch(2, 7, compression="gzip"),
+    ]
+    for b in sent:
+        assert _produced(log, "t", b) == wire.ERR_NONE
+    crcs = _count_calls(monkeypatch, records_mod, "crc32c")
+    encodes = _count_calls(monkeypatch, broker_mod, "encode_record_batch")
+    err, got = _fetched(log, "t", 0)
+    assert err == wire.ERR_NONE
+    assert crcs == [] and encodes == []
+    want = b"".join(
+        struct.pack(">q", base) + b[8:12] + b"\x00\x00\x00\x00" + b[16:]
+        for base, b in zip([0, 3, 7], sent)
+    )
+    assert got == want
+    assert [r.value for r in decode_all_batches(got)] == [b"v%d" % i for i in range(9)]
+
+
+_sizes = st.lists(st.integers(min_value=1, max_value=12), min_size=1, max_size=6)
+
+
+@settings(max_examples=60, deadline=None)
+@given(_sizes, st.data(), st.integers(min_value=1, max_value=30))
+def test_fetch_of_stored_batches_equals_read(sizes, data, cap):
+    """For any batch sizes, DeleteRecords point, fetch offset and cap,
+    the fetched record set decodes to exactly what ``read`` returns."""
+    log = WireLog()
+    log.create_topic("t", 1)
+    first = 0
+    for n in sizes:
+        assert log.append("t", 0, []) == first  # an empty append stores nothing
+        assert _produced(log, "t", _sent_batch(n, first)) == wire.ERR_NONE
+        first += n
+    hw = log.high_watermark("t", 0)
+    assert hw == first
+    start = data.draw(st.integers(min_value=0, max_value=hw))
+    log.delete_records("t", 0, start)
+    offset = data.draw(st.integers(min_value=start, max_value=hw))
+    err, got = _fetched(log, "t", offset, cap)
+    assert err == wire.ERR_NONE
+    want = log.read("t", 0, offset, cap)
+    assert len(want) == min(cap, hw - offset)
+    assert (decode_all_batches(got) if got else []) == want
+    assert [r.value for r in want] == [b"v%d" % i for i in range(offset, offset + len(want))]
+
+
+def test_fetch_re_encodes_only_the_records_of_cut_batches(monkeypatch):
+    log = WireLog()
+    log.create_topic("t", 1)
+    for first in (0, 10, 20):
+        assert _produced(log, "t", _sent_batch(10, first)) == wire.ERR_NONE
+    encodes = _count_calls(monkeypatch, broker_mod, "encode_record_batch")
+    # window [5, 25): the first batch is cut at 5, the third at 25
+    err, got = _fetched(log, "t", 5, cap=20)
+    assert err == wire.ERR_NONE
+    assert [[r.offset for r in args[0]] for args in encodes] == [
+        list(range(5, 10)),
+        list(range(20, 25)),
+    ]
+    assert [r.offset for r in decode_all_batches(got)] == list(range(5, 25))
+
+
+def test_gzip_batch_fetches_back_compressed():
+    log = WireLog()
+    log.create_topic("t", 1)
+    sent = _sent_batch(5, 0, compression="gzip")
+    assert _produced(log, "t", sent) == wire.ERR_NONE
+    _err, got = _fetched(log, "t", 0)
+    attributes = struct.unpack_from(">h", got, 21)[0]
+    assert attributes & 0x07 == 1  # gzip
+    assert decode_all_batches(got) == decode_record_batch(sent)[1]
+
+
+def test_non_dense_inner_offsets_fetch_back_dense():
+    log = WireLog()
+    log.create_topic("t", 1)
+    assert _produced(log, "t", _sent_batch(2, 0)) == wire.ERR_NONE
+    gappy = [
+        Record(b"a", b"x", 1700000000000, offset=0),
+        Record(b"b", b"y", 1700000000001, offset=2),
+        Record(b"c", b"z", 1700000000002, offset=5),
+    ]
+    assert _produced(log, "t", encode_record_batch(gappy)) == wire.ERR_NONE
+    assert log.high_watermark("t", 0) == 5
+    _err, got = _fetched(log, "t", 0)
+    recs = decode_all_batches(got)
+    assert [r.offset for r in recs] == [0, 1, 2, 3, 4]
+    assert [r.value for r in recs[2:]] == [b"x", b"y", b"z"]
+    # the stored batch's header agrees: lastOffsetDelta n-1 at base 2
+    assert [(base, n) for base, n in _batch_spans(got)] == [(0, 2), (2, 3)]
+
+
+def _batch_spans(blob: bytes) -> list[tuple[int, int]]:
+    out, pos = [], 0
+    while pos < len(blob):
+        base, blen = struct.unpack_from(">qi", blob, pos)
+        out.append((base, struct.unpack_from(">i", blob, pos + 23)[0] + 1))
+        pos += 12 + blen
+    return out
+
+
+def test_produce_refuses_a_second_batch_or_trailing_bytes():
+    """Produce v3+ carries exactly one batch per partition: two batches,
+    or one batch with trailing bytes, answer INVALID_RECORD and append
+    nothing (rather than acknowledging and keeping only the first)."""
+    log = WireLog()
+    log.create_topic("t", 1)
+    two = _sent_batch(3, 0) + _sent_batch(3, 3)
+    assert _produced(log, "t", two) == wire.ERR_INVALID_RECORD
+    assert _produced(log, "t", _sent_batch(3, 0) + b"\x00") == wire.ERR_INVALID_RECORD
+    assert log.high_watermark("t", 0) == 0
+    assert _produced(log, "t", _sent_batch(3, 0)) == wire.ERR_NONE
+    assert log.high_watermark("t", 0) == 3

@@ -61,7 +61,7 @@ from kcore_spark.protocol.consumer_group import (
     ERR_UNKNOWN_MEMBER_ID,
     ConsumerGroupCoordinator,
 )
-from kcore_spark.protocol.records import Record, decode_record_batch, encode_record_batch
+from kcore_spark.protocol.records import Record, decode_all_batches, encode_record_batch
 from kcore_spark.protocol.server import KafkaFrontend
 
 from tests.test_consumer_group_848 import _hb_req, _parse_hb
@@ -101,8 +101,7 @@ def _fetch_vals(fe, topic: str, partition: int, isolation: int) -> list[bytes]:
     assert err == wire.ERR_NONE
     if batch is None:
         return []
-    _, recs, _ = decode_record_batch(batch)
-    return [r.value for r in recs]
+    return [r.value for r in decode_all_batches(batch)]
 
 
 # ======================================================= campaign T

@@ -38,7 +38,6 @@ from kcore_spark.protocol.broker import (
     ERR_INVALID_FETCH_SESSION_EPOCH,
     Record,
     WireLog,
-    decode_record_batch,
     handle_fetch,
 )
 from kcore_spark.protocol.coordinator import (
@@ -48,6 +47,7 @@ from kcore_spark.protocol.coordinator import (
     ERR_UNKNOWN_MEMBER_ID,
     Coordinator,
 )
+from kcore_spark.protocol.records import decode_all_batches
 
 # ======================================================= campaign C
 
@@ -501,8 +501,7 @@ def _f_parse(resp):
             r.tagged_fields()
             recs = []
             if batch:
-                _, decoded, _ = decode_record_batch(batch)
-                recs = [(rec.offset, rec.value) for rec in decoded]
+                recs = [(rec.offset, rec.value) for rec in decode_all_batches(batch)]
             out[(name, idx)] = (perr, recs)
         r.tagged_fields()
     r.tagged_fields()

@@ -13,7 +13,7 @@ from kcore_spark.protocol.broker import (
     decode_fetch_response,
     decode_produce_response,
 )
-from kcore_spark.protocol.records import Record, decode_record_batch, encode_record_batch
+from kcore_spark.protocol.records import Record, decode_all_batches, encode_record_batch
 from kcore_spark.protocol.server import KafkaFrontend
 
 from tests.test_idempotent_produce import _init_pid
@@ -97,8 +97,7 @@ def _fetch_values(fe, isolation, offset=0):
     [(_, [(idx, err, hw, batch)])] = results
     if batch is None:
         return err, hw, []
-    _, recs, _ = decode_record_batch(batch)
-    return err, hw, [r.value for r in recs]
+    return err, hw, [r.value for r in decode_all_batches(batch)]
 
 
 def test_commit_reveals_abort_hides():
