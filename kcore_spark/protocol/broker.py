@@ -6,8 +6,12 @@ front-end appends produced batches to an in-memory per-partition log
 (`flush_to_topic_log`) drains accumulated records to the parquet
 topic log with their wire-assigned offsets preserved, which is where
 Spark analytics (and the Structured Streaming source) pick them up.
-This is exactly Kafka's own shape: page-cache log + async flush,
-with Spark playing the consumer-of-record role.
+The flush does not touch Spark either: it builds one pyarrow Table
+from the decoded records and `TopicLog.append_raw` writes one parquet
+segment per partition with pyarrow. Record headers stay in the wire
+log; the topic log's `headers` column is written NULL. This is
+exactly Kafka's own shape: page-cache log + async flush, with Spark
+playing the consumer-of-record role.
 
 Storage keeps Kafka's zero-copy shape too: Produce checks a batch
 (CRC, fencing, idempotence) and stores its bytes as sent, with only
@@ -601,47 +605,54 @@ class WireLog:
 
         This is the micro-batch boundary: wire appends are O(1) memory
         ops; durability happens here in batch — exactly a foreachBatch
-        sink writing the accumulated stream.
+        sink writing the accumulated stream. The records become one
+        pyarrow Table, built column by column from the decoded batches,
+        and append_raw writes one segment per partition with pyarrow:
+        no Spark job runs (``spark`` is unused; the signature is the
+        bridge's public shape). Record headers are not carried into the
+        topic log — ``headers`` is written NULL, since a map column
+        needs a rule for Kafka's duplicate header keys first.
 
         flushed_upto advances ONLY after append_raw returns: if the
-        Spark write raises (schema inference failure, disk error) the
-        records stay pending and the next flush retries them — the
-        watermark file never acknowledges data that isn't in parquet."""
-        import pandas as pd
+        write raises (disk error, a crash mid-segment) the records stay
+        pending and the next flush retries them — the watermark file
+        never acknowledges data that isn't in parquet."""
+        import pyarrow as pa
 
-        rows = []
+        keys: list = []
+        values: list = []
+        parts: list[int] = []
+        offsets: list[int] = []
+        stamps: list[int] = []
         pending: list[tuple[_Partition, int]] = []
         for (t, p), part in self._parts.items():
             if t != topic:
                 continue
-            for r in part.decode(max(part.flushed_upto, part.base), part.hw):
-                rows.append(
-                    {
-                        "key": bytes(r.key) if r.key is not None else None,
-                        "value": bytes(r.value) if r.value is not None else None,
-                        "partition": p,
-                        "offset": r.offset,
-                        "timestamp_ms": r.timestamp_ms,
-                    }
-                )
+            recs = part.decode(max(part.flushed_upto, part.base), part.hw)
+            keys += [r.key for r in recs]
+            values += [r.value for r in recs]
+            parts += [p] * len(recs)
+            offsets += [r.offset for r in recs]
+            stamps += [r.timestamp_ms for r in recs]
             pending.append((part, part.hw))
-        if not rows:
+        n = len(offsets)
+        if not n:
             return 0
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(pd.DataFrame(rows)).select(
-            "key",
-            "value",
-            F.col("partition").cast("int"),
-            F.col("offset").cast("long"),
-            F.timestamp_millis(F.col("timestamp_ms")).alias("timestamp"),
-            F.lit(0).alias("timestampType"),
-            F.lit(None).cast("map<string,binary>").alias("headers"),
+        table = pa.table(
+            {
+                "key": pa.array(keys, pa.binary()),
+                "value": pa.array(values, pa.binary()),
+                "partition": pa.array(parts, pa.int32()),
+                "offset": pa.array(offsets, pa.int64()),
+                "timestamp": pa.array(stamps, pa.timestamp("ms", tz="UTC")),
+                "timestampType": pa.repeat(pa.scalar(0, pa.int32()), n),
+                "headers": pa.nulls(n, pa.map_(pa.string(), pa.binary())),
+            }
         )
-        topic_log.append_raw(topic, df)
+        topic_log.append_raw(topic, table)
         for part, upto in pending:
             part.flushed_upto = upto
-        return len(rows)
+        return n
 
 
 # ------------------------------------------------------ Produce v3-v9

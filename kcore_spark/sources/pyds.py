@@ -27,9 +27,10 @@ gets topic reads with the SAME planning guarantees the native path has:
 The same source also STREAMS (``spark.readStream.format("kcore_topic")``):
 micro-batch offsets are the topic's own per-partition watermarks — the
 Kafka-source model — and ``readBetweenOffsets`` replays any committed
-range deterministically from the immutable segments, so checkpoint
-recovery is exact (tested: incremental availableNow runs pick up only
-new records, no replay duplicates).
+range deterministically from the immutable segments, as the same
+Arrow batches the batch reader yields, so checkpoint recovery is
+exact (tested: incremental availableNow runs pick up only new
+records, no replay duplicates).
 
 The source also WRITES (``df.write.format("kcore_topic")``), but
 two-phase: offset assignment is a log-wide transaction (dense
@@ -50,7 +51,6 @@ source; the reference has no implementation to mirror.
 
 from __future__ import annotations
 
-import datetime as _dt
 import glob
 import json
 import os
@@ -70,6 +70,24 @@ RECORD_DDL = (
 )
 
 _UNBOUNDED = 2**62
+
+
+def _record_arrow_schema():
+    """RECORD_DDL as the Arrow schema Spark checks a reader's batches
+    against (``timestamp_ntz`` is a zone-less ``timestamp[us]``)."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("key", pa.binary()),
+            ("value", pa.binary()),
+            ("partition", pa.int32()),
+            ("offset", pa.int64()),
+            ("timestamp", pa.timestamp("us")),
+            ("timestampType", pa.int32()),
+            ("headers", pa.map_(pa.string(), pa.binary())),
+        ]
+    )
 
 
 class SegmentSplit(InputPartition):
@@ -157,6 +175,7 @@ class TopicLogReader(DataSourceReader):
             st = f.metadata.row_group(rg).column(oi).statistics
             if st is None or not st.has_min_max or (st.max >= split.start and st.min < split.end):
                 groups.append(rg)
+        schema = _record_arrow_schema()
         for rg in groups:
             t = f.read_row_group(rg)
             mask = pc.and_(
@@ -168,12 +187,11 @@ class TopicLogReader(DataSourceReader):
                 continue
             # partition comes from the directory layout, not the file
             t = t.append_column(
-                "partition", pa.array([split.partition] * t.num_rows, pa.int32())
+                "partition", pa.repeat(pa.scalar(split.partition, pa.int32()), t.num_rows)
             )
-            order = [
-                "key", "value", "partition", "offset", "timestamp", "timestampType", "headers",
-            ]
-            yield from t.select(order).to_batches()
+            # segments store UTC-adjusted µs timestamps; the cast to the
+            # declared NTZ column keeps their UTC wall clock
+            yield from t.select(schema.names).cast(schema).to_batches()
 
 
 # ---------------------------------------------------- streaming reader
@@ -285,16 +303,7 @@ class TopicLogStreamReader(SimpleDataSourceStreamReader):
             )
             for split in split_reader.partitions():
                 if split.path and split.partition == int(p):
-                    for batch in split_reader.read(split) or ():
-                        for row in batch.to_pylist():
-                            # segments store UTC-adjusted µs timestamps;
-                            # the tuple path must hand the NTZ schema a
-                            # naive datetime (UTC wall clock)
-                            ts = row["timestamp"]
-                            if ts is not None and ts.tzinfo is not None:
-                                ts = ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                            row["timestamp"] = ts
-                            yield tuple(row.values())
+                    yield from split_reader.read(split)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream checkpoint; the log is immutable

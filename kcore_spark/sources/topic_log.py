@@ -40,8 +40,11 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,6 +60,34 @@ RECORD_SCHEMA = T.StructType(
         T.StructField("headers", T.MapType(T.StringType(), T.BinaryType()), True),
     ]
 )
+
+# What a segment file holds: RECORD_SCHEMA without `partition`, which
+# the directory carries. Spark writes exactly this from RECORD_SCHEMA
+# (timestamps as UTC-adjusted micros), so segments written by pyarrow
+# (append_raw) and by Spark (produce) read back alike.
+SEGMENT_SCHEMA = pa.schema(
+    [
+        pa.field("key", pa.binary()),
+        pa.field("value", pa.binary()),
+        pa.field("offset", pa.int64()),
+        pa.field("timestamp", pa.timestamp("us", tz="UTC")),
+        pa.field("timestampType", pa.int32(), nullable=False),
+        pa.field("headers", pa.map_(pa.string(), pa.binary())),
+    ]
+)
+
+
+def _write_segment(part_dir: str, table: pa.Table) -> None:
+    """Land ``table`` as one segment of a partition: write it under a
+    dot-prefixed .tmp name, then os.replace it into place. A writer
+    that dies mid-write never leaves a truncated .parquet in data/ —
+    the .tmp is invisible to readers and reclaimed as debris by
+    reclaim_uncommitted_files."""
+    os.makedirs(part_dir, exist_ok=True)
+    name = f"part-pr-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(part_dir, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(part_dir, name))
 
 
 def _epoch_ms(ts) -> int:
@@ -210,9 +241,6 @@ def reclaim_uncommitted_files(tdir: str, partitions: set[int] | None = None) -> 
     crashed attempt's segments and the retry's flip publishes BOTH
     (fuzz-found: 6 duplicate (partition, offset) pairs on a 6-row
     batch)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     data_dir = os.path.join(tdir, "data")
     if not os.path.isdir(data_dir):
         return 0
@@ -519,12 +547,10 @@ class TopicLog:
         whole read-merge-save runs under the flip lock because the
         manifest is a shared single file (same RMW hazard as the
         watermark flip)."""
-        import pyarrow.parquet as pq
-
         with flip_lock(self._topic_dir(topic)):
-            return self._refresh_manifest_unlocked(topic, partitions, pq)
+            return self._refresh_manifest_unlocked(topic, partitions)
 
-    def _refresh_manifest_unlocked(self, topic, partitions, pq) -> dict[str, list[dict]]:
+    def _refresh_manifest_unlocked(self, topic, partitions) -> dict[str, list[dict]]:
         man = self._load_manifest(topic)
         data_dir = self._topic_dir(topic) + "/data"
         if not os.path.isdir(data_dir):
@@ -736,8 +762,6 @@ class TopicLog:
         Files without timestamp stats are kept (can't prove they aged
         out)."""
         import time
-
-        import pyarrow.parquet as pq
 
         if self.archive_root is None:
             return 0
@@ -955,7 +979,7 @@ class TopicLog:
         # disjoint partition set may flip between our read and our
         # os.replace, and an unlocked RMW would silently roll its
         # partitions back. Offsets only ever advance (the sole caller
-        # is _write_and_advance), so the merge is a per-partition max —
+        # is _commit_segments), so the merge is a per-partition max —
         # our own partitions are stable because we hold their locks.
         with flip_lock(self._topic_dir(topic)):
             # preserve sink commits across unrelated flips (retention,
@@ -1184,8 +1208,8 @@ class TopicLog:
 
         data_dir = self._topic_dir(topic) + "/data"
         stage = self._topic_dir(topic) + f"/.produce.{uuid.uuid4().hex}"
-        out.write.mode("overwrite").partitionBy("partition").parquet(stage)
-        try:
+
+        def land() -> None:
             for pdir in os.listdir(stage):
                 if not pdir.startswith("partition="):
                     continue
@@ -1198,12 +1222,35 @@ class TopicLog:
                                 data_dir, pdir, f"part-pr-{uuid.uuid4().hex}.parquet"
                             ),
                         )
+
+        try:
+            out.write.mode("overwrite").partitionBy("partition").parquet(stage)
+            new_wm = {
+                r["partition"]: r["hi"] + 1
+                for r in out.groupBy("partition").agg(F.max("offset").alias("hi")).collect()
+            }
+            return self._commit_segments(
+                topic, wm, new_wm, land, sink_commit=sink_commit, allowed=allowed
+            )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        new_wm = {
-            r["partition"]: r["hi"] + 1
-            for r in out.groupBy("partition").agg(F.max("offset").alias("hi")).collect()
-        }
+
+    def _commit_segments(
+        self,
+        topic: str,
+        wm: dict[int, int],
+        new_wm: dict[int, int],
+        land: Callable[[], None],
+        sink_commit: tuple[str, int] | None = None,
+        allowed: set[int] | None = None,
+    ) -> dict[int, int]:
+        """The commit tail of produce() and append_raw(), run under the
+        commit locks of ``allowed`` (default: every partition): refuse
+        a partition outside that set BEFORE ``land()`` moves any
+        segment into data/ — a scan cannot bound a partition the
+        control file does not list, so a file landed there first would
+        be readable after the refusal — then merge the watermarks,
+        index the new segments and flip."""
         n_parts = self.topic_meta(topic).num_partitions
         ok = allowed if allowed is not None else set(range(n_parts))
         bad = sorted(p for p in new_wm if not 0 <= p < n_parts or p not in ok)
@@ -1213,6 +1260,7 @@ class TopicLog:
                 f"(this produce locked {sorted(ok)}); "
                 f"records arrived for partition(s) {bad}"
             )
+        land()
         # merge over the UNION of keys: a partition present in the data
         # but missing from the control file (e.g. created by an older
         # writer) must not lose its watermark. Values for partitions we
@@ -1244,13 +1292,20 @@ class TopicLog:
 
     @_locked
     def append_raw(
-        self, topic: str, records: DataFrame, partitions: list[int] | None = None
+        self, topic: str, table: pa.Table, partitions: list[int] | None = None
     ) -> dict[int, int]:
         """Append records that already carry (partition, offset) — the
         flush path from the wire log, which assigned offsets at accept
         time. The caller owns offset density; watermarks advance to
         max(offset)+1 per partition. ``partitions`` declares (and
-        locks) the target set, like produce()."""
+        locks) the target set, like produce().
+
+        ``table`` is a pyarrow Table with RECORD_SCHEMA's columns. No
+        Spark job runs: each partition's rows become ONE segment, cast
+        to SEGMENT_SCHEMA and landed by _write_segment; then produce()'s
+        commit tail indexes the segments and flips the watermarks."""
+        import pyarrow.compute as pc
+
         if partitions is None:
             pset = set(range(self.topic_meta(topic).num_partitions))
         else:
@@ -1258,12 +1313,24 @@ class TopicLog:
         with partition_commit_locks(self._topic_dir(topic), pset):
             self._reclaim_uncommitted(topic, pset)
             wm = self._watermarks(topic)
-            out = records.select(
-                "key", "value", "partition", "offset", "timestamp", "timestampType", "headers"
-            )
-            return self._write_and_advance(
-                topic, wm, out, allowed=pset if partitions is not None else None
-            )
+            hi = table.group_by("partition").aggregate([("offset", "max")])
+            new_wm = {
+                p: o + 1
+                for p, o in zip(
+                    hi["partition"].to_pylist(), hi["offset_max"].to_pylist()
+                )
+            }
+            segments = table.select(SEGMENT_SCHEMA.names).cast(SEGMENT_SCHEMA)
+            data_dir = self._topic_dir(topic) + "/data"
+
+            def land() -> None:
+                for p in sorted(new_wm):
+                    _write_segment(
+                        os.path.join(data_dir, f"partition={p}"),
+                        segments.filter(pc.equal(table["partition"], p)),
+                    )
+
+            return self._commit_segments(topic, wm, new_wm, land, allowed=pset)
 
     # ------------------------------------------------------ fetch / offsets
 

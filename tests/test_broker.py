@@ -5,6 +5,7 @@ bridge into the parquet topic log."""
 from __future__ import annotations
 
 import asyncio
+import datetime
 import struct
 
 import pytest
@@ -220,6 +221,122 @@ def test_flush_bridge_to_parquet_log(spark, tmp_path, monkeypatch):
     wl.flush_to_topic_log(spark, tlog, "t")
     assert tlog._watermarks("t")[0] == 4
     assert tlog.fetch("t", 0, 3, 10).select(F.col("offset")).collect()[0][0] == 3
+
+
+def test_flush_runs_no_spark_job(spark, tmp_path):
+    from kcore_spark.sources.topic_log import TopicLog
+
+    tlog = TopicLog(spark, str(tmp_path))
+    tlog.create_topic("t", 2)
+    wl = WireLog()
+    wl.create_topic("t", 2)
+    wl.append("t", 0, _sample_records())
+    wl.append("t", 1, _sample_records()[:1])
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("flush-no-jobs", "flush")
+        assert wl.flush_to_topic_log(spark, tlog, "t") == 4
+        # the tracker does see a job run under a group
+        sc.setJobGroup("flush-control", "control")
+        spark.range(3).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert list(tracker.getJobIdsForGroup("flush-no-jobs")) == []
+    assert list(tracker.getJobIdsForGroup("flush-control"))
+    assert tlog._watermarks("t") == {0: 3, 1: 1}
+
+
+def _mixed_topic(spark, root):
+    """A 2-partition topic whose offsets [0, 3) come from a wire-log
+    flush (pyarrow segments) and [3, 5) from TopicLog.produce (Spark
+    segments). Returns the log and the expected
+    (partition, offset) -> (key, value, timestamp_ms)."""
+    from pyspark.sql import functions as F
+
+    from kcore_spark.sources.topic_log import TopicLog
+
+    tlog = TopicLog(spark, root)
+    tlog.create_topic("t", 2)
+    wl = WireLog()
+    wl.create_topic("t", 2)
+    wl.append("t", 0, _sample_records())
+    wl.append("t", 1, _sample_records())
+    assert wl.flush_to_topic_log(spark, tlog, "t") == 6
+    want = {
+        (p, r.offset): (r.key, r.value, r.timestamp_ms)
+        for p in (0, 1)
+        for r in wl.read("t", p, 0, 10)
+    }
+    produced = [(b"pk%d" % i, b"pv%d" % i, 1700000005000 + i, i) for i in range(4)]
+    df = spark.createDataFrame(
+        produced, "key binary, value binary, ts_ms long, seq long"
+    ).select("key", "value", F.timestamp_millis("ts_ms").alias("timestamp"), "seq")
+    tlog.produce("t", df, partition_expr=(F.col("seq") % 2).cast("int"), order_by=["seq"])
+    for k, v, ms, i in produced:
+        want[(i % 2, 3 + i // 2)] = (k, v, ms)
+    return tlog, want
+
+
+def test_flushed_segment_schema_equals_produced_segment(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tlog, _ = _mixed_topic(spark, str(tmp_path))
+    man = tlog._load_manifest("t")
+    data_dir = tlog._topic_dir("t") + "/data"
+    flushed = [e["file"] for es in man.values() for e in es if e["min"] < 3]
+    produced = [e["file"] for es in man.values() for e in es if e["min"] >= 3]
+    assert len(flushed) == 2 and len(produced) == 2
+    assert all("/part-pr-" in f for f in flushed)
+    want = pq.read_schema(f"{data_dir}/{produced[0]}")
+    for f in flushed + produced:
+        got = pq.read_schema(f"{data_dir}/{f}")
+        assert got.equals(want), (f, got, want)
+    assert want.field("timestamp").type == pa.timestamp("us", tz="UTC")
+    assert not want.field("timestampType").nullable
+    assert "partition" not in want.names
+
+
+def test_flushed_and_produced_segments_read_alike(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from kcore_spark.sources.pyds import TopicLogDataSource
+
+    tlog, want = _mixed_topic(spark, str(tmp_path))
+    cols = ["partition", "offset", "key", "value", F.unix_millis("timestamp").alias("ms")]
+
+    def as_dict(rows):
+        return {
+            (r["partition"], r["offset"]): (_opt_bytes(r["key"]), _opt_bytes(r["value"]), r["ms"])
+            for r in rows
+        }
+
+    scanned = tlog.scan("t").select(*cols).collect()
+    assert len(scanned) == 10 and as_dict(scanned) == want
+    for p in (0, 1):
+        fetched = tlog.fetch("t", p, 0, 100).select(*cols).collect()
+        assert [r["offset"] for r in fetched] == [0, 1, 2, 3, 4]
+        assert as_dict(fetched) == {k: v for k, v in want.items() if k[0] == p}
+        tail = tlog.fetch("t", p, 2, 2).select("offset").collect()
+        assert [r["offset"] for r in tail] == [2, 3]
+    assert [tuple(r) for r in tlog.list_offsets("t").collect()] == [(0, 0, 5, 5), (1, 0, 5, 5)]
+    spark.dataSource.register(TopicLogDataSource)
+    via_ds = (
+        spark.read.format("kcore_topic")
+        .option("root", tlog.root)
+        .option("topic", "t")
+        .load()
+        .collect()
+    )
+    # the source's timestamp is NTZ: a naive datetime on the UTC wall clock
+    epoch = datetime.datetime(1970, 1, 1)
+    via_ds = [
+        {**r.asDict(), "ms": (r["timestamp"] - epoch) // datetime.timedelta(milliseconds=1)}
+        for r in via_ds
+    ]
+    assert len(via_ds) == 10 and as_dict(via_ds) == want
 
 
 # ------------------------------------------------------ handler properties

@@ -103,6 +103,57 @@ def test_flush_failure_keeps_records_pending(spark, log):
     assert wl.flush_to_topic_log(spark, log, "t") == 0
 
 
+def test_partial_flush_crash_commits_nothing_and_retries_once(spark, log, monkeypatch):
+    import pyarrow.parquet as pq
+
+    wl = WireLog()
+    wl.create_topic("t", 2)
+    log.create_topic("t", 2)
+    ts = 1700000000000
+    wl.append("t", 0, [Record(b"a", b"0", ts), Record(b"b", b"1", ts)])
+    wl.append("t", 1, [Record(b"c", b"2", ts)])
+    assert wl.flush_to_topic_log(spark, log, "t") == 3
+    wl.append("t", 0, [Record(b"d", b"3", ts)])
+    wl.append("t", 1, [Record(b"e", b"4", ts)])
+    wm_before = log._watermarks("t")
+
+    real_write = pq.write_table
+    writes: list[str] = []
+
+    def crash_on_second_segment(table, where, *a, **k):
+        writes.append(where)
+        if len(writes) == 1:
+            return real_write(table, where, *a, **k)
+        with open(where, "wb") as f:  # a torn file, then the crash
+            f.write(b"PAR1")
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(pq, "write_table", crash_on_second_segment)
+    with pytest.raises(OSError, match="disk gone"):
+        wl.flush_to_topic_log(spark, log, "t")
+    monkeypatch.undo()
+    assert len(writes) == 2  # partition 0's segment landed before the crash
+    assert [wl._parts[("t", p)].flushed_upto for p in (0, 1)] == [2, 1]  # still pending
+    assert log._watermarks("t") == wm_before
+    assert log.scan("t").count() == 3
+
+    assert wl.flush_to_topic_log(spark, log, "t") == 2
+    assert wl.flush_to_topic_log(spark, log, "t") == 0
+    rows = log.scan("t").select("partition", "offset", "value").collect()
+    assert sorted((r[0], r[1], bytes(r[2])) for r in rows) == [
+        (0, 0, b"0"), (0, 1, b"1"), (0, 2, b"3"), (1, 0, b"2"), (1, 1, b"4"),
+    ]
+    wm = log._watermarks("t")
+    assert wm == {0: 3, 1: 2}
+    data_dir = os.path.join(log._topic_dir("t"), "data")
+    for pdir in os.listdir(data_dir):
+        p = int(pdir.split("=", 1)[1])
+        for fn in os.listdir(os.path.join(data_dir, pdir)):
+            assert not fn.endswith(".tmp"), fn
+            lo = pq.read_table(os.path.join(data_dir, pdir, fn))["offset"].to_pylist()[0]
+            assert lo < wm[p], (pdir, fn)
+
+
 # ------------------------------------------------------ watermark merge
 
 
@@ -120,7 +171,7 @@ def test_watermark_union_merge_keeps_unlisted_partition(spark, log):
         F.lit(0).alias("timestampType"),
         F.lit(None).cast("map<string,binary>").alias("headers"),
     )
-    wm = log.append_raw("t", rows)
+    wm = log.append_raw("t", rows.toArrow())
     assert wm[1] == 4  # not silently dropped
     assert wm[0] == 0
 
@@ -136,8 +187,14 @@ def test_append_raw_rejects_out_of_range_partition(spark, log):
         F.lit(0).alias("timestampType"),
         F.lit(None).cast("map<string,binary>").alias("headers"),
     )
+    # one committed record first, so the topic has a data dir to scan
+    log.append_raw("t", rows.withColumn("partition", F.lit(0)).toArrow())
     with pytest.raises(ValueError, match="partition"):
-        log.append_raw("t", rows)
+        log.append_raw("t", rows.toArrow())
+    # refused before anything landed: no segment, and no readable row
+    assert not os.path.exists(os.path.join(log._topic_dir("t"), "data", "partition=5"))
+    assert log.scan("t").where(F.col("partition") == 5).count() == 0
+    assert log.scan("t").count() == 1
 
 
 # ------------------------------------------------------ compaction crash

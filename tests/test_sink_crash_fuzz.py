@@ -23,7 +23,7 @@ crash at EVERY mutation k:
    offsets, no loss, no duplicates.
 4. FETCH PARITY — after re-delivery, fetch() serves every committed
    offset from the manifest (pins the manifest-first-watermark-last
-   commit ordering in TopicLog._write_and_advance; the old
+   commit ordering in TopicLog._commit_segments; the old
    flip-then-refresh order left a window where committed rows were
    scan-visible but fetch-invisible).
 5. PIPELINE LIVENESS — the NEXT batch id commits normally after the
