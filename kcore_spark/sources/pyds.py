@@ -19,7 +19,7 @@ gets topic reads with the SAME planning guarantees the native path has:
   with the log, exactly like Kafka source splits;
 - manifest-first planning: segment files outside the requested offset
   range are pruned at plan time from footer stats recorded in
-  ``_manifest.json`` (falling back to a directory listing for
+  the topic manifest (falling back to a directory listing for
   pre-manifest logs);
 - executors stream pyarrow RecordBatches (Arrow page transfer), with
   row-group pruning on the offset column inside each file.
@@ -36,13 +36,18 @@ The source also WRITES (``df.write.format("kcore_topic")``), but
 two-phase: offset assignment is a log-wide transaction (dense
 per-partition offsets + watermark advance) that a blind per-task
 writer cannot do safely, so executors only STAGE rows (parquet files
-in a scratch dir, no offsets), and the driver-side ``commit`` runs
-the one safe sequencer — ``TopicLog.produce`` over the staged files —
-then clears the staging dir. A failed job aborts by deleting staged
-files; nothing becomes visible until the produce's atomic watermark
-flip, so the sink is exactly-once by construction. Input contract:
-``key binary, value binary, timestamp timestamp, part int, seq
-bigint`` (part = target partition, seq = within-partition order key).
+in a scratch dir, no offsets), and the driver-side ``commit`` assigns
+offsets to the staged files and lands them through the topic log's
+one commit sequence (``TopicLogControl._append_segments``, the path
+the wire-log flush takes too), then clears the staging dir. A failed
+job aborts by deleting staged files; nothing becomes visible until
+the commit's atomic watermark flip, so the sink is exactly-once by
+construction. Input contract: ``key binary, value binary, timestamp
+timestamp, part int, seq bigint`` (part = target partition, seq =
+within-partition order key).
+
+Every control file (meta, watermarks, manifest) is read and written
+through ``TopicLogControl``, which needs no Spark session.
 
 Provenance: realizes the reference's declared topic read surface
 (`/root/reference/README.md:48` Consumer API roadmap row) as a Spark
@@ -52,7 +57,6 @@ source; the reference has no implementation to mirror.
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -63,6 +67,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
+
+from kcore_spark.sources.topic_log import TopicLogControl
 
 RECORD_DDL = (
     "key binary, value binary, partition int, offset bigint, "
@@ -110,23 +116,18 @@ class TopicLogReader(DataSourceReader):
     # ---------------------------------------------- driver-side planning
 
     def partitions(self):
-        tdir = os.path.join(self.root, self.topic)
-        with open(os.path.join(tdir, "_meta.json")) as f:
-            n_parts = json.load(f)["num_partitions"]
-        man: dict[str, list[dict]] = {}
-        mpath = os.path.join(tdir, "_manifest.json")
-        if os.path.exists(mpath):
-            try:
-                with open(mpath) as f:
-                    man = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                # unreadable manifest (torn write from a foreign tool):
-                # treat as absent — plan from the directory listing;
-                # stricter than the native path's heal-and-refresh, but
-                # this reader may lack write access to heal
-                man = {}
+        ctl = TopicLogControl(self.root)
+        n_parts = ctl.topic_meta(self.topic).num_partitions
+        try:
+            man = ctl._load_manifest(self.topic)
+        except (ValueError, OSError):
+            # unreadable manifest (torn write from a foreign tool):
+            # treat as absent — plan from the directory listing;
+            # stricter than the native path's heal-and-refresh, but
+            # this reader may lack write access to heal
+            man = {}
         splits: list[SegmentSplit] = []
-        data_dir = os.path.join(tdir, "data")
+        data_dir = os.path.join(ctl._topic_dir(self.topic), "data")
         for p in range(n_parts):
             entries = man.get(f"partition={p}")
             if entries is not None:
@@ -220,7 +221,6 @@ class TopicLogStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self.root = options["root"]
         self.topic = options["topic"]
-        self._tdir = os.path.join(self.root, self.topic)
         # maxOffsetsPerTrigger analog (the Kafka source's backpressure
         # knob): cap the TOTAL offsets a micro-batch may advance,
         # spread across partitions proportionally to their backlog —
@@ -240,15 +240,9 @@ class TopicLogStreamReader(SimpleDataSourceStreamReader):
         self.max_offsets_per_trigger = int(cap) if cap is not None else None
 
     def _watermarks(self) -> dict[str, int]:
-        # "__"-prefixed keys are control entries (sink commits,
-        # snapshot history), not partition offsets — same convention
-        # as TopicLog._watermarks
-        with open(os.path.join(self._tdir, "_watermarks.json")) as f:
-            return {
-                str(k): int(v)
-                for k, v in json.load(f).items()
-                if not str(k).startswith("__")
-            }
+        # string keys: stream offsets round-trip through JSON
+        wm = TopicLogControl(self.root)._watermarks(self.topic)
+        return {str(p): int(o) for p, o in wm.items()}
 
     def initialOffset(self) -> dict:
         return {p: 0 for p in self._watermarks()}
@@ -283,10 +277,12 @@ class TopicLogStreamReader(SimpleDataSourceStreamReader):
                 end = dict(merged_start)
                 for p, a in alloc.items():
                     end[p] = min(merged_start[p] + a, self._watermarks()[p])
-        # materialized list, not a generator: the runtime caches this
-        # batch for replay (copy.copy per plan) and a generator is not
-        # copyable; a micro-batch is bounded by definition
-        return list(self.readBetweenOffsets(merged_start, end)), end
+        # an iterator over a materialized list: the runtime caches this
+        # batch for replay (copy.copy per plan), which a generator does
+        # not survive, and calls next() on it when the offsets did not
+        # advance, which a bare list does not support; a list iterator
+        # does both. A micro-batch is bounded by definition.
+        return iter(list(self.readBetweenOffsets(merged_start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         for p, hi in end.items():
@@ -330,15 +326,16 @@ class TopicLogWriter(DataSourceWriter):
     (task, partition) in the staging dir — NO offsets yet; staged
     files are invisible to every reader.
 
-    Driver half (``commit``): the single sequencer. Per partition,
-    staged files are ordered by (min_seq, path) and offsets assigned
-    densely from the current watermark; segments land in the native
-    layout with manifest entries, and the watermark flip (atomic
-    os.replace, snapshot-history preserving — the same commit point
-    TopicLog.produce uses) publishes everything at once. Runs in the
-    data-source Python runner WITHOUT a Spark session, so sequencing
-    is pure pyarrow — per-file metadata + streamed rewrites, never a
-    row-by-row driver loop.
+    Driver half (``commit``): the single sequencer. It makes only its
+    own decisions — per partition, staged files are ordered by
+    (min_seq, path) and offsets assigned densely from the base
+    watermark, one segment per staged file — and hands them to
+    ``TopicLogControl._append_segments``, the topic log's one commit
+    sequence: commit locks, reclaim, segments cast to SEGMENT_SCHEMA,
+    manifest first, and the watermark flip that publishes everything at
+    once. Runs in the data-source Python runner WITHOUT a Spark
+    session, so sequencing is pure pyarrow, and each staged file is
+    read only as its segment lands, so the driver holds one at a time.
 
     Ordering contract: exact ``seq`` order within each staged file;
     across files of one partition, file order by min_seq. For exact
@@ -414,7 +411,6 @@ class TopicLogWriter(DataSourceWriter):
 
     def commit(self, messages) -> None:
         import shutil
-        import uuid as _uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -422,151 +418,38 @@ class TopicLogWriter(DataSourceWriter):
         entries = [e for m in messages if m is not None for e in m.entries]
         if not entries:
             return
-        with open(os.path.join(self.tdir, "_meta.json")) as f:
-            n_parts = json.load(f)["num_partitions"]
-        bad = sorted({p for p, *_ in entries if not 0 <= p < n_parts})
-        if bad:
-            raise ValueError(
-                f"topic {self.topic!r} declares {n_parts} partitions; "
-                f"staged rows target partition(s) {bad}"
-            )
-        from kcore_spark.sources.topic_log import (
-            flip_lock,
-            partition_commit_locks,
-            reclaim_uncommitted_files,
-        )
-
-        # Cross-process commit locks for exactly the partitions this job
-        # staged (known precisely at commit time): the read-watermark ->
-        # assign-offsets -> segment-write sequence below must not
-        # interleave with a concurrent TopicLog.produce or another
-        # writer job ON THE SAME PARTITIONS (both would assign offsets
-        # from one base), but jobs on disjoint partitions of this topic
-        # commit in parallel — Kafka's per-partition write concurrency.
         by_part: dict[int, list[tuple]] = {}
         for e in entries:
             by_part.setdefault(e[0], []).append(e)
-        with partition_commit_locks(self.tdir, by_part.keys()):
-            # Reclaim a crashed predecessor's above-watermark segments on
-            # OUR partitions BEFORE assigning offsets from the watermark
-            # — exactly what TopicLog.produce does. Without it, a commit
-            # that crashed between the segment writes and the flip,
-            # retried by the user, re-lands the same offset range next
-            # to the crashed attempt's files and the retry's flip
-            # publishes BOTH (duplicate offsets; fuzz-found r11).
-            reclaim_uncommitted_files(self.tdir, set(by_part.keys()))
-            wm_path = os.path.join(self.tdir, "_watermarks.json")
-            try:
-                with open(wm_path) as f:
-                    raw = json.load(f)
-            except FileNotFoundError:
-                raw = {}
-            wm = {k: int(v) for k, v in raw.items() if not str(k).startswith("__")}
-            data_dir = os.path.join(self.tdir, "data")
-            new_wm: dict[str, int] = {}
-            new_man_entries: dict[str, list[dict]] = {}
-            for p, ents in sorted(by_part.items()):
-                # our partitions' bases are stable while we hold their
-                # locks; other partitions' values are never used
-                base = int(wm.get(str(p), 0))
-                pdir = os.path.join(data_dir, f"partition={p}")
-                os.makedirs(pdir, exist_ok=True)
-                for _, path, n, _min_seq in sorted(ents, key=lambda e: (e[3], e[1])):
-                    t = pq.read_table(path)
-                    offs = pa.array(range(base, base + n), pa.int64())
-                    out = pa.table(
-                        {
-                            "key": t["key"],
-                            "value": t["value"],
-                            "offset": offs,
-                            "timestamp": t["timestamp"],
-                            "timestampType": pa.array([0] * n, pa.int32()),
-                            "headers": pa.nulls(
-                                n, pa.map_(pa.string(), pa.binary())
-                            ),
-                        }
-                    )
-                    rel = f"partition={p}/part-w-{_uuid.uuid4().hex}.parquet"
-                    seg = os.path.join(data_dir, rel)
-                    # stage-then-atomic-rename: a commit that dies mid
-                    # pq.write_table must never leave a truncated
-                    # .parquet in data/ — readers scan the directory,
-                    # and the retry's reclaim pass would otherwise trip
-                    # on the unreadable footer (ADVICE r11). The
-                    # dot-prefixed .tmp name is invisible to Spark's
-                    # directory scan and reclaimed as debris by
-                    # reclaim_uncommitted_files if we crash before the
-                    # os.replace.
-                    tmp_seg = os.path.join(
-                        os.path.dirname(seg), f".{os.path.basename(seg)}.tmp"
-                    )
-                    pq.write_table(out, tmp_seg)
-                    os.replace(tmp_seg, seg)
-                    ts = t["timestamp"]
-                    entry = {
-                        "file": rel,
-                        "min": base,
-                        "max": base + n - 1,
-                        "bytes": os.path.getsize(seg),
-                    }
-                    if n and ts.null_count < n:
-                        import pyarrow.compute as pc
 
-                        # naive → UTC, matching TopicLog._epoch_ms: the ts
-                        # index must mean the same instant to every reader
-                        # regardless of the committing host's timezone
-                        from kcore_spark.sources.topic_log import _epoch_ms
+        def build(wm):
+            def segments():
+                for p, ents in sorted(by_part.items()):
+                    base = wm.get(p, 0)
+                    for _, path, n, _min_seq in sorted(ents, key=lambda e: (e[3], e[1])):
+                        t = pq.read_table(path)
+                        yield p, pa.table(
+                            {
+                                "key": t["key"],
+                                "value": t["value"],
+                                "offset": pa.array(range(base, base + n), pa.int64()),
+                                "timestamp": t["timestamp"],
+                                "timestampType": pa.array([0] * n, pa.int32()),
+                                "headers": pa.nulls(n, pa.map_(pa.string(), pa.binary())),
+                            }
+                        )
+                        base += n
 
-                        lo = pc.min(ts).as_py()
-                        hi = pc.max(ts).as_py()
-                        if lo is not None:
-                            entry["ts_min"] = _epoch_ms(lo)
-                            entry["ts_max"] = _epoch_ms(hi)
-                    new_man_entries.setdefault(f"partition={p}", []).append(entry)
-                    base += n
-                new_wm[str(p)] = base
-            # Control-file flips under the SHORT flip lock: the manifest
-            # and watermark files are shared across partitions, so the
-            # read-merge-replace must not interleave with a concurrent
-            # disjoint-partition commit (its flip would be lost).
-            # Manifest first, watermarks last: the watermark flip is the
-            # commit point (readers never trust offsets past the
-            # watermark). Both files are RE-read inside the lock — the
-            # copies above predate any concurrent flips.
-            man_path = os.path.join(self.tdir, "_manifest.json")
-            with flip_lock(self.tdir):
-                try:
-                    with open(man_path) as f:
-                        man = json.load(f)
-                except (FileNotFoundError, json.JSONDecodeError):
-                    man = {}
-                for pdir, es in new_man_entries.items():
-                    man.setdefault(pdir, []).extend(es)
-                tmp = man_path + f".tmp.{_uuid.uuid4().hex}"
-                with open(tmp, "w") as f:
-                    json.dump(man, f)
-                os.replace(tmp, man_path)
-                try:
-                    with open(wm_path) as f:
-                        raw = json.load(f)
-                except FileNotFoundError:
-                    raw = {}
-                payload = {k: v for k, v in raw.items() if str(k).startswith("__")}
-                merged_wm = {
-                    k: int(v) for k, v in raw.items() if not str(k).startswith("__")
-                }
-                for k, v in new_wm.items():
-                    merged_wm[k] = max(v, merged_wm.get(k, 0))
-                payload.update(merged_wm)
-                history = payload.get("__history", [])
-                next_v = (history[-1]["v"] + 1) if history else 1
-                payload["__history"] = (
-                    history + [{"v": next_v, "wm": dict(merged_wm)}]
-                )[-64:]
-                tmp = wm_path + f".tmp.{_uuid.uuid4().hex}"
-                with open(tmp, "w") as f:
-                    json.dump(payload, f)
-                os.replace(tmp, wm_path)
+            new_wm = {
+                p: wm.get(p, 0) + sum(n for _, _, n, _ in ents)
+                for p, ents in by_part.items()
+            }
+            return new_wm, segments()
+
+        # locks exactly the partitions this job staged (known at commit
+        # time), so jobs on disjoint partitions of a topic commit in
+        # parallel — Kafka's per-partition write concurrency
+        TopicLogControl(self.root)._append_segments(self.topic, by_part, build)
         shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:

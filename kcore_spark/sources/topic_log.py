@@ -20,6 +20,11 @@ those semantics Spark-first (SURVEY §1.2, §2.2):
   rescans the log to find the tail.
 - Consumer-group offsets are an idempotent key-value state table
   (`__consumer_offsets`-analog), last-writer-wins by commit index.
+- The control plane needs no Spark session (TopicLogControl): every
+  pyarrow writer — the wire-log flush and the kcore_topic DataSource
+  writer — commits through its one locked sequence, and TopicLog
+  extends it with the session-backed scan, fetch, produce() and
+  maintenance.
 
 Concurrency contract (r7 — Kafka's own unit of write concurrency):
 one producer per PARTITION at a time, enforced by per-partition
@@ -40,7 +45,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -64,7 +69,7 @@ RECORD_SCHEMA = T.StructType(
 # What a segment file holds: RECORD_SCHEMA without `partition`, which
 # the directory carries. Spark writes exactly this from RECORD_SCHEMA
 # (timestamps as UTC-adjusted micros), so segments written by pyarrow
-# (append_raw) and by Spark (produce) read back alike.
+# (_write_segment) and by Spark (produce) read back alike.
 SEGMENT_SCHEMA = pa.schema(
     [
         pa.field("key", pa.binary()),
@@ -78,15 +83,16 @@ SEGMENT_SCHEMA = pa.schema(
 
 
 def _write_segment(part_dir: str, table: pa.Table) -> None:
-    """Land ``table`` as one segment of a partition: write it under a
-    dot-prefixed .tmp name, then os.replace it into place. A writer
-    that dies mid-write never leaves a truncated .parquet in data/ —
-    the .tmp is invisible to readers and reclaimed as debris by
-    reclaim_uncommitted_files."""
+    """Land ``table`` as one segment of a partition, cast to
+    SEGMENT_SCHEMA (a naive timestamp keeps its wall clock as UTC):
+    write it under a dot-prefixed .tmp name, then os.replace it into
+    place. A writer that dies mid-write never leaves a truncated
+    .parquet in data/ — the .tmp is invisible to readers and reclaimed
+    as debris by reclaim_uncommitted_files."""
     os.makedirs(part_dir, exist_ok=True)
     name = f"part-pr-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(part_dir, f".{name}.tmp")
-    pq.write_table(table, tmp)
+    pq.write_table(table.select(SEGMENT_SCHEMA.names).cast(SEGMENT_SCHEMA), tmp)
     os.replace(tmp, os.path.join(part_dir, name))
 
 
@@ -228,17 +234,16 @@ def flip_lock(topic_dir: str):
 
 
 def reclaim_uncommitted_files(tdir: str, partitions: set[int] | None = None) -> int:
-    """Spark-free core of TopicLog._reclaim_uncommitted (see that
-    method's docstring for the full contract): delete segment files
-    whose offsets lie entirely at/after the committed watermark —
+    """Spark-free core of TopicLogControl._reclaim_uncommitted (see
+    that method's docstring for the full contract): delete segment
+    files whose offsets lie entirely at/after the committed watermark —
     debris from a write that crashed between the parquet append and the
-    watermark flip. Module-level and pure-pyarrow so the kcore_topic
-    DataSource writer's driver-side commit (which runs in the
-    data-source Python runner WITHOUT a Spark session) can run the same
-    reclaim under the same partition commit locks before it assigns
-    offsets from the watermark — without it, a crashed pyds commit
-    retried by the user re-lands the same offset range next to the
-    crashed attempt's segments and the retry's flip publishes BOTH
+    watermark flip. Pure pyarrow, so every commit runs it under the
+    partition commit locks before it assigns offsets from the watermark,
+    the kcore_topic writer's commit included (it runs in the data-source
+    Python runner, WITHOUT a Spark session). Without it, a crashed
+    commit retried by the user re-lands the same offset range next to
+    the crashed attempt's segments and the retry's flip publishes BOTH
     (fuzz-found: 6 duplicate (partition, offset) pairs on a 6-row
     batch)."""
     data_dir = os.path.join(tdir, "data")
@@ -255,14 +260,14 @@ def reclaim_uncommitted_files(tdir: str, partitions: set[int] | None = None) -> 
             man = json.load(f)
     except (FileNotFoundError, json.JSONDecodeError):
         man = {}
-    # Manifest membership is NOT proof of committed: the pyds writer
-    # flips manifest-first-watermark-last, and _refresh_manifest racing
-    # an uncommitted produce indexes its files too (fetch() tolerates
-    # that via its watermark clamp). So the manifest's min offset is
-    # used as cheap EVIDENCE (no footer read) on the same lo >= hi test
-    # as unindexed files — the old indexed⇒skip shortcut let a crashed
-    # pyds commit's segments survive reclaim and duplicate offsets on
-    # retry (fuzz-found r11).
+    # Manifest membership is NOT proof of committed: every commit
+    # indexes its segments BEFORE its watermark flip (_commit_segments),
+    # so a commit that crashed between the two left indexed debris
+    # (fetch() tolerates that via its watermark clamp). So the
+    # manifest's min offset is used as cheap EVIDENCE (no footer read)
+    # on the same lo >= hi test as unindexed files — the old
+    # indexed⇒skip shortcut let a crashed commit's segments survive
+    # reclaim and duplicate offsets on retry (fuzz-found r11).
     man_min = {
         e["file"]: int(e["min"]) for entries in man.values() for e in entries
     }
@@ -349,23 +354,31 @@ class TopicMeta:
     num_partitions: int
 
 
-class TopicLog:
-    def __init__(self, spark: SparkSession, root: str, archive_root: str | None = None):
-        from kcore_spark.catalog import ensure_engine_confs
+def _locked(fn):
+    """Run the method under the instance's thread mutate lock."""
+    import functools
 
-        ensure_engine_confs(spark)  # MICROS ts output → footer stats
-        self.spark = spark
+    @functools.wraps(fn)
+    def inner(self, *a, **k):
+        with self._mutate_lock:
+            return fn(self, *a, **k)
+
+    return inner
+
+
+class TopicLogControl:
+    """The topic log's Spark-free control plane: topic DDL and meta,
+    the watermark read and flip, the manifest, and the one locked
+    commit sequence every pyarrow writer lands its segments through
+    (append_raw, and the kcore_topic DataSource writer's commit). It
+    needs no Spark session — the DataSource's driver-side commit and
+    planning run in the data-source Python runner, which has none — so
+    this module stays the only one that knows the control-file layout.
+    TopicLog extends it with the session-backed parts: scan, fetch,
+    produce() and maintenance."""
+
+    def __init__(self, root: str):
         self.root = root
-        # Tiered storage: when set, segments aging out of the hot log
-        # are MOVED under archive_root (mirroring the topic/partition
-        # layout) instead of deleted — the model of Kafka tiered
-        # storage's archive-then-delete (KIP-405). The archived
-        # segments stay plain parquet, so a batch backfill can
-        # spark.read them directly. None (default) deletes, matching
-        # classic broker retention.
-        self.archive_root = archive_root
-        self._last_commit_seq = 0
-        self._commit_seq_seeded = False
         # Serializes MUTATING operations (produce / truncate / compact /
         # retention / topic DDL) against each other — required once the
         # background cleaner (protocol/server.py::_cleaner_loop) runs
@@ -379,55 +392,8 @@ class TopicLog:
         import threading
 
         self._mutate_lock = threading.RLock()
-        os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------ control plane
-
-    def _locked(fn):  # noqa: N805 - descriptor-style decorator
-        import functools
-
-        @functools.wraps(fn)
-        def inner(self, *a, **k):
-            with self._mutate_lock:
-                return fn(self, *a, **k)
-
-        return inner
-
-    def _commit_locked(fn):  # noqa: N805 - descriptor-style decorator
-        """Hold the cross-process commit locks for ALL partitions of
-        the topic (first positional arg) for the duration of a
-        whole-topic mutator — compaction, OPTIMIZE, key erasure
-        rewrite every partition, so they exclude every producer.
-        Stacked UNDER @_locked (thread lock first, then flocks). Must
-        not decorate a function reachable from another @_commit_locked
-        function for the same topic (flocks are not reentrant)."""
-        import functools
-
-        @functools.wraps(fn)
-        def inner(self, topic, *a, **k):
-            n = self.topic_meta(topic).num_partitions
-            with partition_commit_locks(self._topic_dir(topic), range(n)):
-                return fn(self, topic, *a, **k)
-
-        return inner
-
-    def _maint_locked(fn):  # noqa: N805 - descriptor-style decorator
-        """Hold the topic's cross-process maintenance lock for the whole
-        body (see maintenance_lock): the swap markers these operations
-        create mid-flight are indistinguishable from crash debris, so
-        the read path's healer must be excluded until the op finishes.
-        Stacked UNDER @_commit_locked (lock order: partitions, then
-        maintenance). The decorated body may call _recover_compaction
-        directly but must never re-enter another @_maint_locked method
-        for the same topic (flocks are not reentrant)."""
-        import functools
-
-        @functools.wraps(fn)
-        def inner(self, topic, *a, **k):
-            with maintenance_lock(self._topic_dir(topic)):
-                return fn(self, topic, *a, **k)
-
-        return inner
 
     def _topic_dir(self, topic: str) -> str:
         return os.path.join(self.root, topic)
@@ -458,61 +424,10 @@ class TopicLog:
             json.dump({str(p): 0 for p in range(num_partitions)}, f)
         return TopicMeta(name, num_partitions)
 
-    def topic_config(self, name: str) -> dict[str, str]:
-        with open(self._meta_path(name)) as f:
-            return json.load(f).get("configs", {})
-
-    def alter_topic_config(self, name: str, updates: dict[str, str | None]) -> dict[str, str]:
-        """AlterConfigs (API key 33) analog: merge updates (None deletes
-        a key) atomically into the topic's config."""
-        with open(self._meta_path(name)) as f:
-            m = json.load(f)
-        cfg = m.get("configs", {})
-        for k, v in updates.items():
-            if v is None:
-                cfg.pop(k, None)
-            else:
-                cfg[k] = str(v)
-        m["configs"] = cfg
-        tmp = self._meta_path(name) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._meta_path(name))
-        return cfg
-
-    def apply_retention_from_config(self, name: str, now_ms: int | None = None) -> dict[int, int]:
-        """Run retention using the topic's own retention.ms /
-        retention.bytes configs (the broker's periodic cleaner pass,
-        config-driven exactly as in Kafka). No-op without configs."""
-        cfg = self.topic_config(name)
-        ms = cfg.get("retention.ms")
-        by = cfg.get("retention.bytes")
-        if ms is None and by is None:
-            return self._log_starts(name)
-        return self.apply_retention(
-            name,
-            retention_ms=int(ms) if ms is not None else None,
-            retention_bytes=int(by) if by is not None else None,
-            now_ms=now_ms,
-        )
-
-    @_locked
-    def delete_topic(self, name: str) -> None:
-        """DeleteTopics (API key 20) analog."""
-        import shutil
-
-        shutil.rmtree(self._topic_dir(name))
-
     def topic_meta(self, name: str) -> TopicMeta:
         with open(self._meta_path(name)) as f:
             m = json.load(f)
         return TopicMeta(m["name"], m["num_partitions"])
-
-    def list_topics(self) -> list[str]:
-        """Metadata (API key 3) analog."""
-        return sorted(
-            d for d in os.listdir(self.root) if os.path.exists(self._meta_path(d))
-        )
 
     def _manifest_path(self, topic: str) -> str:
         return os.path.join(self._topic_dir(topic), "_manifest.json")
@@ -663,6 +578,313 @@ class TopicLog:
                 del man[pdir]
         self._save_manifest(topic, man)
         return man
+
+    def _watermarks(self, topic: str) -> dict[int, int]:
+        with open(self._wm_path(topic)) as f:
+            return {
+                int(k): v for k, v in json.load(f).items() if not k.startswith("__")
+            }
+
+    # snapshot-history bound: the Iceberg-snapshot-expiration analog.
+    # Each produce appends one {version, offsets} entry; only the most
+    # recent MAX_SNAPSHOTS stay readable via scan_at. Bounds the control
+    # file at O(MAX_SNAPSHOTS × partitions) regardless of topic age.
+    MAX_SNAPSHOTS = 64
+
+    def _set_watermarks(
+        self, topic: str, wm: dict[int, int], sink_commit: tuple[str, int] | None = None
+    ) -> None:
+        # The whole read-merge-replace runs under the short flip lock:
+        # with per-PARTITION commit locks, a concurrent producer on a
+        # disjoint partition set may flip between our read and our
+        # os.replace, and an unlocked RMW would silently roll its
+        # partitions back. Offsets only ever advance (the sole caller
+        # is _commit_segments), so the merge is a per-partition max —
+        # our own partitions are stable because we hold their locks.
+        with flip_lock(self._topic_dir(topic)):
+            # preserve sink commits across unrelated flips (retention,
+            # plain produce) — they live in the SAME file so that a
+            # produce carrying a sink_commit advances offsets and
+            # records the batch id in ONE atomic os.replace (the
+            # exactly-once commit point for streaming sinks)
+            try:
+                with open(self._wm_path(topic)) as f:
+                    prev = json.load(f)
+            except FileNotFoundError:
+                prev = {}
+            sinks = prev.get("__sinks", {})
+            if sink_commit is not None:
+                sinks[sink_commit[0]] = sink_commit[1]
+            prev_wm = {k: v for k, v in prev.items() if not k.startswith("__")}
+            new_wm = {
+                str(k): max(int(v), int(prev_wm.get(str(k), 0)))
+                for k, v in wm.items()
+            }
+            merged_wm = {**prev_wm, **new_wm}
+            # snapshot history: every flip that ADVANCES offsets appends
+            # a version (the time-travel read points of scan_at).
+            # Written in the same atomic os.replace as the offsets, so
+            # a version is readable exactly iff its produce committed.
+            history: list = prev.get("__history", [])
+            if merged_wm != prev_wm:
+                next_v = (history[-1]["v"] + 1) if history else 1
+                history = (history + [{"v": next_v, "wm": merged_wm}])[
+                    -self.MAX_SNAPSHOTS:
+                ]
+            payload: dict = dict(merged_wm)
+            if sinks:
+                payload["__sinks"] = sinks
+            if history:
+                payload["__history"] = history
+            tmp = self._wm_path(topic) + f".tmp.{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                json.dump(payload, f)
+            os.replace(tmp, self._wm_path(topic))
+
+    def _reclaim_uncommitted(self, topic: str, partitions: set[int] | None = None) -> int:
+        """Delete segment files whose offsets lie entirely at/after the
+        committed watermark — debris from a produce that crashed
+        between the parquet append and the watermark flip. Runs under
+        the commit locks at the start of every commit, BEFORE new
+        offsets are assigned from the watermark, so a reassignment can
+        never coexist on disk with its crashed predecessor (duplicate
+        offsets below the next flip). Scoped to ``partitions`` when the
+        caller holds only those commit locks — an unlocked partition's
+        above-watermark files may be another producer's IN-FLIGHT
+        write, not debris (that partition's own next produce reclaims
+        its real debris). O(unindexed files): committed files are in
+        the manifest and skipped without a footer read; files missing
+        offset stats are left alone (can't prove them uncommitted —
+        the read-side watermark bound still hides any uncommitted rows
+        they hold)."""
+        return reclaim_uncommitted_files(self._topic_dir(topic), partitions)
+
+    def _commit_segments(
+        self,
+        topic: str,
+        wm: dict[int, int],
+        new_wm: dict[int, int],
+        land: Callable[[], None],
+        sink_commit: tuple[str, int] | None = None,
+        allowed: set[int] | None = None,
+    ) -> dict[int, int]:
+        """The commit tail of produce() and _append_segments(), run under the
+        commit locks of ``allowed`` (default: every partition): refuse
+        a partition outside that set BEFORE ``land()`` moves any
+        segment into data/ — a scan cannot bound a partition the
+        control file does not list, so a file landed there first would
+        be readable after the refusal — then merge the watermarks,
+        index the new segments and flip."""
+        n_parts = self.topic_meta(topic).num_partitions
+        ok = allowed if allowed is not None else set(range(n_parts))
+        bad = sorted(p for p in new_wm if not 0 <= p < n_parts or p not in ok)
+        if bad:
+            raise ValueError(
+                f"topic {topic!r} declares {n_parts} partitions "
+                f"(this commit locked {sorted(ok)}); "
+                f"records arrived for partition(s) {bad}"
+            )
+        land()
+        # merge over the UNION of keys: a partition present in the data
+        # but missing from the control file (e.g. created by an older
+        # writer) must not lose its watermark. Values for partitions we
+        # don't hold locks for may be stale — _set_watermarks max-merges
+        # against the fresh file under the flip lock, so stale entries
+        # can never roll a concurrent producer's flip back.
+        merged = {
+            p: max(wm.get(p, 0), new_wm.get(p, 0)) for p in set(wm) | set(new_wm)
+        }
+        # Manifest FIRST, watermark flip LAST: the flip is the commit point,
+        # and a crash between the two steps must leave fetch() able to
+        # plan every committed offset from the manifest. The old
+        # flip-then-refresh order had a window where committed rows
+        # were scan-visible but fetch-invisible (manifest missing the
+        # new segments, and the stale-manifest heal only fires on
+        # MISSING files, not missing entries). Indexing uncommitted
+        # files is safe the other way around: readers never trust
+        # offsets past the watermark, and a crash before the flip is
+        # reclaimed by the evidence-based reclaim (manifest min-offset
+        # >= watermark ⇒ debris; the r11 bug-#5 machinery, pinned by
+        # tests/test_crash_fuzz.py). Scoped to the locked partitions:
+        # an unlocked partition may hold another producer's in-flight
+        # files, which must stay OUT of the manifest until their own
+        # flip so their crash path stays reclaimable.
+        self._refresh_manifest(topic, partitions=ok)
+        self._set_watermarks(topic, merged, sink_commit=sink_commit)
+        return merged
+
+    def _append_segments(
+        self,
+        topic: str,
+        partitions: Iterable[int] | None,
+        build: Callable[[dict[int, int]], tuple[dict[int, int], Iterable]],
+    ) -> dict[int, int]:
+        """The locked commit sequence of append_raw and the kcore_topic
+        writer. Reads the topic's meta FIRST, so a write to a topic that
+        was never created fails before the commit locks create its dir.
+        Then, under the commit locks of ``partitions`` (default: every
+        partition): reclaim a crashed predecessor's leftovers, read the
+        watermarks and hand them to ``build(wm)``, which returns the new
+        watermarks and an iterable of (partition, pyarrow Table)
+        segments. _commit_segments refuses an out-of-range partition
+        before anything lands, lands each table with _write_segment,
+        refreshes the locked partitions' manifest and flips the
+        watermarks. The iterable is consumed one table at a time, so a
+        builder that reads one staged file per table holds only one in
+        memory."""
+        n_parts = self.topic_meta(topic).num_partitions
+        pset = (
+            set(range(n_parts)) if partitions is None else {int(p) for p in partitions}
+        )
+        with partition_commit_locks(self._topic_dir(topic), pset):
+            self._reclaim_uncommitted(topic, pset)
+            wm = self._watermarks(topic)
+            new_wm, segments = build(wm)
+            data_dir = os.path.join(self._topic_dir(topic), "data")
+
+            def land() -> None:
+                for p, table in segments:
+                    _write_segment(os.path.join(data_dir, f"partition={p}"), table)
+
+            return self._commit_segments(topic, wm, new_wm, land, allowed=pset)
+
+    @_locked
+    def append_raw(
+        self, topic: str, table: pa.Table, partitions: list[int] | None = None
+    ) -> dict[int, int]:
+        """Append records that already carry (partition, offset) — the
+        flush path from the wire log, which assigned offsets at accept
+        time. The caller owns offset density; watermarks advance to
+        max(offset)+1 per partition. ``partitions`` declares (and
+        locks) the target set, like produce().
+
+        ``table`` is a pyarrow Table with RECORD_SCHEMA's columns. No
+        Spark job runs: each partition's rows become ONE segment,
+        committed by _append_segments."""
+        import pyarrow.compute as pc
+
+        def build(wm):
+            hi = table.group_by("partition").aggregate([("offset", "max")])
+            new_wm = {
+                p: o + 1
+                for p, o in zip(
+                    hi["partition"].to_pylist(), hi["offset_max"].to_pylist()
+                )
+            }
+            segments = (
+                (p, table.filter(pc.equal(table["partition"], p)))
+                for p in sorted(new_wm)
+            )
+            return new_wm, segments
+
+        return self._append_segments(topic, partitions, build)
+
+
+class TopicLog(TopicLogControl):
+    def __init__(self, spark: SparkSession, root: str, archive_root: str | None = None):
+        from kcore_spark.catalog import ensure_engine_confs
+
+        ensure_engine_confs(spark)  # MICROS ts output → footer stats
+        super().__init__(root)
+        self.spark = spark
+        # Tiered storage: when set, segments aging out of the hot log
+        # are MOVED under archive_root (mirroring the topic/partition
+        # layout) instead of deleted — the model of Kafka tiered
+        # storage's archive-then-delete (KIP-405). The archived
+        # segments stay plain parquet, so a batch backfill can
+        # spark.read them directly. None (default) deletes, matching
+        # classic broker retention.
+        self.archive_root = archive_root
+        self._last_commit_seq = 0
+        self._commit_seq_seeded = False
+        os.makedirs(root, exist_ok=True)
+
+    def _commit_locked(fn):  # noqa: N805 - descriptor-style decorator
+        """Hold the cross-process commit locks for ALL partitions of
+        the topic (first positional arg) for the duration of a
+        whole-topic mutator — compaction, OPTIMIZE, key erasure
+        rewrite every partition, so they exclude every producer.
+        Stacked UNDER @_locked (thread lock first, then flocks). Must
+        not decorate a function reachable from another @_commit_locked
+        function for the same topic (flocks are not reentrant)."""
+        import functools
+
+        @functools.wraps(fn)
+        def inner(self, topic, *a, **k):
+            n = self.topic_meta(topic).num_partitions
+            with partition_commit_locks(self._topic_dir(topic), range(n)):
+                return fn(self, topic, *a, **k)
+
+        return inner
+
+    def _maint_locked(fn):  # noqa: N805 - descriptor-style decorator
+        """Hold the topic's cross-process maintenance lock for the whole
+        body (see maintenance_lock): the swap markers these operations
+        create mid-flight are indistinguishable from crash debris, so
+        the read path's healer must be excluded until the op finishes.
+        Stacked UNDER @_commit_locked (lock order: partitions, then
+        maintenance). The decorated body may call _recover_compaction
+        directly but must never re-enter another @_maint_locked method
+        for the same topic (flocks are not reentrant)."""
+        import functools
+
+        @functools.wraps(fn)
+        def inner(self, topic, *a, **k):
+            with maintenance_lock(self._topic_dir(topic)):
+                return fn(self, topic, *a, **k)
+
+        return inner
+
+    def topic_config(self, name: str) -> dict[str, str]:
+        with open(self._meta_path(name)) as f:
+            return json.load(f).get("configs", {})
+
+    def alter_topic_config(self, name: str, updates: dict[str, str | None]) -> dict[str, str]:
+        """AlterConfigs (API key 33) analog: merge updates (None deletes
+        a key) atomically into the topic's config."""
+        with open(self._meta_path(name)) as f:
+            m = json.load(f)
+        cfg = m.get("configs", {})
+        for k, v in updates.items():
+            if v is None:
+                cfg.pop(k, None)
+            else:
+                cfg[k] = str(v)
+        m["configs"] = cfg
+        tmp = self._meta_path(name) + f".tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.replace(tmp, self._meta_path(name))
+        return cfg
+
+    def apply_retention_from_config(self, name: str, now_ms: int | None = None) -> dict[int, int]:
+        """Run retention using the topic's own retention.ms /
+        retention.bytes configs (the broker's periodic cleaner pass,
+        config-driven exactly as in Kafka). No-op without configs."""
+        cfg = self.topic_config(name)
+        ms = cfg.get("retention.ms")
+        by = cfg.get("retention.bytes")
+        if ms is None and by is None:
+            return self._log_starts(name)
+        return self.apply_retention(
+            name,
+            retention_ms=int(ms) if ms is not None else None,
+            retention_bytes=int(by) if by is not None else None,
+            now_ms=now_ms,
+        )
+
+    @_locked
+    def delete_topic(self, name: str) -> None:
+        """DeleteTopics (API key 20) analog."""
+        import shutil
+
+        shutil.rmtree(self._topic_dir(name))
+
+    def list_topics(self) -> list[str]:
+        """Metadata (API key 3) analog."""
+        return sorted(
+            d for d in os.listdir(self.root) if os.path.exists(self._meta_path(d))
+        )
 
     def _manifest_files(
         self, topic: str, partition: int, start: int, end: int
@@ -951,12 +1173,6 @@ class TopicLog:
         self.compact_offsets()
         return out
 
-    def _watermarks(self, topic: str) -> dict[int, int]:
-        with open(self._wm_path(topic)) as f:
-            return {
-                int(k): v for k, v in json.load(f).items() if not k.startswith("__")
-            }
-
     def sink_committed(self, topic: str, sink_id: str) -> int:
         """Last streaming-sink batch id committed into this topic by
         ``sink_id`` (-1 if none). Rides the watermark control file, so
@@ -964,62 +1180,6 @@ class TopicLog:
         themselves."""
         with open(self._wm_path(topic)) as f:
             return json.load(f).get("__sinks", {}).get(sink_id, -1)
-
-    # snapshot-history bound: the Iceberg-snapshot-expiration analog.
-    # Each produce appends one {version, offsets} entry; only the most
-    # recent MAX_SNAPSHOTS stay readable via scan_at. Bounds the control
-    # file at O(MAX_SNAPSHOTS × partitions) regardless of topic age.
-    MAX_SNAPSHOTS = 64
-
-    def _set_watermarks(
-        self, topic: str, wm: dict[int, int], sink_commit: tuple[str, int] | None = None
-    ) -> None:
-        # The whole read-merge-replace runs under the short flip lock:
-        # with per-PARTITION commit locks, a concurrent producer on a
-        # disjoint partition set may flip between our read and our
-        # os.replace, and an unlocked RMW would silently roll its
-        # partitions back. Offsets only ever advance (the sole caller
-        # is _commit_segments), so the merge is a per-partition max —
-        # our own partitions are stable because we hold their locks.
-        with flip_lock(self._topic_dir(topic)):
-            # preserve sink commits across unrelated flips (retention,
-            # plain produce) — they live in the SAME file so that a
-            # produce carrying a sink_commit advances offsets and
-            # records the batch id in ONE atomic os.replace (the
-            # exactly-once commit point for streaming sinks)
-            try:
-                with open(self._wm_path(topic)) as f:
-                    prev = json.load(f)
-            except FileNotFoundError:
-                prev = {}
-            sinks = prev.get("__sinks", {})
-            if sink_commit is not None:
-                sinks[sink_commit[0]] = sink_commit[1]
-            prev_wm = {k: v for k, v in prev.items() if not k.startswith("__")}
-            new_wm = {
-                str(k): max(int(v), int(prev_wm.get(str(k), 0)))
-                for k, v in wm.items()
-            }
-            merged_wm = {**prev_wm, **new_wm}
-            # snapshot history: every flip that ADVANCES offsets appends
-            # a version (the time-travel read points of scan_at).
-            # Written in the same atomic os.replace as the offsets, so
-            # a version is readable exactly iff its produce committed.
-            history: list = prev.get("__history", [])
-            if merged_wm != prev_wm:
-                next_v = (history[-1]["v"] + 1) if history else 1
-                history = (history + [{"v": next_v, "wm": merged_wm}])[
-                    -self.MAX_SNAPSHOTS:
-                ]
-            payload: dict = dict(merged_wm)
-            if sinks:
-                payload["__sinks"] = sinks
-            if history:
-                payload["__history"] = history
-            tmp = self._wm_path(topic) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.replace(tmp, self._wm_path(topic))
 
     def snapshot_versions(self, topic: str) -> list[tuple[int, dict[int, int]]]:
         """Readable snapshot versions, oldest→newest: (version, the
@@ -1166,24 +1326,6 @@ class TopicLog:
         out = df.select("key", "value", "partition", "offset", "timestamp", "timestampType", "headers")
         return self._write_and_advance(topic, wm, out, sink_commit=sink_commit, allowed=pset)
 
-    def _reclaim_uncommitted(self, topic: str, partitions: set[int] | None = None) -> int:
-        """Delete segment files whose offsets lie entirely at/after the
-        committed watermark — debris from a produce that crashed
-        between the parquet append and the watermark flip. Runs under
-        the commit locks at the start of every produce, BEFORE new
-        offsets are assigned from the watermark, so a reassignment can
-        never coexist on disk with its crashed predecessor (duplicate
-        offsets below the next flip). Scoped to ``partitions`` when the
-        caller holds only those commit locks — an unlocked partition's
-        above-watermark files may be another producer's IN-FLIGHT
-        write, not debris (that partition's own next produce reclaims
-        its real debris). O(unindexed files): committed files are in
-        the manifest and skipped without a footer read; files missing
-        offset stats are left alone (can't prove them uncommitted —
-        the read-side watermark bound still hides any uncommitted rows
-        they hold)."""
-        return reclaim_uncommitted_files(self._topic_dir(topic), partitions)
-
     def _write_and_advance(
         self,
         topic: str,
@@ -1234,103 +1376,6 @@ class TopicLog:
             )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-
-    def _commit_segments(
-        self,
-        topic: str,
-        wm: dict[int, int],
-        new_wm: dict[int, int],
-        land: Callable[[], None],
-        sink_commit: tuple[str, int] | None = None,
-        allowed: set[int] | None = None,
-    ) -> dict[int, int]:
-        """The commit tail of produce() and append_raw(), run under the
-        commit locks of ``allowed`` (default: every partition): refuse
-        a partition outside that set BEFORE ``land()`` moves any
-        segment into data/ — a scan cannot bound a partition the
-        control file does not list, so a file landed there first would
-        be readable after the refusal — then merge the watermarks,
-        index the new segments and flip."""
-        n_parts = self.topic_meta(topic).num_partitions
-        ok = allowed if allowed is not None else set(range(n_parts))
-        bad = sorted(p for p in new_wm if not 0 <= p < n_parts or p not in ok)
-        if bad:
-            raise ValueError(
-                f"topic {topic!r} declares {n_parts} partitions "
-                f"(this produce locked {sorted(ok)}); "
-                f"records arrived for partition(s) {bad}"
-            )
-        land()
-        # merge over the UNION of keys: a partition present in the data
-        # but missing from the control file (e.g. created by an older
-        # writer) must not lose its watermark. Values for partitions we
-        # don't hold locks for may be stale — _set_watermarks max-merges
-        # against the fresh file under the flip lock, so stale entries
-        # can never roll a concurrent producer's flip back.
-        merged = {
-            p: max(wm.get(p, 0), new_wm.get(p, 0)) for p in set(wm) | set(new_wm)
-        }
-        # Manifest FIRST, watermark flip LAST (the same ordering as the
-        # kcore_topic DataSource writer): the flip is the commit point,
-        # and a crash between the two steps must leave fetch() able to
-        # plan every committed offset from the manifest. The old
-        # flip-then-refresh order had a window where committed rows
-        # were scan-visible but fetch-invisible (manifest missing the
-        # new segments, and the stale-manifest heal only fires on
-        # MISSING files, not missing entries). Indexing uncommitted
-        # files is safe the other way around: readers never trust
-        # offsets past the watermark, and a crash before the flip is
-        # reclaimed by the evidence-based reclaim (manifest min-offset
-        # >= watermark ⇒ debris; the r11 bug-#5 machinery, pinned by
-        # tests/test_crash_fuzz.py). Scoped to the locked partitions:
-        # an unlocked partition may hold another producer's in-flight
-        # files, which must stay OUT of the manifest until their own
-        # flip so their crash path stays reclaimable.
-        self._refresh_manifest(topic, partitions=ok)
-        self._set_watermarks(topic, merged, sink_commit=sink_commit)
-        return merged
-
-    @_locked
-    def append_raw(
-        self, topic: str, table: pa.Table, partitions: list[int] | None = None
-    ) -> dict[int, int]:
-        """Append records that already carry (partition, offset) — the
-        flush path from the wire log, which assigned offsets at accept
-        time. The caller owns offset density; watermarks advance to
-        max(offset)+1 per partition. ``partitions`` declares (and
-        locks) the target set, like produce().
-
-        ``table`` is a pyarrow Table with RECORD_SCHEMA's columns. No
-        Spark job runs: each partition's rows become ONE segment, cast
-        to SEGMENT_SCHEMA and landed by _write_segment; then produce()'s
-        commit tail indexes the segments and flips the watermarks."""
-        import pyarrow.compute as pc
-
-        if partitions is None:
-            pset = set(range(self.topic_meta(topic).num_partitions))
-        else:
-            pset = {int(p) for p in partitions}
-        with partition_commit_locks(self._topic_dir(topic), pset):
-            self._reclaim_uncommitted(topic, pset)
-            wm = self._watermarks(topic)
-            hi = table.group_by("partition").aggregate([("offset", "max")])
-            new_wm = {
-                p: o + 1
-                for p, o in zip(
-                    hi["partition"].to_pylist(), hi["offset_max"].to_pylist()
-                )
-            }
-            segments = table.select(SEGMENT_SCHEMA.names).cast(SEGMENT_SCHEMA)
-            data_dir = self._topic_dir(topic) + "/data"
-
-            def land() -> None:
-                for p in sorted(new_wm):
-                    _write_segment(
-                        os.path.join(data_dir, f"partition={p}"),
-                        segments.filter(pc.equal(table["partition"], p)),
-                    )
-
-            return self._commit_segments(topic, wm, new_wm, land, allowed=pset)
 
     # ------------------------------------------------------ fetch / offsets
 
@@ -1441,6 +1486,14 @@ class TopicLog:
             with maintenance_lock(tdir):
                 if _evidence():
                     self._recover_compaction(topic)
+                names = os.listdir(tdir)
+                if "data" not in names and not any(
+                    n.startswith(("data.old-", "data.part-old-")) for n in names
+                ):
+                    # healed, with no data/ and no swap debris left: the
+                    # topic never landed a segment — an empty log, as
+                    # fetch() answers for it
+                    return self.spark.createDataFrame([], RECORD_SCHEMA)
                 df = self.spark.read.schema(RECORD_SCHEMA).parquet(data_dir)
         starts = self._log_starts(topic)
         if any(v > 0 for v in starts.values()):

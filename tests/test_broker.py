@@ -250,11 +250,13 @@ def test_flush_runs_no_spark_job(spark, tmp_path):
 
 def _mixed_topic(spark, root):
     """A 2-partition topic whose offsets [0, 3) come from a wire-log
-    flush (pyarrow segments) and [3, 5) from TopicLog.produce (Spark
-    segments). Returns the log and the expected
+    flush (pyarrow segments), [3, 5) from TopicLog.produce (Spark
+    segments) and [5, 7) from the kcore_topic writer's commit. Returns
+    the log and the expected
     (partition, offset) -> (key, value, timestamp_ms)."""
     from pyspark.sql import functions as F
 
+    from kcore_spark.sources.pyds import WRITE_DDL, TopicLogWriter
     from kcore_spark.sources.topic_log import TopicLog
 
     tlog = TopicLog(spark, root)
@@ -276,6 +278,19 @@ def _mixed_topic(spark, root):
     tlog.produce("t", df, partition_expr=(F.col("seq") % 2).cast("int"), order_by=["seq"])
     for k, v, ms, i in produced:
         want[(i % 2, 3 + i // 2)] = (k, v, ms)
+    # the writer stages naive datetimes: the segment keeps their wall
+    # clock as UTC
+    epoch = datetime.datetime(1970, 1, 1)
+    one_ms = datetime.timedelta(milliseconds=1)
+    written = [
+        (b"wk%d" % i, b"wv%d" % i, epoch + (1700000009000 + i) * one_ms, i % 2, i)
+        for i in range(4)
+    ]
+    schema = spark.createDataFrame([], WRITE_DDL).schema
+    w = TopicLogWriter({"root": root, "topic": "t"}, schema)
+    w.commit([w.write(iter(written))])
+    for k, v, ts, p, i in written:
+        want[(p, 5 + i // 2)] = (k, v, (ts - epoch) // one_ms)
     return tlog, want
 
 
@@ -287,11 +302,12 @@ def test_flushed_segment_schema_equals_produced_segment(spark, tmp_path):
     man = tlog._load_manifest("t")
     data_dir = tlog._topic_dir("t") + "/data"
     flushed = [e["file"] for es in man.values() for e in es if e["min"] < 3]
-    produced = [e["file"] for es in man.values() for e in es if e["min"] >= 3]
-    assert len(flushed) == 2 and len(produced) == 2
-    assert all("/part-pr-" in f for f in flushed)
+    produced = [e["file"] for es in man.values() for e in es if 3 <= e["min"] < 5]
+    written = [e["file"] for es in man.values() for e in es if e["min"] >= 5]
+    assert len(flushed) == 2 and len(produced) == 2 and len(written) == 2
+    assert all("/part-pr-" in f for f in flushed + written)
     want = pq.read_schema(f"{data_dir}/{produced[0]}")
-    for f in flushed + produced:
+    for f in flushed + produced + written:
         got = pq.read_schema(f"{data_dir}/{f}")
         assert got.equals(want), (f, got, want)
     assert want.field("timestamp").type == pa.timestamp("us", tz="UTC")
@@ -314,14 +330,15 @@ def test_flushed_and_produced_segments_read_alike(spark, tmp_path):
         }
 
     scanned = tlog.scan("t").select(*cols).collect()
-    assert len(scanned) == 10 and as_dict(scanned) == want
+    assert len(scanned) == 14 and as_dict(scanned) == want
     for p in (0, 1):
         fetched = tlog.fetch("t", p, 0, 100).select(*cols).collect()
-        assert [r["offset"] for r in fetched] == [0, 1, 2, 3, 4]
+        assert [r["offset"] for r in fetched] == [0, 1, 2, 3, 4, 5, 6]
         assert as_dict(fetched) == {k: v for k, v in want.items() if k[0] == p}
-        tail = tlog.fetch("t", p, 2, 2).select("offset").collect()
-        assert [r["offset"] for r in tail] == [2, 3]
-    assert [tuple(r) for r in tlog.list_offsets("t").collect()] == [(0, 0, 5, 5), (1, 0, 5, 5)]
+        for lo in (2, 4):
+            tail = tlog.fetch("t", p, lo, 2).select("offset").collect()
+            assert [r["offset"] for r in tail] == [lo, lo + 1]
+    assert [tuple(r) for r in tlog.list_offsets("t").collect()] == [(0, 0, 7, 7), (1, 0, 7, 7)]
     spark.dataSource.register(TopicLogDataSource)
     via_ds = (
         spark.read.format("kcore_topic")
@@ -336,7 +353,7 @@ def test_flushed_and_produced_segments_read_alike(spark, tmp_path):
         {**r.asDict(), "ms": (r["timestamp"] - epoch) // datetime.timedelta(milliseconds=1)}
         for r in via_ds
     ]
-    assert len(via_ds) == 10 and as_dict(via_ds) == want
+    assert len(via_ds) == 14 and as_dict(via_ds) == want
 
 
 # ------------------------------------------------------ handler properties

@@ -197,6 +197,17 @@ def test_append_raw_rejects_out_of_range_partition(spark, log):
     assert log.scan("t").count() == 1
 
 
+def test_created_topic_without_segments_reads_empty(spark, log):
+    """A created topic that never landed a segment has no data/ dir.
+    scan and list_offsets must read it as an empty log, as fetch
+    does, not raise PATH_NOT_FOUND."""
+    log.create_topic("t", 2)
+    assert not os.path.exists(os.path.join(log._topic_dir("t"), "data"))
+    assert log.scan("t").count() == 0
+    assert log.list_offsets("t").collect() == []
+    assert all(log.fetch("t", p, 0, 10).count() == 0 for p in (0, 1))
+
+
 # ------------------------------------------------------ compaction crash
 
 

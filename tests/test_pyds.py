@@ -213,6 +213,40 @@ def test_hostile_options_fail_cleanly(spark):
     assert "ghost" in str(ei.value) or "No such file" in str(ei.value)
 
 
+def test_stream_restart_with_no_new_records_reads_nothing(spark):
+    """A second availableNow run on the same checkpoint, with nothing
+    produced in between, must finish with 0 new rows. pyspark calls
+    next() on read()'s result when the offsets did not advance, so
+    read() must hand back an iterator, not a bare list."""
+    import tempfile as tf
+
+    log = _make_log(spark, n=20)
+    spark.dataSource.register(TopicLogDataSource)
+    ckpt = tf.mkdtemp(prefix="kcore_pyds_ckpt_")
+    sink = tf.mkdtemp(prefix="kcore_pyds_sink_") + "/out"
+
+    def run_once():
+        q = (
+            spark.readStream.format("kcore_topic")
+            .option("root", log.root)
+            .option("topic", "t")
+            .load()
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert q.exception() is None
+
+    run_once()
+    assert spark.read.parquet(sink).count() == 40
+    run_once()
+    assert spark.read.parquet(sink).count() == 40
+
+
 def test_corrupt_manifest_falls_back_to_listing(spark):
     # a manifest that isn't JSON must not poison reads — note this is
     # stricter than the native path (which heals via refresh): the
@@ -236,9 +270,10 @@ def test_corrupt_manifest_falls_back_to_listing(spark):
 
 
 def test_writer_roundtrip_two_phase(spark):
-    """df.write.format('kcore_topic') stages on executors, sequences
-    through TopicLog.produce on commit — offsets dense per partition
-    in seq order, staging cleared, data identical to the native path."""
+    """df.write.format('kcore_topic') stages on executors, and its
+    commit assigns offsets and lands them through the topic log's
+    commit sequence — offsets dense per partition in seq order,
+    staging cleared, data identical to the native path."""
     import glob
     import os
     import tempfile
@@ -410,6 +445,64 @@ def test_writer_rejects_out_of_range_partition(spark):
         for _, _, files in os.walk(data_dir)
         for f in files
     )
+
+
+_NO_SESSION_COMMIT = """
+import datetime, sys
+
+from pyspark import SparkContext
+from pyspark.sql.types import (
+    BinaryType, IntegerType, LongType, StructField, StructType, TimestampType,
+)
+
+from kcore_spark.sources.pyds import TopicLogWriter
+from kcore_spark.sources.topic_log import TopicLogControl
+
+root = sys.argv[1]
+TopicLogControl(root).create_topic("t", 2)
+schema = StructType([
+    StructField("key", BinaryType()),
+    StructField("value", BinaryType()),
+    StructField("timestamp", TimestampType()),
+    StructField("part", IntegerType()),
+    StructField("seq", LongType()),
+])
+ts = datetime.datetime(2024, 1, 1)
+w = TopicLogWriter({"root": root, "topic": "t"}, schema)
+w.commit([w.write(iter(
+    [(b"k%d" % i, b"v%d" % i, ts, i % 2, i) for i in range(7)]
+))])
+assert SparkContext._gateway is None, "a JVM was started"
+print("NO_SESSION_COMMIT_OK")
+"""
+
+
+def test_writer_commit_runs_without_a_session(spark, tmp_path):
+    """The writer's commit runs in the data-source Python runner, which
+    has no Spark session: creating a topic through TopicLogControl and
+    committing a staged write must start no JVM. The rows and their
+    dense offsets are then checked through a session-backed scan."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = str(tmp_path / "logs")
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_SESSION_COMMIT, root],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "NO_SESSION_COMMIT_OK" in proc.stdout
+    rows = TopicLog(spark, root).scan("t").select("partition", "offset", "key").collect()
+    got = sorted((r["partition"], r["offset"], bytes(r["key"])) for r in rows)
+    assert got == [
+        (0, 0, b"k0"), (0, 1, b"k2"), (0, 2, b"k4"), (0, 3, b"k6"),
+        (1, 0, b"k1"), (1, 1, b"k3"), (1, 2, b"k5"),
+    ]
 
 
 def test_stream_reader_max_offsets_per_trigger(spark, tmp_path):
