@@ -14,9 +14,9 @@ the reader contract is the public integration surface. A foreign Spark
 deployment (no kcore_spark on the driver classpath beyond this module)
 gets topic reads with the SAME planning guarantees the native path has:
 
-- one InputPartition per (topic-partition × segment-file) → Spark
-  schedules segment reads in parallel and the partition count scales
-  with the log, exactly like Kafka source splits;
+- one InputPartition per topic partition's offset range, clamped to
+  [log start, committed watermark) as the native scan and fetch are,
+  holding its segment files in offset order, as Kafka source splits;
 - manifest-first planning: segment files outside the requested offset
   range are pruned at plan time from footer stats recorded in
   the topic manifest (falling back to a directory listing for
@@ -26,11 +26,11 @@ gets topic reads with the SAME planning guarantees the native path has:
 
 The same source also STREAMS (``spark.readStream.format("kcore_topic")``):
 micro-batch offsets are the topic's own per-partition watermarks — the
-Kafka-source model — and ``readBetweenOffsets`` replays any committed
-range deterministically from the immutable segments, as the same
-Arrow batches the batch reader yields, so checkpoint recovery is
-exact (tested: incremental availableNow runs pick up only new
-records, no replay duplicates).
+Kafka-source model — and a micro-batch is planned and read exactly like
+a batch read of its offset ranges, in Spark tasks. Any committed range
+replays deterministically from the immutable segments, so checkpoint
+recovery is exact (tested: incremental availableNow runs pick up only
+new records, no replay duplicates).
 
 The source also WRITES (``df.write.format("kcore_topic")``), but
 two-phase: offset assignment is a log-wide transaction (dense
@@ -46,8 +46,8 @@ construction. Input contract: ``key binary, value binary, timestamp
 timestamp, part int, seq bigint`` (part = target partition, seq =
 within-partition order key).
 
-Every control file (meta, watermarks, manifest) is read and written
-through ``TopicLogControl``, which needs no Spark session.
+Every control file (meta, watermarks, log starts, manifest) is read and
+written through ``TopicLogControl``, which needs no Spark session.
 
 Provenance: realizes the reference's declared topic read surface
 (`/root/reference/README.md:48` Consumer API roadmap row) as a Spark
@@ -58,13 +58,14 @@ from __future__ import annotations
 
 import glob
 import os
+import time
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -76,6 +77,7 @@ RECORD_DDL = (
 )
 
 _UNBOUNDED = 2**62
+_REPLANS = 3  # per split read, while a swap leaves the manifest stale
 
 
 def _record_arrow_schema():
@@ -96,14 +98,56 @@ def _record_arrow_schema():
     )
 
 
-class SegmentSplit(InputPartition):
-    """One schedulable unit: a single segment file of one partition."""
+class OffsetRangeSplit(InputPartition):
+    """One schedulable unit: one topic partition's offset range
+    [start, end) and its segment files (``paths``) in offset order."""
 
-    def __init__(self, partition: int, path: str, start: int, end: int):
+    def __init__(self, partition: int, paths: list[str], start: int, end: int):
         self.partition = partition
-        self.path = path
+        self.paths = paths
         self.start = start
         self.end = end
+
+
+def plan_offset_ranges(
+    root: str, topic: str, ranges: dict[int, tuple[int, int]]
+) -> list[OffsetRangeSplit]:
+    """The one planner of the batch and stream readers: a split per
+    partition of ``ranges`` ({partition: (start, end)}) whose range is
+    non-empty once clamped to [log start, committed watermark), with the
+    manifest's segments overlapping it (a directory listing where the
+    manifest has none). Spark-free: the Python runner and the read tasks
+    call it."""
+    ctl = TopicLogControl(root)
+    # watermarks BEFORE the manifest: a commit indexes its segments
+    # before it flips, so this manifest indexes every offset below wm
+    wm = ctl._watermarks(topic)
+    log_starts = ctl._log_starts(topic)
+    try:
+        man = ctl._load_manifest(topic)
+    except (ValueError, OSError):
+        # unreadable manifest (torn write from a foreign tool): plan from
+        # the directory listing; this reader may lack write access to heal
+        man = {}
+    data_dir = os.path.join(ctl._topic_dir(topic), "data")
+    splits: list[OffsetRangeSplit] = []
+    for p, (start, end) in sorted(ranges.items()):
+        start = max(start, log_starts.get(p, 0))
+        end = min(end, wm.get(p, _UNBOUNDED))
+        if end <= start:
+            continue
+        entries = man.get(f"partition={p}")
+        if entries is not None:
+            paths = [
+                os.path.join(data_dir, e["file"])
+                for e in sorted(entries, key=lambda e: (e["min"], e["file"]))
+                if e["max"] >= start and e["min"] < end
+            ]
+        else:  # pre-manifest log: fall back to a directory listing
+            paths = sorted(glob.glob(os.path.join(data_dir, f"partition={p}", "*.parquet")))
+        if paths:
+            splits.append(OffsetRangeSplit(p, paths, start, end))
+    return splits
 
 
 class TopicLogReader(DataSourceReader):
@@ -116,107 +160,82 @@ class TopicLogReader(DataSourceReader):
     # ---------------------------------------------- driver-side planning
 
     def partitions(self):
-        ctl = TopicLogControl(self.root)
-        n_parts = ctl.topic_meta(self.topic).num_partitions
-        try:
-            man = ctl._load_manifest(self.topic)
-        except (ValueError, OSError):
-            # unreadable manifest (torn write from a foreign tool):
-            # treat as absent — plan from the directory listing;
-            # stricter than the native path's heal-and-refresh, but
-            # this reader may lack write access to heal
-            man = {}
-        splits: list[SegmentSplit] = []
-        data_dir = os.path.join(ctl._topic_dir(self.topic), "data")
-        for p in range(n_parts):
-            entries = man.get(f"partition={p}")
-            if entries is not None:
-                files = [
-                    os.path.join(data_dir, e["file"])
-                    for e in sorted(entries, key=lambda e: (e["min"], e["file"]))
-                    if e["max"] >= self.start and e["min"] < self.end
-                ]
-            else:  # pre-manifest log: fall back to a directory listing
-                files = sorted(
-                    glob.glob(os.path.join(data_dir, f"partition={p}", "*.parquet"))
-                )
-            splits.extend(SegmentSplit(p, f, self.start, self.end) for f in files)
-        # empty topic: Spark requires >= 1 partition; emit a no-op split
-        return splits or [SegmentSplit(0, "", self.start, self.end)]
+        n_parts = TopicLogControl(self.root).topic_meta(self.topic).num_partitions
+        ranges = dict.fromkeys(range(n_parts), (self.start, self.end))
+        splits = plan_offset_ranges(self.root, self.topic, ranges)
+        # nothing to read: Spark requires >= 1 partition; emit a no-op split
+        return splits or [OffsetRangeSplit(0, [], self.start, self.end)]
 
     # ---------------------------------------------- executor-side read
 
-    def read(self, split: SegmentSplit):
+    def read(self, split: OffsetRangeSplit):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        if not split.path:
-            return  # empty-topic no-op split
-        if not os.path.exists(split.path):
-            # A maintenance swap (compact/optimize/erase) replaced this
-            # segment between planning and reading. Offsets are
-            # immutable, so a retry that replans from the fresh
-            # manifest returns exactly the same rows — FAIL the read
-            # (the documented transient object-store class) instead of
-            # the old silent skip, which dropped this segment's rows
-            # from the result with no error (r12 review find; the
-            # native fetch path got the same treatment).
-            raise FileNotFoundError(
-                f"segment {split.path} vanished during read (live "
-                f"compaction swap) — retry the query/trigger to replan "
-                f"from the refreshed manifest"
-            )
-        f = pq.ParquetFile(split.path)
-        cols = {f.metadata.schema.column(i).name: i for i in range(f.metadata.num_columns)}
-        oi = cols["offset"]
-        # row-group pruning on the offset stats inside the segment
-        groups = []
-        for rg in range(f.metadata.num_row_groups):
-            st = f.metadata.row_group(rg).column(oi).statistics
-            if st is None or not st.has_min_max or (st.max >= split.start and st.min < split.end):
-                groups.append(rg)
         schema = _record_arrow_schema()
-        for rg in groups:
-            t = f.read_row_group(rg)
-            mask = pc.and_(
-                pc.greater_equal(t["offset"], split.start),
-                pc.less(t["offset"], split.end),
-            )
-            t = t.filter(mask)
-            if t.num_rows == 0:
+        paths, replans, yielded = list(split.paths), 0, False
+        while paths:
+            try:
+                f = pq.ParquetFile(paths[0])
+            except FileNotFoundError:
+                # A maintenance swap (compact/optimize/erase) replaced this
+                # segment after planning. Offsets are immutable: until a row
+                # is yielded, replan the range from the refreshed manifest;
+                # after that, or if it stays stale, FAIL the read, never skip.
+                if yielded or replans == _REPLANS:
+                    raise FileNotFoundError(
+                        f"segment {paths[0]} vanished during read (live compaction swap) — "
+                        f"retry the query/trigger to replan from the refreshed manifest"
+                    ) from None
+                replans += 1
+                time.sleep(0.2 * replans)
+                ranges = {split.partition: (split.start, split.end)}
+                fresh = plan_offset_ranges(self.root, self.topic, ranges)
+                paths = fresh[0].paths if fresh else []
                 continue
-            # partition comes from the directory layout, not the file
-            t = t.append_column(
-                "partition", pa.repeat(pa.scalar(split.partition, pa.int32()), t.num_rows)
-            )
-            # segments store UTC-adjusted µs timestamps; the cast to the
-            # declared NTZ column keeps their UTC wall clock
-            yield from t.select(schema.names).cast(schema).to_batches()
+            paths.pop(0)
+            with f:
+                oi = f.metadata.schema.names.index("offset")
+                for rg in range(f.metadata.num_row_groups):
+                    # row-group pruning on the offset stats inside the segment
+                    st = f.metadata.row_group(rg).column(oi).statistics
+                    if st is not None and st.has_min_max and not (
+                        st.max >= split.start and st.min < split.end
+                    ):
+                        continue
+                    off = pc.field("offset")
+                    t = f.read_row_group(rg).filter((off >= split.start) & (off < split.end))
+                    if t.num_rows == 0:
+                        continue
+                    # partition comes from the directory layout, not the file
+                    t = t.append_column(
+                        "partition", pa.repeat(pa.scalar(split.partition, pa.int32()), t.num_rows)
+                    )
+                    # segments store UTC-adjusted µs timestamps; the cast to
+                    # the declared NTZ column keeps their UTC wall clock
+                    yielded = True
+                    yield from t.select(schema.names).cast(schema).to_batches()
 
 
 # ---------------------------------------------------- streaming reader
 
 
-class TopicLogStreamReader(SimpleDataSourceStreamReader):
+class TopicLogStreamReader(DataSourceStreamReader):
     """Micro-batch source over the topic log: offsets are the topic's
     own per-partition watermarks (``{"0": next_offset, ...}``) — the
-    exact Kafka-source model (startingOffsets → latest per trigger).
-    ``readBetweenOffsets`` replays any committed range
-    deterministically from the immutable segments, which is what makes
-    checkpoint recovery exact.
+    exact Kafka-source model (startingOffsets → latest per trigger). A
+    micro-batch's offset ranges are planned by ``plan_offset_ranges``
+    and read in Spark tasks by ``TopicLogReader.read``, replaying any
+    committed range exactly from the immutable segments.
 
     Operational note (ADVICE r13 #4): a maintenance swap
-    (compact/optimize/erase_keys) that lands MID-TRIGGER makes the
-    executor-side read fail transiently (``TopicLogReader.read`` raises
-    FileNotFoundError rather than silently dropping the swapped
-    segment's rows). Spark's task retries re-execute the same planned
-    split path, so all retries of that trigger fail and the query
-    stops; the checkpoint is intact — restarting the query replans
-    from the refreshed manifest and replays the exact same offsets.
-    Schedule maintenance between triggers (or pair restarts with
-    maintenance windows); a planner-level replan-on-retry needs a
-    DataSource API hook Spark does not expose to Python sources yet."""
+    (compact/optimize/erase_keys) between planning and a task's first
+    row makes the task replan its range from the refreshed manifest. A
+    swap after that fails the read transiently (``TopicLogReader.read``
+    raises FileNotFoundError rather than silently dropping the swapped
+    segment's rows) and the query stops; the checkpoint is intact —
+    restarting the query replans and replays the exact same offsets."""
 
     def __init__(self, options: dict):
         self.root = options["root"]
@@ -227,17 +246,18 @@ class TopicLogStreamReader(SimpleDataSourceStreamReader):
         # a restarted stream over a deep log then catches up in
         # bounded, evenly-paced batches instead of one giant batch
         # that overwhelms the sink.
-        # Caveat (r7, pinned by test_backpressure_bounded_dlq_split_
-        # exactly_once): with Trigger.AvailableNow the engine latches
-        # the FIRST latestOffset as the run's final target, and the
-        # Python DataSource API exposes no prepareForTriggerAvailableNow
-        # hook to latch the true log end the way the JVM Kafka source
-        # does — so a capped availableNow run stops after ONE bounded
-        # batch (the checkpoint resumes where it left off; nothing is
-        # lost). Use the cap with paced triggers; leave it unset for
-        # drain-everything availableNow runs.
+        # Caveat (pinned by test_backpressure_bounded_dlq_split_exactly_once):
+        # under Trigger.AvailableNow the engine latches the FIRST
+        # latestOffset as the run's target, and a Python source has no
+        # prepareForTriggerAvailableNow hook to latch the log end as the
+        # JVM Kafka source does, so a capped availableNow run stops after
+        # ONE bounded batch (the checkpoint resumes; nothing is lost). Use
+        # the cap with paced triggers, not drain-everything runs.
         cap = options.get("max_offsets_per_trigger")
         self.max_offsets_per_trigger = int(cap) if cap is not None else None
+        # end of the last planned micro-batch, which the cap counts from;
+        # on a restart, setLatestSeenOffset plans it as an empty range
+        self._end: dict | None = None
 
     def _watermarks(self) -> dict[str, int]:
         # string keys: stream offsets round-trip through JSON
@@ -247,62 +267,40 @@ class TopicLogStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {p: 0 for p in self._watermarks()}
 
-    def read(self, start: dict):
+    def latestOffset(self) -> dict:
         end = self._watermarks()
-        # partitions created after the stream started begin at 0
-        merged_start = {p: int(start.get(p, 0)) for p in end}
         cap = self.max_offsets_per_trigger
-        if cap is not None:
-            backlog = {
-                p: end[p] - merged_start[p]
-                for p in end
-                if end[p] > merged_start[p]
-            }
-            total = sum(backlog.values())
-            if total > cap:
-                # proportional allocation, ≥1 offset per lagging
-                # partition so no partition starves; remainder goes to
-                # the deepest backlogs (deterministic order)
-                alloc = {p: max(1, (b * cap) // total) for p, b in backlog.items()}
-                spare = cap - sum(alloc.values())
-                for p, _b in sorted(
-                    backlog.items(), key=lambda kv: (-kv[1], kv[0])
-                ):
-                    if spare <= 0:
-                        break
-                    take = min(spare, backlog[p] - alloc[p])
-                    if take > 0:
-                        alloc[p] += take
-                        spare -= take
-                end = dict(merged_start)
-                for p, a in alloc.items():
-                    end[p] = min(merged_start[p] + a, self._watermarks()[p])
-        # an iterator over a materialized list: the runtime caches this
-        # batch for replay (copy.copy per plan), which a generator does
-        # not survive, and calls next() on it when the offsets did not
-        # advance, which a bare list does not support; a list iterator
-        # does both. A micro-batch is bounded by definition.
-        return iter(list(self.readBetweenOffsets(merged_start, end))), end
+        if cap is None:
+            return end
+        # partitions created after the stream started begin at 0
+        start = {p: int((self._end or {}).get(p, 0)) for p in end}
+        backlog = {p: end[p] - start[p] for p in end if end[p] > start[p]}
+        total = sum(backlog.values())
+        if total <= cap:
+            return end
+        # proportional allocation, ≥1 offset per lagging partition so
+        # no partition starves; remainder goes to the deepest backlogs
+        # (deterministic order). No allocation exceeds its backlog.
+        alloc = {p: max(1, (b * cap) // total) for p, b in backlog.items()}
+        spare = cap - sum(alloc.values())
+        for p, b in sorted(backlog.items(), key=lambda kv: (-kv[1], kv[0])):
+            if spare <= 0:
+                break
+            take = min(spare, b - alloc[p])
+            alloc[p] += take
+            spare -= take
+        return {p: start[p] + alloc.get(p, 0) for p in end}
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        for p, hi in end.items():
-            lo = int(start.get(p, 0))
-            if hi <= lo:
-                continue
-            split_reader = TopicLogReader(
-                {
-                    "root": self.root,
-                    "topic": self.topic,
-                    "start_offset": str(lo),
-                    "end_offset": str(hi),
-                }
-            )
-            for split in split_reader.partitions():
-                if split.path and split.partition == int(p):
-                    yield from split_reader.read(split)
+    def partitions(self, start: dict, end: dict) -> list[OffsetRangeSplit]:
+        self._end = end
+        ranges = {int(p): (int(start.get(p, 0)), int(hi)) for p, hi in end.items()}
+        return plan_offset_ranges(self.root, self.topic, ranges)
+
+    read = TopicLogReader.read
 
     def commit(self, end: dict) -> None:
-        pass  # offsets live in the stream checkpoint; the log is immutable
+        # offsets live in the stream checkpoint; the log is immutable
+        self._end = end
 
 
 # ---------------------------------------------------- batch writer
@@ -469,7 +467,7 @@ class TopicLogDataSource(DataSource):
     def reader(self, schema) -> TopicLogReader:
         return TopicLogReader(dict(self.options))
 
-    def simpleStreamReader(self, schema) -> TopicLogStreamReader:
+    def streamReader(self, schema) -> TopicLogStreamReader:
         return TopicLogStreamReader(dict(self.options))
 
     def writer(self, schema, overwrite: bool) -> TopicLogWriter:

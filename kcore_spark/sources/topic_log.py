@@ -354,6 +354,19 @@ class TopicMeta:
     num_partitions: int
 
 
+def _declared_partitions(meta: TopicMeta, partitions: Iterable[int] | None) -> set[int]:
+    """A commit's partition set (None: all of them), checked against the
+    topic BEFORE its commit locks make a lock file for each."""
+    n = meta.num_partitions
+    pset = set(range(n)) if partitions is None else {int(p) for p in partitions}
+    bad = sorted(p for p in pset if not 0 <= p < n)
+    if bad:
+        raise ValueError(
+            f"topic {meta.name!r} declares {n} partitions; cannot target partition(s) {bad}"
+        )
+    return pset
+
+
 def _locked(fn):
     """Run the method under the instance's thread mutate lock."""
     import functools
@@ -585,6 +598,17 @@ class TopicLogControl:
                 int(k): v for k, v in json.load(f).items() if not k.startswith("__")
             }
 
+    def _log_start_path(self, topic: str) -> str:
+        return os.path.join(self._topic_dir(topic), "_log_start.json")
+
+    def _log_starts(self, topic: str) -> dict[int, int]:
+        """Per-partition log start offset (0 = never truncated)."""
+        p = self._log_start_path(topic)
+        if not os.path.exists(p):
+            return {}
+        with open(p) as f:
+            return {int(k): v for k, v in json.load(f).items()}
+
     # snapshot-history bound: the Iceberg-snapshot-expiration analog.
     # Each produce appends one {version, offsets} entry; only the most
     # recent MAX_SNAPSHOTS stay readable via scan_at. Bounds the control
@@ -721,21 +745,18 @@ class TopicLogControl:
     ) -> dict[int, int]:
         """The locked commit sequence of append_raw and the kcore_topic
         writer. Reads the topic's meta FIRST, so a write to a topic that
-        was never created fails before the commit locks create its dir.
-        Then, under the commit locks of ``partitions`` (default: every
-        partition): reclaim a crashed predecessor's leftovers, read the
-        watermarks and hand them to ``build(wm)``, which returns the new
-        watermarks and an iterable of (partition, pyarrow Table)
-        segments. _commit_segments refuses an out-of-range partition
-        before anything lands, lands each table with _write_segment,
-        refreshes the locked partitions' manifest and flips the
-        watermarks. The iterable is consumed one table at a time, so a
-        builder that reads one staged file per table holds only one in
-        memory."""
-        n_parts = self.topic_meta(topic).num_partitions
-        pset = (
-            set(range(n_parts)) if partitions is None else {int(p) for p in partitions}
-        )
+        was never created, or to a partition it lacks, fails before the
+        commit locks create its dir or lock files. Then, under the
+        commit locks of ``partitions`` (default: every partition):
+        reclaim a crashed predecessor's leftovers, read the watermarks
+        and hand them to ``build(wm)``, which returns the new watermarks
+        and an iterable of (partition, pyarrow Table) segments.
+        _commit_segments refuses a partition outside that set before
+        anything lands, lands each table with _write_segment, refreshes
+        the locked partitions' manifest and flips the watermarks. The
+        iterable is consumed one table at a time, so a builder that
+        reads one staged file per table holds only one in memory."""
+        pset = _declared_partitions(self.topic_meta(topic), partitions)
         with partition_commit_locks(self._topic_dir(topic), pset):
             self._reclaim_uncommitted(topic, pset)
             wm = self._watermarks(topic)
@@ -903,17 +924,6 @@ class TopicLog(TopicLogControl):
             for e in entries
             if e["min"] < end and e["max"] >= start
         ]
-
-    def _log_start_path(self, topic: str) -> str:
-        return os.path.join(self._topic_dir(topic), "_log_start.json")
-
-    def _log_starts(self, topic: str) -> dict[int, int]:
-        """Per-partition log start offset (0 = never truncated)."""
-        p = self._log_start_path(topic)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return {int(k): v for k, v in json.load(f).items()}
 
     def _set_log_starts(self, topic: str, starts: dict[int, int]) -> None:
         tmp = self._log_start_path(topic) + f".tmp.{uuid.uuid4().hex}"
@@ -1258,16 +1268,7 @@ class TopicLog(TopicLogControl):
         counts accordingly (as in Kafka).
         """
         meta = self.topic_meta(topic)
-        if partitions is None:
-            pset = set(range(meta.num_partitions))
-        else:
-            pset = {int(p) for p in partitions}
-            bad = sorted(p for p in pset if not 0 <= p < meta.num_partitions)
-            if bad:
-                raise ValueError(
-                    f"topic {topic!r} declares {meta.num_partitions} partitions; "
-                    f"cannot target partition(s) {bad}"
-                )
+        pset = _declared_partitions(meta, partitions)
         with partition_commit_locks(self._topic_dir(topic), pset):
             return self._produce_locked(
                 topic, meta, records, partition_expr, order_by, sink_commit, pset

@@ -25,6 +25,27 @@ def _make_log(spark, n=100, parts=3):
     return log
 
 
+def _raw(part, lo, hi):
+    """Records [lo, hi) of one partition as the pyarrow table
+    append_raw takes."""
+    import datetime
+
+    import pyarrow as pa
+
+    n = hi - lo
+    return pa.table(
+        {
+            "key": pa.array([b"k%d" % o for o in range(lo, hi)], pa.binary()),
+            "value": pa.array([b"v%d" % o for o in range(lo, hi)], pa.binary()),
+            "partition": pa.array([part] * n, pa.int32()),
+            "offset": pa.array(range(lo, hi), pa.int64()),
+            "timestamp": pa.array([datetime.datetime(2024, 1, 1)] * n, pa.timestamp("us")),
+            "timestampType": pa.array([0] * n, pa.int32()),
+            "headers": pa.nulls(n, pa.map_(pa.string(), pa.binary())),
+        }
+    )
+
+
 def test_full_read_matches_native_fetch(spark):
     log = _make_log(spark)
     spark.dataSource.register(TopicLogDataSource)
@@ -62,12 +83,17 @@ def test_offset_range_filters_and_prunes(spark):
 
     # manifest-based planning prunes whole segments outside the range:
     # the second produce's segments hold offsets >= ~33 per partition,
-    # so a [0, 5) read must plan strictly fewer splits than a full read
-    full_splits = TopicLogReader({"root": log.root, "topic": "t"}).partitions()
-    low_splits = TopicLogReader(
-        {"root": log.root, "topic": "t", "start_offset": "0", "end_offset": "5"}
-    ).partitions()
-    assert 0 < len(low_splits) < len(full_splits)
+    # so a [0, 5) read must plan strictly fewer segments than a full read
+    def planned_segments(reader):
+        return sum(len(s.paths) for s in reader.partitions())
+
+    full_segments = planned_segments(TopicLogReader({"root": log.root, "topic": "t"}))
+    low_segments = planned_segments(
+        TopicLogReader(
+            {"root": log.root, "topic": "t", "start_offset": "0", "end_offset": "5"}
+        )
+    )
+    assert 0 < low_segments < full_segments
 
 
 def test_empty_topic_reads_zero_rows(spark):
@@ -266,6 +292,140 @@ def test_corrupt_manifest_falls_back_to_listing(spark):
     assert df.count() == 60
 
 
+def test_read_stops_at_the_committed_watermark(spark, tmp_path):
+    """A commit that crashed between its scoped manifest refresh and its
+    watermark flip leaves an indexed segment past the watermark. A
+    kcore_topic read must not return its uncommitted rows, just as
+    scan and fetch do not."""
+    import os
+
+    from kcore_spark.sources.topic_log import _write_segment
+
+    root = str(tmp_path / "logs")
+    log = TopicLog(spark, root)
+    log.create_topic("t", 1)
+    log.append_raw("t", _raw(0, 0, 10))
+    _write_segment(os.path.join(root, "t", "data", "partition=0"), _raw(0, 10, 15))
+    log._refresh_manifest("t", partitions={0})
+    assert log._watermarks("t") == {0: 10}
+    spark.dataSource.register(TopicLogDataSource)
+    via_ds = spark.read.format("kcore_topic").option("root", root).option("topic", "t").load()
+    assert sorted(r["offset"] for r in via_ds.collect()) == list(range(10))
+    assert log.scan("t").count() == 10
+    assert log.fetch("t", 0, 0, 100).count() == 10
+
+
+def test_read_starts_at_the_log_start(spark, tmp_path):
+    """truncate_before inside a segment hides the segment's truncated
+    prefix from scan and fetch; a kcore_topic batch read and an
+    availableNow stream must hide it too."""
+    root = str(tmp_path / "logs")
+    log = TopicLog(spark, root)
+    log.create_topic("t", 1)
+    log.append_raw("t", _raw(0, 0, 10))
+    log.truncate_before("t", {0: 3})
+    assert log.scan("t").count() == 7
+    assert log.fetch("t", 0, 0, 100).count() == 7
+    spark.dataSource.register(TopicLogDataSource)
+    batch = spark.read.format("kcore_topic").option("root", root).option("topic", "t").load()
+    assert sorted(r["offset"] for r in batch.collect()) == list(range(3, 10))
+    q = (
+        spark.readStream.format("kcore_topic")
+        .option("root", root)
+        .option("topic", "t")
+        .load()
+        .writeStream.format("memory")
+        .queryName("kcore_stream_log_start")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    streamed = spark.table("kcore_stream_log_start").collect()
+    assert sorted(r["offset"] for r in streamed) == list(range(3, 10))
+
+
+def test_stream_trigger_reads_in_one_task_per_partition(spark, tmp_path):
+    """A micro-batch is read inside Spark tasks, one per topic
+    partition's offset range, not on the driver's Python runner: an
+    availableNow trigger over a 4-partition topic runs its scan stage
+    as 4 tasks."""
+    import pyarrow as pa
+
+    root = str(tmp_path / "logs")
+    log = TopicLog(spark, root)
+    log.create_topic("t", 4)
+    log.append_raw("t", pa.concat_tables([_raw(p, 0, 5) for p in range(4)]))
+    spark.dataSource.register(TopicLogDataSource)
+    q = (
+        spark.readStream.format("kcore_topic")
+        .option("root", root)
+        .option("topic", "t")
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    st = spark.sparkContext.statusTracker()
+    stages = [
+        sid for jid in st.getJobIdsForGroup(str(q.runId)) for sid in st.getJobInfo(jid).stageIds
+    ]
+    assert [st.getStageInfo(sid).numTasks for sid in stages] == [4]
+
+
+_NO_JVM_STREAM_PLAN = """
+import sys
+
+import pyarrow as pa
+from pyspark import SparkContext
+
+from kcore_spark.sources.pyds import TopicLogStreamReader
+from kcore_spark.sources.topic_log import TopicLogControl
+
+root = sys.argv[1]
+ctl = TopicLogControl(root)
+ctl.create_topic("t", 2)
+ctl.append_raw("t", pa.table({
+    "key": pa.array([b"k"] * 5), "value": pa.array([b"v"] * 5),
+    "partition": pa.array([0, 0, 0, 1, 1], pa.int32()),
+    "offset": pa.array([0, 1, 2, 0, 1], pa.int64()),
+    "timestamp": pa.array([0] * 5, pa.timestamp("us")),
+    "timestampType": pa.array([0] * 5, pa.int32()),
+    "headers": pa.nulls(5, pa.map_(pa.string(), pa.binary())),
+}))
+rdr = TopicLogStreamReader({"root": root, "topic": "t"})
+start = rdr.initialOffset()
+end = rdr.latestOffset()
+assert start == {"0": 0, "1": 0} and end == {"0": 3, "1": 2}, (start, end)
+splits = rdr.partitions(start, end)
+assert [(s.partition, s.start, s.end) for s in splits] == [(0, 0, 3), (1, 0, 2)]
+assert rdr.partitions(end, end) == []
+assert SparkContext._gateway is None, "a JVM was started"
+print("NO_JVM_STREAM_PLAN_OK")
+"""
+
+
+def test_stream_planning_runs_without_a_jvm(tmp_path):
+    """initialOffset, latestOffset and partitions run in the data-source
+    Python runner, which has no Spark session: they must start no JVM."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_JVM_STREAM_PLAN, str(tmp_path / "logs")],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "NO_JVM_STREAM_PLAN_OK" in proc.stdout
+
+
 # ---------------------------------------------------- batch writer
 
 
@@ -447,6 +607,40 @@ def test_writer_rejects_out_of_range_partition(spark):
     )
 
 
+def test_refused_write_leaves_no_lock_files(tmp_path):
+    """A write whose rows target partitions the topic does not declare
+    is refused before the commit locks make lock files for them."""
+    import datetime
+    import os
+
+    import pytest
+    from pyspark.sql.types import (
+        BinaryType, IntegerType, LongType, StructField, StructType, TimestampType,
+    )
+
+    from kcore_spark.sources.pyds import TopicLogWriter
+    from kcore_spark.sources.topic_log import TopicLogControl
+
+    root = str(tmp_path / "logs")
+    TopicLogControl(root).create_topic("t", 2)
+    schema = StructType([
+        StructField("key", BinaryType()),
+        StructField("value", BinaryType()),
+        StructField("timestamp", TimestampType()),
+        StructField("part", IntegerType()),
+        StructField("seq", LongType()),
+    ])
+    ts = datetime.datetime(2024, 1, 1)
+    w = TopicLogWriter({"root": root, "topic": "t"}, schema)
+    staged = w.write(iter([(b"k%d" % i, b"v", ts, i, i) for i in range(5)]))
+    with pytest.raises(ValueError, match="declares 2 partitions"):
+        w.commit([staged])
+    lock_dir = os.path.join(root, "t", "_locks")
+    locks = set(os.listdir(lock_dir)) if os.path.isdir(lock_dir) else set()
+    assert not locks & {"p2.lock", "p3.lock", "p4.lock"}
+    assert all(v == 0 for v in TopicLogControl(root)._watermarks("t").values())
+
+
 _NO_SESSION_COMMIT = """
 import datetime, sys
 
@@ -534,12 +728,14 @@ def test_stream_reader_max_offsets_per_trigger(spark, tmp_path):
     seen = []
     batches = 0
     while True:
-        rows, end = rdr.read(pos)
+        end = rdr.latestOffset()
         if end == pos:
             break
         advanced = sum(int(end[p]) - int(pos.get(p, 0)) for p in end)
         assert advanced <= 12
-        seen.extend(rows)
+        for split in rdr.partitions(pos, end):
+            seen.extend(rdr.read(split))
+        rdr.commit(end)
         pos = end
         batches += 1
         assert batches < 50, "did not converge"

@@ -9,10 +9,13 @@ refreshed manifest returns exactly the same rows because offsets are
 immutable.
 
 Pins:
-1. a split whose file was swapped away raises, never silently skips;
+1. a split whose file vanished while the manifest still names it
+   raises, never silently skips;
 2. the empty-topic no-op split still reads as empty;
 3. end-to-end: a streaming checkpoint replay ACROSS a compaction
-   (offsets preserved, files replaced) is exact — no loss, no dups.
+   (offsets preserved, files replaced) is exact — no loss, no dups;
+4. a swap between planning and the first read replans the split's
+   offset range from the refreshed manifest and reads the same rows.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from kcore_spark.sources.pyds import SegmentSplit, TopicLogDataSource, TopicLogReader
+from kcore_spark.sources.pyds import TopicLogDataSource, TopicLogReader
 from kcore_spark.sources.topic_log import TopicLog
 
 
@@ -42,10 +45,10 @@ def test_vanished_segment_raises_not_skips(spark):
     log.produce("t", _records(spark, 10), order_by=["seq"])
 
     reader = TopicLogReader({"root": root, "topic": "t"})
-    splits = [s for s in reader.partitions() if s.path]
+    splits = [s for s in reader.partitions() if s.paths]
     assert splits
-    # simulate the swap: the planned file disappears
-    os.remove(splits[0].path)
+    # simulate the swap: one of the split's planned files disappears
+    os.remove(splits[0].paths[0])
     with pytest.raises(FileNotFoundError, match="vanished during read"):
         list(reader.read(splits[0]))
 
@@ -56,7 +59,7 @@ def test_empty_topic_noop_split_still_reads_empty(spark):
     log.create_topic("t", 1)
     reader = TopicLogReader({"root": root, "topic": "t"})
     splits = reader.partitions()
-    assert len(splits) == 1 and not splits[0].path
+    assert len(splits) == 1 and not splits[0].paths
     assert list(reader.read(splits[0]) or ()) == []
 
 
@@ -106,3 +109,27 @@ def test_stream_checkpoint_replay_across_compaction_is_exact(spark):
     run()
     assert not dup, f"replay duplicated offsets: {dup[:3]}"
     assert len(seen) == 28, f"lost rows across compaction: {len(seen)}"
+
+
+def test_swap_between_planning_and_read_replans(spark):
+    """A maintenance swap between planning and a split's first read
+    makes the read replan its offset range from the refreshed
+    manifest: the same rows come back instead of a failed read."""
+    root = tempfile.mkdtemp(prefix="kcore_pyds_swap_")
+    log = TopicLog(spark, root)
+    log.create_topic("t", 1)
+    log.produce("t", _records(spark, 10), order_by=["seq"])
+    log.produce("t", _records(spark, 10, start=10), order_by=["seq"])
+
+    def rows(reader, split):
+        return sorted(
+            (r["offset"], r["key"], r["value"]) for b in reader.read(split) for r in b.to_pylist()
+        )
+
+    reader = TopicLogReader({"root": root, "topic": "t"})
+    (split,) = reader.partitions()
+    before = rows(reader, split)
+    assert len(split.paths) == 2 and len(before) == 20
+    log.optimize("t")  # merges the two segments: both planned paths vanish
+    assert not any(os.path.exists(p) for p in split.paths)
+    assert rows(reader, split) == before
