@@ -682,15 +682,6 @@ _FS_MU = {  # comparator -> (m, u): P(agree | match), P(agree | unmatch)
 }
 
 
-def _fs_weight(pattern: dict[str, bool]) -> float:
-    import math
-
-    w = 0.0
-    for c, (m, u) in _FS_MU.items():
-        w += math.log2(m / u) if pattern[c] else math.log2((1 - m) / (1 - u))
-    return round(w, 6)
-
-
 def q_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter agreement-pattern table over customer pairs
     blocked by nation: comparators = market segment, account-balance

@@ -677,9 +677,10 @@ def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("step")
 
 
-def _bpe_sql() -> str:
-    def pair_counts(sp: str, out: str) -> str:
-        return f"""pc_{out} AS (
+def _bpe_pair_counts_sql(sp: str, out: str) -> str:
+    """DuckDB CTEs ``pc_<out>`` (adjacent-symbol pair counts over the
+    spaced vocabulary ``sp``) and ``<out>`` (its top pair, merged)."""
+    return f"""pc_{out} AS (
   SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt
   FROM (SELECT UNNEST(list_transform(generate_series(1, len(string_split(spaced, ' ')) - 1),
                 i -> string_split(spaced, ' ')[i] || ' ' || string_split(spaced, ' ')[i + 1])) AS pair,
@@ -690,9 +691,11 @@ def _bpe_sql() -> str:
   SELECT pair, replace(pair, ' ', '') AS merged, cnt
   FROM pc_{out} ORDER BY cnt DESC, pair LIMIT 1)"""
 
+
+def _bpe_sql() -> str:
     parts = []
     for k in range(1, BPE_MERGES + 1):
-        parts.append(pair_counts(f"sp{k - 1}", f"m{k}"))
+        parts.append(_bpe_pair_counts_sql(f"sp{k - 1}", f"m{k}"))
         if k < BPE_MERGES:
             parts.append(
                 f"""sp{k} AS (
@@ -764,21 +767,9 @@ def q_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tokenizer_sql() -> str:
-    def pair_counts(sp: str, out: str) -> str:
-        return f"""pc_{out} AS (
-  SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (SELECT UNNEST(list_transform(generate_series(1, len(string_split(spaced, ' ')) - 1),
-                i -> string_split(spaced, ' ')[i] || ' ' || string_split(spaced, ' ')[i + 1])) AS pair,
-               freq
-        FROM {sp})
-  GROUP BY pair),
-{out} AS (
-  SELECT pair, replace(pair, ' ', '') AS merged, cnt
-  FROM pc_{out} ORDER BY cnt DESC, pair LIMIT 1)"""
-
     parts = []
     for k in range(1, BPE_MERGES + 1):
-        parts.append(pair_counts(f"sp{k - 1}", f"m{k}"))
+        parts.append(_bpe_pair_counts_sql(f"sp{k - 1}", f"m{k}"))
         parts.append(
             f"""sp{k} AS (
   SELECT word, replace(spaced, (SELECT pair FROM m{k}), (SELECT merged FROM m{k})) AS spaced, freq

@@ -20,7 +20,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kcore_spark.sources.topic_log import TopicLog
 
@@ -57,19 +56,17 @@ class TopicConsumer:
         return self._positions[partition]
 
     def poll(self, max_records_per_partition: int = 1000) -> DataFrame | None:
-        """One batch across all assigned partitions; None when caught up."""
-        ends = {
-            r["partition"]: r["next_offset"]
-            for r in self.log.list_offsets(self.topic).collect()
-        }
+        """One batch across all assigned partitions; None when caught up.
+        A position below the log start (a new group after retention, or
+        after seek_to_beginning) reads from the log start, as fetch does,
+        and each position moves to the end of its planned window."""
+        log_starts = self.log._log_starts(self.topic)
+        starts = {p: max(pos, log_starts.get(p, 0)) for p, pos in self._positions.items()}
+        ranges = {p: (s, s + max_records_per_partition) for p, s in starts.items()}
         frames = []
-        for p, pos in self._positions.items():
-            end = ends.get(p, 0)
-            if pos >= end:
-                continue
-            take = min(max_records_per_partition, end - pos)
-            frames.append(self.log.fetch(self.topic, p, pos, take))
-            self._positions[p] = pos + take
+        for p, _, start, end in self.log._plan_ranges(self.topic, ranges):
+            frames.append(self.log.fetch(self.topic, p, start, end - start))
+            self._positions[p] = end
         if not frames:
             return None
         out = frames[0]
@@ -104,10 +101,7 @@ class TopicConsumer:
             r["partition"]: r["offset"]
             for r in self.log.offsets_for_timestamp(self.topic, ts_ms).collect()
         }
-        ends = {
-            r["partition"]: r["next_offset"]
-            for r in self.log.list_offsets(self.topic).collect()
-        }
+        ends = self.log._watermarks(self.topic)
         for p in self._positions:
             off = hits.get(p, -1)
             self._positions[p] = off if off >= 0 else ends.get(p, 0)

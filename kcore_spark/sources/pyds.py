@@ -12,15 +12,16 @@ Why a Python DataSource at all, when the engine's own fetch path is a
 plain pruned parquet scan (sources/topic_log.py — still the hot path):
 the reader contract is the public integration surface. A foreign Spark
 deployment (no kcore_spark on the driver classpath beyond this module)
-gets topic reads with the SAME planning guarantees the native path has:
+gets topic reads planned exactly as the native fetch is — both go
+through ``TopicLogControl._plan_ranges``:
 
 - one InputPartition per topic partition's offset range, clamped to
-  [log start, committed watermark) as the native scan and fetch are,
-  holding its segment files in offset order, as Kafka source splits;
+  [log start, committed watermark), holding its segment files in
+  offset order, as Kafka source splits;
 - manifest-first planning: segment files outside the requested offset
   range are pruned at plan time from footer stats recorded in
   the topic manifest (falling back to a directory listing for
-  pre-manifest logs);
+  pre-manifest logs or an unreadable manifest);
 - executors stream pyarrow RecordBatches (Arrow page transfer), with
   row-group pruning on the offset column inside each file.
 
@@ -56,7 +57,6 @@ source; the reference has no implementation to mirror.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -69,14 +69,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from kcore_spark.sources.topic_log import TopicLogControl
+from kcore_spark.sources.topic_log import _UNBOUNDED, TopicLogControl
 
 RECORD_DDL = (
     "key binary, value binary, partition int, offset bigint, "
     "timestamp timestamp_ntz, timestampType int, headers map<string,binary>"
 )
 
-_UNBOUNDED = 2**62
 _REPLANS = 3  # per split read, while a swap leaves the manifest stale
 
 
@@ -112,42 +111,12 @@ class OffsetRangeSplit(InputPartition):
 def plan_offset_ranges(
     root: str, topic: str, ranges: dict[int, tuple[int, int]]
 ) -> list[OffsetRangeSplit]:
-    """The one planner of the batch and stream readers: a split per
-    partition of ``ranges`` ({partition: (start, end)}) whose range is
-    non-empty once clamped to [log start, committed watermark), with the
-    manifest's segments overlapping it (a directory listing where the
-    manifest has none). Spark-free: the Python runner and the read tasks
-    call it."""
-    ctl = TopicLogControl(root)
-    # watermarks BEFORE the manifest: a commit indexes its segments
-    # before it flips, so this manifest indexes every offset below wm
-    wm = ctl._watermarks(topic)
-    log_starts = ctl._log_starts(topic)
-    try:
-        man = ctl._load_manifest(topic)
-    except (ValueError, OSError):
-        # unreadable manifest (torn write from a foreign tool): plan from
-        # the directory listing; this reader may lack write access to heal
-        man = {}
-    data_dir = os.path.join(ctl._topic_dir(topic), "data")
-    splits: list[OffsetRangeSplit] = []
-    for p, (start, end) in sorted(ranges.items()):
-        start = max(start, log_starts.get(p, 0))
-        end = min(end, wm.get(p, _UNBOUNDED))
-        if end <= start:
-            continue
-        entries = man.get(f"partition={p}")
-        if entries is not None:
-            paths = [
-                os.path.join(data_dir, e["file"])
-                for e in sorted(entries, key=lambda e: (e["min"], e["file"]))
-                if e["max"] >= start and e["min"] < end
-            ]
-        else:  # pre-manifest log: fall back to a directory listing
-            paths = sorted(glob.glob(os.path.join(data_dir, f"partition={p}", "*.parquet")))
-        if paths:
-            splits.append(OffsetRangeSplit(p, paths, start, end))
-    return splits
+    """The batch and stream readers' splits: one per partition of
+    ``ranges`` ({partition: (start, end)}) that ``TopicLogControl.
+    _plan_ranges`` gives segments for. Spark-free: the Python runner and
+    the read tasks call it."""
+    plan = TopicLogControl(root)._plan_ranges(topic, ranges)
+    return [OffsetRangeSplit(*entry) for entry in plan if entry[1]]
 
 
 class TopicLogReader(DataSourceReader):

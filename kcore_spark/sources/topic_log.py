@@ -42,6 +42,7 @@ per-partition serialization is the broker-side contract it relies on.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
@@ -81,6 +82,8 @@ SEGMENT_SCHEMA = pa.schema(
     ]
 )
 
+_UNBOUNDED = 2**62  # past every offset: the open end of a range
+
 
 def _write_segment(part_dir: str, table: pa.Table) -> None:
     """Land ``table`` as one segment of a partition, cast to
@@ -106,6 +109,16 @@ def _epoch_ms(ts) -> int:
     if ts.tzinfo is None:
         ts = ts.replace(tzinfo=timezone.utc)
     return int(ts.timestamp() * 1000)
+
+
+def _below(bounds: dict[int, int], default: int) -> Column:
+    """``offset < bounds[partition]`` (``default`` for partitions absent
+    from ``bounds``): a map-literal lookup keeps a per-partition bound a
+    single scan-side predicate, no join."""
+    pairs = [F.lit(x) for kv in bounds.items() for x in kv]
+    return F.col("offset") < F.coalesce(
+        F.create_map(*pairs)[F.col("partition")], F.lit(default)
+    )
 
 
 import contextlib
@@ -521,7 +534,7 @@ class TopicLogControl:
                 for rg in range(md.num_row_groups):
                     st = md.row_group(rg).column(oi).statistics
                     if st is None or not st.has_min_max:
-                        lo, hi = 0, 2**62  # no stats: must always scan
+                        lo, hi = 0, _UNBOUNDED  # no stats: must always scan
                         break
                     lo = st.min if lo is None else min(lo, st.min)
                     hi = st.max if hi is None else max(hi, st.max)
@@ -591,6 +604,47 @@ class TopicLogControl:
                 del man[pdir]
         self._save_manifest(topic, man)
         return man
+
+    def _plan_ranges(
+        self, topic: str, ranges: dict[int, tuple[int, int]]
+    ) -> list[tuple[int, list[str], int, int]]:
+        """The one planner of every offset-bounded read: ``(partition,
+        paths, start, end)`` for each partition of ``ranges`` ({partition:
+        (start, end)}) whose range is non-empty once clamped to [log
+        start, committed watermark); ``paths`` are the manifest's segments
+        overlapping it in offset order (a directory listing where the
+        manifest has none) and may be empty."""
+        # watermarks BEFORE the manifest: a commit indexes its segments
+        # before it flips, so this manifest indexes every offset below wm
+        try:
+            wm = self._watermarks(topic)
+        except FileNotFoundError:
+            wm = {}  # no control file (foreign writer): unbounded
+        log_starts = self._log_starts(topic)
+        try:
+            man = self._load_manifest(topic)
+        except (ValueError, OSError):
+            # unreadable manifest (torn write from a foreign tool): plan from
+            # the directory listing; this reader may lack write access to heal
+            man = {}
+        data_dir = os.path.join(self._topic_dir(topic), "data")
+        plan = []
+        for p, (start, end) in sorted(ranges.items()):
+            start = max(start, log_starts.get(p, 0))
+            end = min(end, wm.get(p, _UNBOUNDED))
+            if end <= start:
+                continue
+            entries = man.get(f"partition={p}")
+            if entries is not None:
+                paths = [
+                    os.path.join(data_dir, e["file"])
+                    for e in sorted(entries, key=lambda e: (e["min"], e["file"]))
+                    if e["max"] >= start and e["min"] < end
+                ]
+            else:  # pre-manifest log: fall back to a directory listing
+                paths = sorted(glob.glob(os.path.join(data_dir, f"partition={p}", "*.parquet")))
+            plan.append((p, paths, start, end))
+        return plan
 
     def _watermarks(self, topic: str) -> dict[int, int]:
         with open(self._wm_path(topic)) as f:
@@ -907,24 +961,6 @@ class TopicLog(TopicLogControl):
             d for d in os.listdir(self.root) if os.path.exists(self._meta_path(d))
         )
 
-    def _manifest_files(
-        self, topic: str, partition: int, start: int, end: int
-    ) -> list[str] | None:
-        """Absolute paths of segment files overlapping [start, end) for
-        one partition, from the manifest alone — O(partition's segment
-        list), no filesystem listing. None = no manifest (fall back to
-        a full scan)."""
-        man = self._load_manifest(topic)
-        if not man:
-            return None
-        entries = man.get(f"partition={partition}", [])
-        data_dir = self._topic_dir(topic) + "/data"
-        return [
-            os.path.join(data_dir, e["file"])
-            for e in entries
-            if e["min"] < end and e["max"] >= start
-        ]
-
     def _set_log_starts(self, topic: str, starts: dict[int, int]) -> None:
         tmp = self._log_start_path(topic) + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -1221,15 +1257,7 @@ class TopicLog(TopicLogControl):
                 f"unknown snapshot version {version} for topic {topic!r}; "
                 f"readable: {sorted(versions)}"
             )
-        hw = versions[version]
-        df = self.scan(topic)
-        pairs: list = []
-        for p, hi in hw.items():
-            pairs += [F.lit(p), F.lit(hi)]
-        return df.where(
-            F.col("offset")
-            < F.coalesce(F.create_map(*pairs)[F.col("partition")], F.lit(0))
-        )
+        return self.scan(topic).where(_below(versions[version], 0))
 
     # ------------------------------------------------------ produce
 
@@ -1427,19 +1455,9 @@ class TopicLog(TopicLogControl):
                 self._recover_compaction(topic)
 
     def scan(self, topic: str) -> DataFrame:
-        """Full-log scan (batch); partition column from the dir layout.
-        Records below a partition's log start offset (truncated via
-        truncate_before / retention) are filtered out — they may still
-        exist physically inside segments that straddle the boundary.
-
-        Reads are also bounded ABOVE by the committed watermark (r6):
-        the watermark flip is the produce commit point, so offsets at
-        or past it belong to a produce that never committed — a crash
-        between the parquet append and the flip must not leak
-        uncommitted records to readers (nor let compact() launder them
-        into committed data). Both bounds are map-literal scan-side
-        predicates, no join; partitions absent from the control file
-        (foreign writers) stay unbounded."""
+        """Full-log scan (batch); partition column from the dir layout,
+        bounded to each partition's [log start, committed watermark)
+        (_visible)."""
         tdir = self._topic_dir(topic)
         data_dir = tdir + "/data"
         self._heal_if_swap_marked(topic)
@@ -1447,8 +1465,8 @@ class TopicLog(TopicLogControl):
         # drops files/dirs that vanish between its exists check and
         # its leaf listing, so a compact/erase/optimize swap in flight
         # DURING the listing can yield a partial (or empty) index with
-        # no error — a torn read (r12 maintenance-stress find; the
-        # fetch path has the same guard). Evidence that a swap
+        # no error — a torn read (r12 maintenance-stress find;
+        # _read_segments has the same guard). Evidence that a swap
         # overlapped the listing is cheap: a data.old-* /
         # data.part-old-* dir (the swap's rename/rmtree windows) or
         # data/ missing afterwards. On evidence, clear it under the
@@ -1458,8 +1476,8 @@ class TopicLog(TopicLogControl):
         # from forcing this loop on every later scan) — and rebuild.
         # The LAST build runs while still holding the lock: the
         # listing then cannot race any swap, so the returned plan is
-        # complete by construction, never best-effort (fetch's scan
-        # fallback depends on that).
+        # complete by construction, never best-effort (_read_segments'
+        # scan fallback depends on that).
         def _evidence() -> bool:
             try:
                 names = os.listdir(tdir)
@@ -1496,154 +1514,107 @@ class TopicLog(TopicLogControl):
                     # fetch() answers for it
                     return self.spark.createDataFrame([], RECORD_SCHEMA)
                 df = self.spark.read.schema(RECORD_SCHEMA).parquet(data_dir)
+        return self._visible(topic, df)
+
+    def _visible(self, topic: str, df: DataFrame) -> DataFrame:
+        """``df``'s rows inside each partition's [log start, committed
+        watermark). Records below the log start (truncate_before /
+        retention) may still sit in segments that straddle it. The
+        watermark flip is the produce commit point, so offsets at or past
+        it belong to a produce that never committed: a crash between the
+        parquet append and the flip must not leak them to readers (nor
+        let compact() launder them into committed data). Partitions
+        absent from a control file (foreign writers) stay unbounded."""
         starts = self._log_starts(topic)
         if any(v > 0 for v in starts.values()):
-            # offset >= per-partition threshold; a map-literal lookup
-            # keeps this a single scan-side predicate (no join)
-            pairs: list = []
-            for p, lo in starts.items():
-                pairs += [F.lit(p), F.lit(lo)]
-            df = df.where(
-                F.col("offset")
-                >= F.coalesce(
-                    F.create_map(*pairs)[F.col("partition")], F.lit(0)
-                )
-            )
+            df = df.where(~_below(starts, 0))
         try:
             wm = self._watermarks(topic)
         except FileNotFoundError:
             wm = {}
         if wm:
-            hi_pairs: list = []
-            for p, hi in wm.items():
-                hi_pairs += [F.lit(p), F.lit(hi)]
-            df = df.where(
-                F.col("offset")
-                < F.coalesce(
-                    F.create_map(*hi_pairs)[F.col("partition")], F.lit(2**62)
-                )
-            )
+            df = df.where(_below(wm, _UNBOUNDED))
         return df
 
-    def fetch(self, topic: str, partition: int, start_offset: int, max_records: int) -> DataFrame:
-        """Fetch (API key 1) analog: offset-range scan of one partition.
-
-        Planning is manifest-first: only segment files whose footer
-        offset range overlaps [start, start+max) are handed to the
-        reader, so planning cost is O(relevant files) — a fetch near
-        the tail of a million-segment log lists nothing but its own
-        few files. Inside those files, partition= directory pruning
-        and offset row-group stats still apply. No shuffle; ordering
-        by offset is a partition-local sort of at most max_records
-        rows. Falls back to a full-directory scan when no manifest
-        exists (pre-manifest logs stay readable).
-        """
-        # truncated prefix is invisible: clamp the requested range to
-        # the partition's log start (a single constant, so the offset
-        # predicate still pushes down to parquet row-group stats)
-        start_offset = max(start_offset, self._log_starts(topic).get(partition, 0))
-        end = start_offset + max_records
-        # never serve past the committed watermark: segments from a
-        # produce that crashed before its flip can become manifest-
-        # indexed by an unrelated refresh, and the range clamp (a
-        # constant, still row-group-pushable) keeps them invisible —
-        # the same bound scan() applies via its map-literal filter
-        try:
-            hi = self._watermarks(topic).get(partition)
-        except FileNotFoundError:
-            hi = None
-        if hi is not None:
-            end = min(end, hi)
-        if end <= start_offset:
-            return self.spark.createDataFrame([], RECORD_SCHEMA)
-        def _heal_and_replan():
-            # stale manifest (read concurrently with a compaction swap)
-            # OR a crashed swap left the partition's only copy in a
-            # marker dir: heal FIRST, then re-plan from a fresh index.
-            # Refreshing without healing would persist a manifest that
-            # omits the partition and return an empty fetch
-            # (tests/test_crash_fuzz.py::test_fetch_* pins this).
-            # Heal AND refresh run under ONE maintenance-lock hold: a
-            # separate heal-then-refresh let a NEW swap open its
-            # marker window in between, and the unscoped refresh then
-            # listed the torn data/ (r12 maintenance-stress find; the
-            # drop-phase marker guard in _refresh_manifest_unlocked is
-            # the second line of defense for cross-process refreshers
-            # that don't hold this lock).
-            tdir = self._topic_dir(topic)
+    def _read_segments(
+        self, topic: str, plan: list, keep: Callable[[str], bool] | None = None
+    ) -> DataFrame:
+        """The segments of a _plan_ranges ``plan`` (those ``keep``
+        accepts), read safely while a maintenance swap
+        (compact/optimize/erase_keys) runs; rows are not yet filtered to
+        the plan's ranges. The hazards, all observed under
+        tests/test_maintenance_stress.py's live reader-vs-maintenance
+        interleaving:
+        - a planned file deleted before this exists-check (a stale
+          manifest) or before the JVM's eager listing (the plan fails,
+          e.g. "Option 'basePath' not found");
+        - Spark's file index SWALLOWS files that vanish between its
+          path-exists check and its leaf listing, so a swap inside the
+          listing yields a silently PARTIAL plan: every planned file must
+          show up in inputFiles();
+        - a range with no segment although the watermark says it holds
+          committed offsets: a torn manifest, or genuinely all-compacted
+          offsets. It is trusted only once a healed replan agrees.
+        Each hazard heals a crashed swap, then refreshes the manifest,
+        under ONE maintenance-lock hold, then replans. Healing comes
+        first: a refresh while a crashed swap leaves a partition's only
+        copy in a marker dir would persist a manifest omitting it
+        (tests/test_crash_fuzz.py pins this). One hold: a separate
+        heal-then-refresh let a new swap open its marker window in
+        between, and the unscoped refresh listed the torn data/. After
+        three attempts the full scan() answers: it heals under the same
+        lock and is complete by construction, so correctness never
+        depends on winning a race; only the pruning is lost."""
+        tdir = self._topic_dir(topic)
+        verified = False
+        for _ in range(3):
+            files = [f for _, paths, _, _ in plan for f in paths if keep is None or keep(f)]
+            if (verified or all(paths for _, paths, _, _ in plan)) and all(
+                os.path.exists(f) for f in files
+            ):
+                if not files:
+                    return self.spark.createDataFrame([], RECORD_SCHEMA)
+                try:
+                    src = (
+                        self.spark.read.schema(RECORD_SCHEMA)
+                        .option("basePath", tdir + "/data")
+                        .parquet(*files)
+                    )
+                    if len(src.inputFiles()) == len(files):
+                        return src
+                except Exception:
+                    pass
             with maintenance_lock(tdir):
                 if self._swap_crash_suspected(tdir):
                     self._recover_compaction(topic)
                 self._refresh_manifest(topic)
-            return self._manifest_files(topic, partition, start_offset, end)
+            plan = self._plan_ranges(topic, {p: (s, e) for p, _, s, e in plan})
+            verified = True
+        return self.scan(topic)
 
-        def _plan(paths):
-            return (
-                self.spark.read.schema(RECORD_SCHEMA)
-                .option("basePath", self._topic_dir(topic) + "/data")
-                .parquet(*paths)
-            )
+    def fetch(self, topic: str, partition: int, start_offset: int, max_records: int) -> DataFrame:
+        """Fetch (API key 1) analog: one partition's records in offset
+        order. The window starts at ``start_offset``, or at the log start
+        when that is later (the truncated prefix is invisible), spans
+        ``max_records`` offsets from there, and ends at the committed
+        watermark at the latest.
 
-        # Plan → (heal → replan) loop, bounded. The hazards it absorbs
-        # (all observed under tests/test_maintenance_stress.py's live
-        # reader-vs-maintenance interleaving):
-        # - a planned file deleted before the JVM's eager listing
-        #   (plan fails, e.g. "Option 'basePath' not found") or before
-        #   our own exists-check (stale manifest);
-        # - an EMPTY file list while the watermark says the range holds
-        #   committed offsets — either a torn manifest (verify via one
-        #   heal+replan pass) or genuinely all-compacted offsets (the
-        #   verified replan returns [] again → honest empty result).
-        # If three attempts can't get a stable plan (back-to-back
-        # swaps), fall back to the full scan — it heals under the
-        # maintenance lock and is always complete, so correctness
-        # never depends on winning a race; only this fetch's pruning
-        # is lost.
-        files = self._manifest_files(topic, partition, start_offset, end)
-        verified = False
-        src = None
-        for _ in range(3):
-            if files is None:
-                break  # no manifest: the scan fallback below
-            if any(not os.path.exists(f) for f in files) or (not files and not verified):
-                files = _heal_and_replan()
-                verified = True
-                continue
-            if not files:
-                return self.spark.createDataFrame([], RECORD_SCHEMA)
-            try:
-                src = _plan(files)
-                if len(src.inputFiles()) < len(files):
-                    # Spark's file index SWALLOWS files that vanish
-                    # between its path-exists check and its leaf
-                    # listing (its own listing-race tolerance), so a
-                    # swap landing inside _plan yields a silently
-                    # PARTIAL (or empty) plan, not an error — the
-                    # silent-0-rows shape the r12 maintenance stress
-                    # caught, and a per-file reclaim racing the
-                    # listing can drop a subset the same way. Require
-                    # FULL resolution; otherwise route through the
-                    # same heal-and-replan as a hard plan failure.
-                    raise FileNotFoundError(
-                        "planned segment files vanished during listing"
-                    )
-                break
-            except Exception:
-                src = None
-                if verified:
-                    break  # scan fallback
-                files = _heal_and_replan()
-                verified = True
-        if src is None:
-            src = self.scan(topic)
-        return self._fetch_filter(src, partition, start_offset, end)
-
-    @staticmethod
-    def _fetch_filter(src: DataFrame, partition: int, start_offset: int, end: int) -> DataFrame:
+        Planning is manifest-first (_plan_ranges): only segment files
+        whose footer offset range overlaps the window are read, so a
+        fetch near the tail of a million-segment log lists nothing but
+        its own few files, and offset row-group stats prune inside them.
+        No shuffle; ordering by offset is a partition-local sort of at
+        most max_records rows."""
+        start = max(start_offset, self._log_starts(topic).get(partition, 0))
+        plan = self._plan_ranges(topic, {partition: (start, start + max_records)})
+        if not plan:
+            return self.spark.createDataFrame([], RECORD_SCHEMA)
+        _, _, start, end = plan[0]
         return (
-            src.where(
+            self._read_segments(topic, plan)
+            .where(
                 (F.col("partition") == partition)
-                & (F.col("offset") >= start_offset)
+                & (F.col("offset") >= start)
                 & (F.col("offset") < end)
             )
             .orderBy("offset")
@@ -1676,112 +1647,29 @@ class TopicLog(TopicLogControl):
         partial-aggregatable min per partition; no shuffle beyond the
         final 1-row-per-partition agg.
         """
-        man = self._load_manifest(topic)
-        data_dir = self._topic_dir(topic) + "/data"
         n_parts = self.topic_meta(topic).num_partitions
-        parts_df = self.spark.range(n_parts).select(F.col("id").cast("int").alias("partition"))
-        if man:
-            files = [
-                os.path.join(data_dir, e["file"])
-                for entries in man.values()
-                for e in entries
-                # keep files lacking ts stats (can't prove they miss)
-                if e.get("ts_max") is None or e["ts_max"] >= ts_ms
-            ]
-            if not files:
-                # an initially-empty plan can be a LIE: a swap racing an
-                # earlier manifest refresh may have pruned a live
-                # partition's entries, and -1 here is a wrong answer,
-                # not an error. Verify with one heal-and-replan pass
-                # under the maintenance lock (the same discipline the
-                # resolution loop below applies) before answering -1
-                # (ADVICE r13 #3).
-                tdir = self._topic_dir(topic)
-                with maintenance_lock(tdir):
-                    if self._swap_crash_suspected(tdir):
-                        self._recover_compaction(topic)
-                    man = self._refresh_manifest(topic)
-                files = [
-                    os.path.join(data_dir, e["file"])
-                    for entries in man.values()
-                    for e in entries
-                    if e.get("ts_max") is None or e["ts_max"] >= ts_ms
-                ]
-                if not files:
-                    return parts_df.withColumn("offset", F.lit(-1).cast("long"))
-            src = None
-            for _ in range(2):
-                try:
-                    src = (
-                        self.spark.read.schema(RECORD_SCHEMA)
-                        .option("basePath", data_dir)
-                        .parquet(*files)
-                    )
-                    # a swap racing the listing silently drops vanished
-                    # files from the index (fetch()'s hazard) — here a
-                    # partial plan is a WRONG ANSWER (-1 / later first
-                    # offset), not an error, so verify every planned
-                    # file resolved and re-plan from a healed manifest
-                    # if not
-                    if len(src.inputFiles()) == len(files):
-                        break
-                except Exception:
-                    pass
-                src = None
-                tdir = self._topic_dir(topic)
-                with maintenance_lock(tdir):
-                    if self._swap_crash_suspected(tdir):
-                        self._recover_compaction(topic)
-                    man = self._refresh_manifest(topic)
-                files = [
-                    os.path.join(data_dir, e["file"])
-                    for entries in man.values()
-                    for e in entries
-                    if e.get("ts_max") is None or e["ts_max"] >= ts_ms
-                ]
-                if not files:
-                    return parts_df.withColumn("offset", F.lit(-1).cast("long"))
-            if src is None:
-                src = self.scan(topic)  # final fallback: always complete
-        else:
-            src = self.scan(topic)
-        # The manifest-planned path must carry the SAME visibility
-        # bounds scan() applies (its fallback already does): the
-        # manifest now commits BEFORE the watermark flip, so in the
-        # produce-commit window (or after a crashed produce, until the
-        # next reclaim) it indexes files whose offsets are
-        # uncommitted — an unclamped min(offset) could hand a consumer
-        # an offset the crashed producer's retry later reassigns to
-        # DIFFERENT records. Truncated offsets inside straddling
-        # segments are likewise below the log start and must not
-        # resurface here (r12 review find). Map-literal predicates,
-        # no join — same shape as scan().
-        try:
-            wm = self._watermarks(topic)
-        except FileNotFoundError:
-            wm = {}
-        if wm:
-            hi_pairs: list = []
-            for p, hi in wm.items():
-                hi_pairs += [F.lit(p), F.lit(hi)]
-            src = src.where(
-                F.col("offset")
-                < F.coalesce(F.create_map(*hi_pairs)[F.col("partition")], F.lit(2**62))
-            )
-        starts = self._log_starts(topic)
-        if any(v > 0 for v in starts.values()):
-            lo_pairs: list = []
-            for p, lo in starts.items():
-                lo_pairs += [F.lit(p), F.lit(lo)]
-            src = src.where(
-                F.col("offset")
-                >= F.coalesce(F.create_map(*lo_pairs)[F.col("partition")], F.lit(0))
-            )
+        data_dir = self._topic_dir(topic) + "/data"
+        # files lacking ts stats stay: they can't be proven to miss
+        older = {
+            os.path.join(data_dir, e["file"])
+            for entries in self._load_manifest(topic).values()
+            for e in entries
+            if e.get("ts_max", ts_ms) < ts_ms
+        }
+        plan = self._plan_ranges(topic, dict.fromkeys(range(n_parts), (0, _UNBOUNDED)))
+        src = self._read_segments(topic, plan, keep=lambda f: f not in older)
+        # planned segments can hold offsets outside [log start,
+        # watermark): a commit indexes its files BEFORE its flip, and a
+        # segment can straddle the log start. An unbounded min(offset)
+        # could hand out an offset a crashed producer's retry later
+        # reassigns to different records
         hits = (
-            src.where(F.col("timestamp") >= F.timestamp_millis(F.lit(ts_ms)))
+            self._visible(topic, src)
+            .where(F.col("timestamp") >= F.timestamp_millis(F.lit(ts_ms)))
             .groupBy("partition")
             .agg(F.min("offset").alias("offset"))
         )
+        parts_df = self.spark.range(n_parts).select(F.col("id").cast("int").alias("partition"))
         return (
             parts_df.join(hits, "partition", "left")
             .select("partition", F.coalesce("offset", F.lit(-1)).cast("long").alias("offset"))
@@ -1868,8 +1756,8 @@ class TopicLog(TopicLogControl):
         os.rename(tmp_dir, data_dir)
         # re-index BEFORE deleting old segments: another instance that
         # reads the manifest from disk must never be handed file paths
-        # that are already gone (fetch also tolerates a stale manifest
-        # by falling back to a full scan on a missing file)
+        # that are already gone (_read_segments also heals a stale
+        # manifest and replans on a missing file)
         self._refresh_manifest(topic)
         shutil.rmtree(old_dir)
         return n

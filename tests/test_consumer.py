@@ -128,3 +128,41 @@ def test_seek_to_timestamp(spark, log):
     c2 = TopicConsumer(log, group="g_ts2", topic="ts_seek")
     c2.seek_to_timestamp(9_000_000_000)
     assert c2.poll() is None
+
+
+def _truncated_topic(spark, log, name, n=30, keep_from=20):
+    log.create_topic(name, 1)
+    recs = spark.range(n).select(
+        F.encode(F.col("id").cast("string"), "utf-8").alias("key"),
+        F.encode(F.col("id").cast("string"), "utf-8").alias("value"),
+        F.col("id").alias("seq"),
+    )
+    log.produce(name, recs, order_by=["seq"])
+    log.truncate_before(name, {0: keep_from})
+
+
+def _offsets(consumer, chunk):
+    return [
+        r["offset"]
+        for batch in consumer.poll_batches(chunk)
+        for r in batch.select("offset").collect()
+    ]
+
+
+def test_position_below_log_start_reads_each_record_once(spark, log):
+    """A new group after retention starts below the log start: its polls
+    read from the log start, each retained record exactly once, and so
+    do they after seek_to_beginning."""
+    _truncated_topic(spark, log, "tr")
+    c = TopicConsumer(log, group="g_tr", topic="tr")
+    assert sorted(_offsets(c, 5)) == list(range(20, 30))
+    assert c.position(0) == 30
+    c.seek_to_beginning()
+    assert sorted(_offsets(c, 5)) == list(range(20, 30))
+
+
+def test_seek_to_timestamp_on_fully_truncated_partition_seeks_to_log_end(spark, log):
+    _truncated_topic(spark, log, "tr_all", keep_from=30)
+    c = TopicConsumer(log, group="g_tr_all", topic="tr_all")
+    assert c.seek_to_timestamp(0) == {0: 30}
+    assert c.poll() is None

@@ -155,3 +155,44 @@ def test_log_compaction_keeps_latest_per_key(spark, log):
     # offsets preserved (holes allowed), watermarks unchanged
     assert log._watermarks("tc") == wm_before
     assert after.agg(SF.max("offset")).collect()[0][0] == max(wm_before.values()) - 1
+
+
+@pytest.fixture(scope="module")
+def holed(spark):
+    """One partition, offsets [0, 40): compaction leaves a hole at
+    [24, 29) (those keys recur at offset 29), then truncation moves the
+    log start to 10."""
+    with tempfile.TemporaryDirectory(prefix="kcore_holed_") as d:
+        log = TopicLog(spark, d)
+        log.create_topic("h", 1)
+        key = F.when(F.col("id").between(24, 29), F.lit("dup")).otherwise(
+            F.col("id").cast("string")
+        )
+        recs = spark.range(40).select(
+            F.encode(key, "utf-8").alias("key"),
+            F.encode(F.col("id").cast("string"), "utf-8").alias("value"),
+            F.col("id").alias("seq"),
+        )
+        log.produce("h", recs, order_by=["seq"])
+        log.compact("h")
+        log.truncate_before("h", {0: 10})
+        kept = sorted(r["offset"] for r in log.scan("h").collect())
+        assert kept == [o for o in range(10, 40) if not 24 <= o < 29]
+        yield log
+
+
+@pytest.mark.parametrize("max_records", [1, 5, 100])
+@pytest.mark.parametrize("start", [0, 10, 22, 40, 45])
+def test_fetch_window_starts_at_log_start_and_counts_offsets(holed, start, max_records):
+    """fetch(p, s, m) serves offsets [max(s, log start), that + m),
+    never past the watermark: the same rows as the scan filtered to that
+    window, in offset order."""
+    lo = max(start, 10)
+    cols = ["offset", "key", "value"]
+    expect = [
+        tuple(r)
+        for r in holed.scan("h").select(*cols).orderBy("offset").collect()
+        if lo <= r["offset"] < lo + max_records
+    ]
+    got = [tuple(r) for r in holed.fetch("h", 0, start, max_records).select(*cols).collect()]
+    assert got == expect
