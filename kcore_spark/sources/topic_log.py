@@ -45,6 +45,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
@@ -167,15 +168,15 @@ def partition_commit_locks(topic_dir: str, partitions):
 def maintenance_lock(topic_dir: str):
     """Cross-process lock serializing swap-protocol MAINTENANCE on one
     topic: compact()/optimize()/erase_keys() hold it across their whole
-    body (their swap windows legitimately leave data.old-* /
-    data.part-old-* markers and opt.* staging dirs on disk), and the
-    read path's crash healing (_heal_if_swap_marked, scan_archive)
-    takes it before running _recover_compaction. Without it a reader
-    that merely OBSERVES a healthy optimize's marker window would
-    "heal" a live writer — rmtree its staging dir mid-write or restore
-    a marker it is about to delete (ADVICE r11). Readers double-check
-    the crash evidence AFTER acquiring the lock, so blocking on a live
-    maintenance pass degrades to a no-op once it finishes.
+    body (their _swap_dir windows legitimately leave a <live>.old-*
+    copy and a <live>.compact.* stage on disk), and the read path's
+    crash healing (scan, _read_segments, scan_archive) takes it before
+    running _recover_compaction. Without it a reader that merely
+    OBSERVES a healthy swap's window would "heal" a live writer —
+    rmtree its stage mid-write or restore an old copy it is about to
+    delete (ADVICE r11). Readers double-check the crash evidence AFTER
+    acquiring the lock, so blocking on a live maintenance pass degrades
+    to a no-op once it finishes.
 
     Lock order: thread mutate lock → partition commit locks → THIS →
     flip lock. Not reentrant (flock blocks a second fd even in-process);
@@ -185,9 +186,8 @@ def maintenance_lock(topic_dir: str):
     (_maint.lock, unchanged). When it does NOT — a cold-only topic
     being healed by scan_archive — the lock is a SIBLING file in the
     topics root instead of an os.makedirs side effect: creating the
-    hot dir just to lock it left a spurious hot-tier topic dir whose
-    missing data/ subdir read as permanent crash evidence to every
-    later reader (ADVICE r13 #1). The sibling name is invisible to
+    hot dir just to lock it left a spurious hot-tier topic dir
+    (ADVICE r13 #1). The sibling name is invisible to
     list_topics (no _meta.json). If the dir's existence flips between
     choosing the lock file and acquiring it, re-choose — two processes
     must never hold "the" topic's lock via different files."""
@@ -244,6 +244,63 @@ def flip_lock(topic_dir: str):
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
+
+
+def _swap_dir(live: str, stage: str) -> None:
+    """The one rewrite swap of compact, optimize and erase_keys, on a
+    topic's data/ or its archive dir: ``stage`` (a ``<live>.compact.*``
+    sibling holding the complete rewritten log) replaces ``live``. The
+    live dir is renamed aside to ``<live>.old-*`` before the stage takes
+    its place, so at every instant one of the two holds a complete log
+    across every partition, and the old copy is deleted last. That
+    ``.old-*`` sibling marks the whole window (_swap_marked); a crash
+    inside it is finished or undone by _heal_swap."""
+    old = f"{live}.old-{uuid.uuid4().hex}"
+    os.rename(live, old)
+    os.rename(stage, live)
+    shutil.rmtree(old)
+
+
+def _swap_marked(live: str) -> bool:
+    """Swap evidence for the log dir ``live``: an ``<live>.old-*``
+    sibling exists, i.e. a _swap_dir is in flight or crashed. One
+    listdir. A healthy live swap shows it too — evidence, not proof — so
+    callers re-check under the maintenance lock before healing."""
+    parent, name = os.path.split(live)
+    try:
+        return any(n.startswith(name + ".old-") for n in os.listdir(parent))
+    except FileNotFoundError:
+        return False
+
+
+def _heal_swap(live: str) -> None:
+    """Heal a crashed _swap_dir on ``live``. If ``live`` is missing, the
+    crash fell between the two renames and the old copy is the only
+    complete log: restore it (the stage only ever holds a rewrite of it,
+    so nothing is lost; the op is re-run). Otherwise the crash fell
+    after the swap: delete every old copy. Either way every
+    ``<live>.compact.*`` stage is discarded. Destructive on anything
+    that looks like swap debris, so the caller holds the topic's
+    maintenance lock. A failed restore (a healer of another build won
+    it) leaves the old copies alone."""
+    parent, name = os.path.split(live)
+    try:
+        names = sorted(os.listdir(parent))
+    except FileNotFoundError:
+        return
+    olds = [os.path.join(parent, n) for n in names if n.startswith(name + ".old-")]
+    if olds and not os.path.isdir(live):
+        try:
+            os.rename(olds[0], live)
+            olds = olds[1:]
+        except OSError:
+            pass
+    if os.path.isdir(live):
+        for d in olds:
+            shutil.rmtree(d, ignore_errors=True)
+    for n in names:
+        if n.startswith(name + ".compact."):
+            shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
 
 
 def reclaim_uncommitted_files(tdir: str, partitions: set[int] | None = None) -> int:
@@ -436,11 +493,12 @@ class TopicLogControl:
     ) -> TopicMeta:
         """CreateTopics (API key 19) analog: catalog DDL, no Spark job.
         configs: Kafka-style topic configs (retention.ms /
-        retention.bytes drive apply_retention_from_config)."""
+        retention.bytes drive apply_retention_from_config). Makes the
+        empty data/ dir, so a topic with no segment reads as empty."""
         d = self._topic_dir(name)
         if os.path.exists(self._meta_path(name)):
             raise ValueError(f"topic exists: {name}")
-        os.makedirs(d, exist_ok=True)
+        os.makedirs(os.path.join(d, "data"), exist_ok=True)
         with open(self._meta_path(name), "w") as f:
             json.dump(
                 {"name": name, "num_partitions": num_partitions, "configs": configs or {}},
@@ -464,6 +522,16 @@ class TopicLogControl:
             return {}
         with open(p) as f:
             return json.load(f)
+
+    def _plan_manifest(self, topic: str) -> dict[str, list[dict]]:
+        """The manifest as read planning sees it: an unreadable one (a torn
+        write from a foreign tool) counts as absent, so reads plan from the
+        directory listing and prune nothing by timestamp; this reader may
+        lack write access to heal it."""
+        try:
+            return self._load_manifest(topic)
+        except (ValueError, OSError):
+            return {}
 
     def _save_manifest(self, topic: str, man: dict[str, list[dict]]) -> None:
         tmp = self._manifest_path(topic) + f".tmp.{uuid.uuid4().hex}"
@@ -561,43 +629,24 @@ class TopicLogControl:
                     # the answer and are pruned without being opened
                     entry["ts_min"], entry["ts_max"] = ts_lo, ts_hi
                 man.setdefault(pdir, []).append(entry)
-        # drop entries whose files disappeared (compaction swap) —
-        # only within the scoped partition set, or a scoped refresh
-        # would purge every other partition's entries (their files were
+        # drop entries whose files disappeared (rewrite swap) — only
+        # within the scoped partition set, or a scoped refresh would
+        # purge every other partition's entries (their files were
         # never scanned into seen_files). A partition dir that vanished
         # entirely still drops: it is in scope but contributed nothing
-        # to seen_files — UNLESS its data.part-old-<p>-* marker exists,
-        # i.e. the listing raced a live (or crashed) optimize swap
-        # window: persisting the drop would hand later fetches an
-        # empty file list for a partition that has committed data and
-        # no missing-file signal to trigger healing (r12
-        # maintenance-stress find, the refresh-path twin of r11 crash-
-        # fuzz bug #3). Leave the stale entries; their missing files
-        # keep routing readers through the heal-and-replan branch.
-        try:
-            tnames = os.listdir(self._topic_dir(topic))
-        except FileNotFoundError:
-            tnames = []
-        markers = {
-            d[len("data.part-old-"):].split("-", 1)[0]
-            for d in tnames
-            if d.startswith("data.part-old-")
-        }
-        # whole-dir swap evidence (compact/erase): a data.old-* dir on
-        # disk, or data/ itself gone since the isdir check at the top —
-        # either means the per-partition listings above may have raced
-        # the swap and the "vanished" partitions are live elsewhere
-        # (ADVICE r13 #3: the optimize-marker guard alone missed this)
-        whole_swap = any(d.startswith("data.old-") for d in tnames) or (
-            not os.path.isdir(data_dir)
-        )
+        # to seen_files — UNLESS a swap is marked (_swap_marked, live or
+        # crashed): the listings above may have raced it, and the
+        # "vanished" partition is live in the other copy. Persisting
+        # the drop would hand later fetches an empty file list for a
+        # partition that has committed data and no missing-file signal
+        # to trigger healing (r12 maintenance-stress find; ADVICE r13
+        # #3). Leave the stale entries; their missing files keep
+        # routing readers through the heal-and-replan branch.
+        swapping = _swap_marked(data_dir)
         for pdir in list(man):
-            p_str = pdir.split("=", 1)[1]
-            if partitions is not None and int(p_str) not in partitions:
+            if partitions is not None and int(pdir.split("=", 1)[1]) not in partitions:
                 continue
-            if (p_str in markers or whole_swap) and not os.path.isdir(
-                os.path.join(data_dir, pdir)
-            ):
+            if swapping and not os.path.isdir(os.path.join(data_dir, pdir)):
                 continue  # mid-swap: don't persist a lie
             man[pdir] = [e for e in man[pdir] if e["file"] in seen_files]
             if not man[pdir]:
@@ -621,12 +670,7 @@ class TopicLogControl:
         except FileNotFoundError:
             wm = {}  # no control file (foreign writer): unbounded
         log_starts = self._log_starts(topic)
-        try:
-            man = self._load_manifest(topic)
-        except (ValueError, OSError):
-            # unreadable manifest (torn write from a foreign tool): plan from
-            # the directory listing; this reader may lack write access to heal
-            man = {}
+        man = self._plan_manifest(topic)
         data_dir = os.path.join(self._topic_dir(topic), "data")
         plan = []
         for p, (start, end) in sorted(ranges.items()):
@@ -894,9 +938,10 @@ class TopicLog(TopicLogControl):
 
     def _maint_locked(fn):  # noqa: N805 - descriptor-style decorator
         """Hold the topic's cross-process maintenance lock for the whole
-        body (see maintenance_lock): the swap markers these operations
-        create mid-flight are indistinguishable from crash debris, so
-        the read path's healer must be excluded until the op finishes.
+        body (see maintenance_lock): the <live>.old-* copy and
+        <live>.compact.* stage these operations leave mid-flight are
+        indistinguishable from crash debris, so the read path's healer
+        must be excluded until the op finishes.
         Stacked UNDER @_commit_locked (lock order: partitions, then
         maintenance). The decorated body may call _recover_compaction
         directly but must never re-enter another @_maint_locked method
@@ -951,8 +996,6 @@ class TopicLog(TopicLogControl):
     @_locked
     def delete_topic(self, name: str) -> None:
         """DeleteTopics (API key 20) analog."""
-        import shutil
-
         shutil.rmtree(self._topic_dir(name))
 
     def list_topics(self) -> list[str]:
@@ -1065,71 +1108,34 @@ class TopicLog(TopicLogControl):
         """Batch-read every archived (cold-tier) segment of a topic —
         the backfill path a 100 TB pipeline uses to replay history that
         has aged out of the hot log. Plain parquet scan; returns None
-        if nothing has been archived."""
+        if nothing has been archived.
+
+        erase_keys() rewrites the archive through the same _swap_dir as
+        the hot tier, so the read follows scan()'s rule: when its
+        listing may have raced a swap (_swap_marked after the read) or
+        the read failed (the dir renamed away mid-swap, ADVICE r13 #2),
+        heal under the maintenance lock — a live erase_keys holds it,
+        so this blocks until it finishes and only heals a genuine crash
+        (ADVICE r11) — and read again while holding it, where the
+        listing cannot race a swap."""
         if self.archive_root is None:
             return None
         d = os.path.join(self.archive_root, topic)
-        if not os.path.isdir(d):
-            # heal a crashed cold-tier erasure swap before declaring the
-            # archive empty: a crash between erase_keys()' two cold
-            # renames leaves the only complete copy in <topic>.old-*
-            # (same torn-read class tests/test_crash_fuzz.py caught on
-            # the hot tier's optimize markers). Delegated to
-            # _recover_compaction — which also clears extra .old-* and
-            # .erase.* debris the old inline copy left behind — under
-            # the maintenance lock, double-checked like
-            # _heal_if_swap_marked: a live erase_keys holds that lock
-            # across its archive swap, so we block until it finishes
-            # and only heal a genuine crash (ADVICE r11).
-            olds = sorted(
-                x
-                for x in (os.listdir(self.archive_root) if os.path.isdir(self.archive_root) else [])
-                if x.startswith(topic + ".old-")
-            )
-            if not olds:
-                return None
-            with maintenance_lock(self._topic_dir(topic)):
-                if not os.path.isdir(d):
-                    self._recover_compaction(topic)
-            if not os.path.isdir(d):
-                return None
-        if not os.listdir(d):
-            return None
-        # rebuild against a LIVE cold swap racing the file listing
-        # (Spark's index silently drops files that vanish between its
-        # exists check and its leaf listing — the same hazard
-        # scan()/fetch() guard against on the hot tier). Cold swap
-        # evidence after the build means the listing may be partial;
-        # under the maintenance lock no swap is live, so persistent
-        # evidence is crash debris _recover_compaction clears (a
-        # crashed erase's .old-*/.erase.* leftovers no longer force
-        # this path on every later scan_archive), and the rebuild
-        # under the lock cannot race a swap — complete by
-        # construction.
-        def _cold_evidence() -> bool:
-            names = (
-                os.listdir(self.archive_root)
-                if os.path.isdir(self.archive_root)
-                else []
-            )
-            return any(
-                n.startswith((topic + ".old-", topic + ".erase.")) for n in names
-            )
 
-        # the first read sits inside the same hazard window as scan()'s
-        # (ADVICE r13 #2): a live cold swap can rename the archive dir
-        # away between the isdir check above and Spark's listing
+        def read():
+            if not (os.path.isdir(d) and os.listdir(d)):
+                return None
+            return self.spark.read.parquet(d)
+
         try:
-            df = self.spark.read.parquet(d)
-            need_rebuild = _cold_evidence()
+            df = read()
+            torn = _swap_marked(d)
         except Exception:
-            need_rebuild = True
-            df = None
-        if need_rebuild:
+            torn = True
+        if torn:
             with maintenance_lock(self._topic_dir(topic)):
-                if _cold_evidence() or not os.path.isdir(d):
-                    self._recover_compaction(topic)
-                df = self.spark.read.parquet(d) if os.path.isdir(d) else None
+                self._recover_compaction(topic)
+                df = read()
         return df
 
     @_locked
@@ -1375,8 +1381,6 @@ class TopicLog(TopicLogControl):
         # Crash mid-move leaves above-watermark files that the target
         # partition's next produce reclaims — strictly safer than the
         # old committer window.
-        import shutil
-
         data_dir = self._topic_dir(topic) + "/data"
         stage = self._topic_dir(topic) + f"/.produce.{uuid.uuid4().hex}"
 
@@ -1410,49 +1414,32 @@ class TopicLog(TopicLogControl):
 
     @staticmethod
     def _swap_crash_suspected(tdir: str) -> bool:
-        """Cheap (one listdir) evidence of a crashed swap: data/ missing
-        entirely (compact/erase crash between its two renames) or a
-        data.part-old-<p>-* marker present (optimize crash between ITS
-        two renames). Both states also occur transiently during a
-        HEALTHY live swap — evidence, not proof; callers must re-check
-        under the maintenance lock before acting."""
-        try:
-            names = os.listdir(tdir)
-        except FileNotFoundError:
-            return False
-        return "data" not in names or any(
-            d.startswith("data.part-old-") for d in names
-        )
+        """Swap evidence for the hot tier of the topic dir ``tdir``
+        (_swap_marked on its data/)."""
+        return _swap_marked(os.path.join(tdir, "data"))
 
     def _heal_if_swap_marked(self, topic: str) -> None:
-        """Heal BOTH swap-crash shapes before a read plans against the
-        hot tier:
-        - data/ missing entirely — a compact()/erase_keys() crash
-          between its two renames;
-        - a data.part-old-<p>-* marker present — an optimize() crash
-          between ITS two renames, where data/ still exists but that
-          partition's only complete copy is the marker.
-        Found by tests/test_crash_fuzz.py: without this, scan() showed a
-        log silently missing one partition, and fetch()'s stale-manifest
-        re-plan persisted a manifest omitting it. Cost when healthy: one
-        listdir.
+        """Heal a crashed swap before a read plans against the hot tier.
+        Found by tests/test_crash_fuzz.py: without it, scan() showed a
+        torn log, and fetch()'s stale-manifest re-plan persisted a
+        manifest omitting the swapped-away partitions. Cost when
+        healthy: one listdir.
 
         Healing is DOUBLE-CHECKED under the topic's maintenance lock
-        (ADVICE r11): the same marker states exist transiently while a
+        (ADVICE r11): the same evidence exists transiently while a
         healthy compact/optimize/erase_keys runs its swap holding that
-        lock, so an unlocked heal could rmtree the live writer's opt.*
-        staging or restore a marker it is mid-delete. Acquiring the lock
+        lock, so an unlocked heal could rmtree the live writer's stage
+        or restore an old copy it is mid-delete. Acquiring the lock
         blocks until any live maintenance finishes; the re-check then
         sees a clean topic and the heal degrades to a no-op. Two
         concurrent readers healing a genuine crash serialize the same
         way (the loser re-checks and no-ops instead of racing the
         winner's renames)."""
         tdir = self._topic_dir(topic)
-        if not os.path.isdir(tdir) or not self._swap_crash_suspected(tdir):
-            return
-        with maintenance_lock(tdir):
-            if self._swap_crash_suspected(tdir):
-                self._recover_compaction(topic)
+        if self._swap_crash_suspected(tdir):
+            with maintenance_lock(tdir):
+                if self._swap_crash_suspected(tdir):
+                    self._recover_compaction(topic)
 
     def scan(self, topic: str) -> DataFrame:
         """Full-log scan (batch); partition column from the dir layout,
@@ -1461,58 +1448,30 @@ class TopicLog(TopicLogControl):
         tdir = self._topic_dir(topic)
         data_dir = tdir + "/data"
         self._heal_if_swap_marked(topic)
-        # Rebuild loop against LIVE swaps: Spark's file index silently
-        # drops files/dirs that vanish between its exists check and
-        # its leaf listing, so a compact/erase/optimize swap in flight
-        # DURING the listing can yield a partial (or empty) index with
-        # no error — a torn read (r12 maintenance-stress find;
-        # _read_segments has the same guard). Evidence that a swap
-        # overlapped the listing is cheap: a data.old-* /
-        # data.part-old-* dir (the swap's rename/rmtree windows) or
-        # data/ missing afterwards. On evidence, clear it under the
-        # maintenance lock — holding it means no swap is live, so any
-        # remaining marker/old dir is crash debris _recover_compaction
-        # safely finishes (also prevents post-swap data.old-* debris
-        # from forcing this loop on every later scan) — and rebuild.
-        # The LAST build runs while still holding the lock: the
-        # listing then cannot race any swap, so the returned plan is
-        # complete by construction, never best-effort (_read_segments'
-        # scan fallback depends on that).
-        def _evidence() -> bool:
-            try:
-                names = os.listdir(tdir)
-            except FileNotFoundError:
-                return False
-            return "data" not in names or any(
-                n.startswith(("data.old-", "data.part-old-")) for n in names
-            )
-
-        # the FIRST read is itself inside the hazard window: a live
-        # compact/erase swap can briefly rename data/ away, so the read
-        # can throw PATH_NOT_FOUND before the evidence loop ever runs
-        # (ADVICE r13 #2). Route that failure through the same
-        # maintenance-locked recover-and-rebuild branch; a topic that
-        # genuinely does not exist still raises (no tdir to heal).
+        # Rebuild against LIVE swaps: Spark's file index silently drops
+        # files/dirs that vanish between its exists check and its leaf
+        # listing, so a swap in flight DURING the listing can yield a
+        # partial (or empty) index with no error — a torn read (r12
+        # maintenance-stress find; _read_segments has the same guard).
+        # _swap_marked after the read is the cheap evidence: the swap's
+        # .old-* copy exists for its whole window. The read can also
+        # fail outright, data/ renamed away mid-swap (ADVICE r13 #2). On
+        # either, heal under the maintenance lock — holding it means no
+        # swap is live, so remaining evidence is crash debris — and read
+        # again while still holding it: that listing cannot race any
+        # swap, so the returned plan is complete by construction, never
+        # best-effort (_read_segments' scan fallback depends on that).
+        # A topic that was never created still raises.
         try:
             df = self.spark.read.schema(RECORD_SCHEMA).parquet(data_dir)
-            need_rebuild = _evidence()
+            torn = _swap_marked(data_dir)
         except Exception:
             if not os.path.isdir(tdir):
-                raise  # not a swap window — the topic was never created
-            need_rebuild = True
-            df = None
-        if need_rebuild:
+                raise
+            torn = True
+        if torn:
             with maintenance_lock(tdir):
-                if _evidence():
-                    self._recover_compaction(topic)
-                names = os.listdir(tdir)
-                if "data" not in names and not any(
-                    n.startswith(("data.old-", "data.part-old-")) for n in names
-                ):
-                    # healed, with no data/ and no swap debris left: the
-                    # topic never landed a segment — an empty log, as
-                    # fetch() answers for it
-                    return self.spark.createDataFrame([], RECORD_SCHEMA)
+                self._recover_compaction(topic)
                 df = self.spark.read.schema(RECORD_SCHEMA).parquet(data_dir)
         return self._visible(topic, df)
 
@@ -1555,13 +1514,14 @@ class TopicLog(TopicLogControl):
         - a range with no segment although the watermark says it holds
           committed offsets: a torn manifest, or genuinely all-compacted
           offsets. It is trusted only once a healed replan agrees.
-        Each hazard heals a crashed swap, then refreshes the manifest,
-        under ONE maintenance-lock hold, then replans. Healing comes
-        first: a refresh while a crashed swap leaves a partition's only
-        copy in a marker dir would persist a manifest omitting it
-        (tests/test_crash_fuzz.py pins this). One hold: a separate
-        heal-then-refresh let a new swap open its marker window in
-        between, and the unscoped refresh listed the torn data/. After
+        Each hazard runs _recover_compaction — heal a crashed swap, then
+        refresh the manifest — under ONE maintenance-lock hold, then
+        replans. Healing comes first: a refresh while a crashed swap
+        leaves the only complete log in the old copy would persist a
+        manifest omitting it (tests/test_crash_fuzz.py pins this). One
+        hold: a separate heal-then-refresh let a new swap open its
+        window in between, and the unscoped refresh listed a torn
+        log. After
         three attempts the full scan() answers: it heals under the same
         lock and is complete by construction, so correctness never
         depends on winning a race; only the pruning is lost."""
@@ -1585,9 +1545,7 @@ class TopicLog(TopicLogControl):
                 except Exception:
                     pass
             with maintenance_lock(tdir):
-                if self._swap_crash_suspected(tdir):
-                    self._recover_compaction(topic)
-                self._refresh_manifest(topic)
+                self._recover_compaction(topic)  # heals, then refreshes
             plan = self._plan_ranges(topic, {p: (s, e) for p, _, s, e in plan})
             verified = True
         return self.scan(topic)
@@ -1652,7 +1610,7 @@ class TopicLog(TopicLogControl):
         # files lacking ts stats stay: they can't be proven to miss
         older = {
             os.path.join(data_dir, e["file"])
-            for entries in self._load_manifest(topic).values()
+            for entries in self._plan_manifest(topic).values()
             for e in entries
             if e.get("ts_max", ts_ms) < ts_ms
         }
@@ -1718,6 +1676,16 @@ class TopicLog(TopicLogControl):
 
     # ------------------------------------------------------ compaction
 
+    def _rewrite(self, live: str, df: DataFrame) -> int:
+        """Write ``df`` (partitioned by ``partition``) as the complete new
+        content of the log dir ``live`` — a topic's data/ or its archive
+        dir — swap it in with _swap_dir, and return its row count."""
+        stage = f"{live}.compact.{uuid.uuid4().hex}"
+        df.write.mode("overwrite").partitionBy("partition").parquet(stage)
+        n = self.spark.read.schema(RECORD_SCHEMA).parquet(stage).count()
+        _swap_dir(live, stage)
+        return n
+
     @_locked
     @_commit_locked
     @_maint_locked
@@ -1729,7 +1697,8 @@ class TopicLog(TopicLogControl):
         with holes) and watermarks don't move. One shuffle on
         (partition, key) for the per-key argmax, then a rewrite —
         at scale this is exactly Kafka's cleaner pass expressed as a
-        window + swap. Returns the number of retained records.
+        window + swap (_rewrite). Returns the number of retained
+        records.
         """
         self._recover_compaction(topic)
         df = self.scan(topic)
@@ -1741,25 +1710,8 @@ class TopicLog(TopicLogControl):
             .drop("__rn")
         )
         compacted = keyed.unionByName(df.where(F.col("key").isNull()))
-        data_dir = self._topic_dir(topic) + "/data"
-        tmp_dir = self._topic_dir(topic) + f"/data.compact.{uuid.uuid4().hex}"
-        compacted.write.mode("overwrite").partitionBy("partition").parquet(tmp_dir)
-        n = self.spark.read.schema(RECORD_SCHEMA).parquet(tmp_dir).count()
-        import shutil
-
-        # crash-safe swap: the live dir is moved aside (not deleted)
-        # before the new one takes its place, so at every instant either
-        # data/ or data.old-*/ holds a complete log. A crash between the
-        # two renames is healed by _recover_compaction on next access.
-        old_dir = self._topic_dir(topic) + f"/data.old-{uuid.uuid4().hex}"
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
-        # re-index BEFORE deleting old segments: another instance that
-        # reads the manifest from disk must never be handed file paths
-        # that are already gone (_read_segments also heals a stale
-        # manifest and replans on a missing file)
+        n = self._rewrite(self._topic_dir(topic) + "/data", compacted)
         self._refresh_manifest(topic)
-        shutil.rmtree(old_dir)
         return n
 
     @_locked
@@ -1775,20 +1727,21 @@ class TopicLog(TopicLogControl):
         thousands of tiny segments and manifest entries).
 
         Partitions whose segments already average ≥ half the target are
-        left alone (rewriting well-sized files is wasted I/O). Rewrite
-        is per-partition with a partition-SCOPED crash-safe swap: the
-        merged segments are fully staged (final file names, no
-        sidecars) in a scratch dir, the live partition dir is renamed
-        to a `data.part-old-<p>-*` marker, and the scratch dir takes
-        its place in a single rename — so at every instant either the
-        live dir or the marker holds a complete copy of the partition.
-        A crash between the renames is healed by _recover_compaction
-        (restore the marker when the live dir is missing; otherwise
-        finish deleting it). Returns {partition: (files_before,
-        files_after)} for the rewritten partitions."""
+        left alone (rewriting well-sized files is wasted I/O). The
+        merged segments of each rewritten partition are staged (final
+        file names, no sidecars) in a ``data.compact.*`` stage; every
+        other partition's segments are hard-linked into it under their
+        own names, so their manifest entries and planned paths stay
+        valid. The stage then replaces data/ through the same _swap_dir
+        as compact(), atomic across partitions. Returns {partition:
+        (files_before, files_after)} for the rewritten partitions."""
         self._recover_compaction(topic)
         man = self._load_manifest(topic)
         data_dir = self._topic_dir(topic) + "/data"
+        stage = f"{data_dir}.compact.{uuid.uuid4().hex}"
+        seg_schema = T.StructType(
+            [f for f in RECORD_SCHEMA.fields if f.name != "partition"]
+        )
         out: dict[int, tuple[int, int]] = {}
         for pdir, entries in man.items():
             p = int(pdir.split("=", 1)[1])
@@ -1797,43 +1750,41 @@ class TopicLog(TopicLogControl):
             if n_files <= 1 or total / n_files >= target_bytes / 2:
                 continue
             want = max(1, -(-total // target_bytes))  # ceil
-            seg_schema = T.StructType(
-                [f for f in RECORD_SCHEMA.fields if f.name != "partition"]
-            )
             part_df = self.spark.read.schema(seg_schema).parquet(
                 *[os.path.join(data_dir, e["file"]) for e in entries]
             )
-            tmp_dir = self._topic_dir(topic) + f"/opt.{p}.{uuid.uuid4().hex}"
+            part_dir = os.path.join(stage, pdir)
             # range-repartition by offset: merged segments stay offset-
             # clustered so footer min/max pruning keeps its selectivity
             part_df.repartitionByRange(want, "offset").write.mode(
                 "overwrite"
-            ).parquet(tmp_dir)
-            import shutil
-
-            # stage FULLY inside tmp: final names, sidecars stripped —
-            # so the move-in below is one atomic rename, never a
-            # partially-populated live dir
+            ).parquet(part_dir)
             moved = 0
-            for fn in sorted(os.listdir(tmp_dir)):
-                src = os.path.join(tmp_dir, fn)
+            for fn in sorted(os.listdir(part_dir)):
+                src = os.path.join(part_dir, fn)
                 if fn.endswith(".parquet") and not fn.startswith((".", "_")):
                     os.rename(
                         src,
                         os.path.join(
-                            tmp_dir, f"part-opt-{moved}-{uuid.uuid4().hex}.parquet"
+                            part_dir, f"part-opt-{moved}-{uuid.uuid4().hex}.parquet"
                         ),
                     )
                     moved += 1
                 else:
                     os.remove(src)  # _SUCCESS / .crc sidecars
-            live = os.path.join(data_dir, pdir)
-            old = self._topic_dir(topic) + f"/data.part-old-{p}-{uuid.uuid4().hex}"
-            os.rename(live, old)
-            os.rename(tmp_dir, live)
-            shutil.rmtree(old)
             out[p] = (n_files, moved)
         if out:
+            rewritten = {f"partition={p}" for p in out}
+            shutil.copytree(
+                data_dir,
+                stage,
+                copy_function=os.link,
+                dirs_exist_ok=True,
+                ignore=lambda d, names: [
+                    n for n in names if d == data_dir and n in rewritten
+                ],
+            )
+            _swap_dir(data_dir, stage)
             self._refresh_manifest(topic)
         return out
 
@@ -1850,14 +1801,13 @@ class TopicLog(TopicLogControl):
         consumers' positions stay valid.
 
         Plan: one scan with a broadcast isin filter (the key list is
-        an erasure request — always tiny), then the same crash-safe
-        rewrite-and-swap machinery as compact(); a crash between the
-        renames is healed by _recover_compaction. Also scrubs the
-        ARCHIVE tier when one is attached — erasure that skipped cold
-        segments wouldn't be erasure. Returns records removed."""
+        an erasure request — always tiny), then the same rewrite and
+        _swap_dir as compact(). Also scrubs the ARCHIVE tier when one
+        is attached — erasure that skipped cold segments wouldn't be
+        erasure — by the same rewrite on <archive_root>/<topic>; a
+        crash in either swap is healed by _recover_compaction, which
+        heals both tiers. Returns records removed."""
         self._recover_compaction(topic)
-        df = self.scan(topic)
-        before = df.count()
         # null-SAFE keep filter: key is nullable, and for a null key
         # `~isin(...)` evaluates to NULL, which where() drops — that
         # would silently erase every null-keyed record (compaction's
@@ -1865,122 +1815,44 @@ class TopicLog(TopicLogControl):
         # keys the request never named would be data loss, not GDPR).
         erase_set = [bytes(k) for k in keys]
         keep = F.col("key").isNull() | ~F.col("key").isin(erase_set)
-        kept = df.where(keep)
-        data_dir = self._topic_dir(topic) + "/data"
-        tmp_dir = self._topic_dir(topic) + f"/data.compact.{uuid.uuid4().hex}"
-        kept.write.mode("overwrite").partitionBy("partition").parquet(tmp_dir)
-        after = self.spark.read.schema(RECORD_SCHEMA).parquet(tmp_dir).count()
-        import shutil
-
-        old_dir = self._topic_dir(topic) + f"/data.old-{uuid.uuid4().hex}"
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
+        df = self.scan(topic)
+        before = df.count()
+        removed = before - self._rewrite(self._topic_dir(topic) + "/data", df.where(keep))
         self._refresh_manifest(topic)
-        shutil.rmtree(old_dir)
-        removed = before - after
-        # cold tier: rewrite archived segments in place (immutable files
-        # swapped whole — readers of scan_archive list the directory)
+        # cold tier: archived segments are immutable files, rewritten
+        # and swapped whole (readers of scan_archive list the directory)
         if self.archive_root is not None:
             adir = os.path.join(self.archive_root, topic)
             if os.path.isdir(adir) and os.listdir(adir):
                 cold = self.spark.read.schema(RECORD_SCHEMA).parquet(adir)
                 n_cold = cold.count()
-                # same null-safe keep predicate as the hot tier
-                cold_kept = cold.where(
-                    F.col("key").isNull() | ~F.col("key").isin(erase_set)
-                )
-                tmp_cold = adir + f".erase.{uuid.uuid4().hex}"
-                cold_kept.write.mode("overwrite").partitionBy("partition").parquet(
-                    tmp_cold
-                )
-                n_cold_kept = self.spark.read.schema(RECORD_SCHEMA).parquet(
-                    tmp_cold
-                ).count()
-                old_cold = adir + f".old-{uuid.uuid4().hex}"
-                os.rename(adir, old_cold)
-                os.rename(tmp_cold, adir)
-                shutil.rmtree(old_cold)
-                removed += n_cold - n_cold_kept
+                removed += n_cold - self._rewrite(adir, cold.where(keep))
         return removed
 
     def _recover_compaction(self, topic: str) -> None:
-        """Heal a crashed compaction / optimize / erasure swap.
-
-        compact()/erase_keys() hot-tier invariants:
-        data/ missing + data.old-* present → crashed between renames:
-        restore the old dir (the compacted tmp is discarded — offsets
-        it holds are a subset of the old log, nothing is lost).
-        data/ present + data.old-* present → crashed mid-rmtree:
-        finish deleting. Leftover data.compact.* tmp dirs are removed
-        either way.
-
-        optimize() partition-scoped invariants (data.part-old-<p>-*):
-        live partition dir missing → crashed between renames: restore
-        the marker (the only complete copy); live present → crashed
-        mid-rmtree: finish deleting the marker. opt.* staging dirs are
-        always discarded.
-
-        erase_keys() archive-tier invariants (<topic>.old-* /
-        <topic>.erase.* under archive_root): archive dir missing +
-        .old-* present → restore it (the erasure simply didn't happen
-        and must be re-run); otherwise both leftovers are deleted.
+        """Heal a crashed compaction / optimize / erasure swap on both
+        tiers: _heal_swap on the topic's data/ and, when an archive is
+        attached, on <archive_root>/<topic> — the archive heals even
+        when the hot topic dir is absent, so a cold-only topic's crashed
+        erasure is recoverable from scan_archive. A topic dir with
+        neither data/ nor an old copy of it (a topic an older build
+        created before its first segment) gets an empty data/, so a
+        missing data/ is never mistaken for swap evidence. Then the hot
+        manifest is re-indexed: the restored dir may not match the
+        manifest written before the crash, and fetch must never plan
+        against missing files.
 
         Callers must hold the topic's maintenance lock (the swap ops via
-        @_maint_locked, read-path healers explicitly) — this method is
-        destructive on anything that looks like swap debris. The heal
-        renames are individually tolerant of OSError anyway (another
-        process not yet running this build, or debris vanishing under
-        us): a lost race degrades to re-evaluating the surviving state,
-        never to a reader-visible exception (ADVICE r11)."""
-        import shutil
-
+        @_maint_locked, read-path healers explicitly) — _heal_swap is
+        destructive on anything that looks like swap debris."""
         tdir = self._topic_dir(topic)
+        data_dir = os.path.join(tdir, "data")
+        _heal_swap(data_dir)
+        if self.archive_root is not None:
+            _heal_swap(os.path.join(self.archive_root, topic))
         if os.path.isdir(tdir):
-            olds = sorted(d for d in os.listdir(tdir) if d.startswith("data.old-"))
-            data_dir = os.path.join(tdir, "data")
-            if not os.path.isdir(data_dir) and olds:
-                try:
-                    os.rename(os.path.join(tdir, olds[0]), data_dir)
-                    olds = olds[1:]
-                except OSError:
-                    pass  # a concurrent healer won; fall through to re-list
-            if os.path.isdir(data_dir):
-                for d in olds:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-            for d in os.listdir(tdir):
-                if d.startswith("data.compact.") or d.startswith("opt."):
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-                elif d.startswith("data.part-old-"):
-                    p = d[len("data.part-old-"):].split("-", 1)[0]
-                    live = os.path.join(data_dir, f"partition={p}")
-                    if not os.path.isdir(live):
-                        os.makedirs(data_dir, exist_ok=True)
-                        try:
-                            os.rename(os.path.join(tdir, d), live)
-                        except OSError:
-                            pass  # concurrent healer restored it first
-                    else:
-                        shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-        # archive tier heals even when the hot topic dir is absent — a
-        # cold-only topic's crashed erasure swap must still be
-        # recoverable from scan_archive
-        if self.archive_root is not None and os.path.isdir(self.archive_root):
-            adir = os.path.join(self.archive_root, topic)
-            for d in sorted(os.listdir(self.archive_root)):
-                full = os.path.join(self.archive_root, d)
-                if d.startswith(topic + ".old-"):
-                    if not os.path.isdir(adir):
-                        try:
-                            os.rename(full, adir)
-                        except OSError:
-                            pass  # concurrent healer won the restore
-                    else:
-                        shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(topic + ".erase."):
-                    shutil.rmtree(full, ignore_errors=True)
-        # the restored dir may not match the manifest written before the
-        # crash — re-index so fetch never plans against missing files
-        if os.path.isdir(tdir):
+            if not (os.path.isdir(data_dir) or _swap_marked(data_dir)):
+                os.makedirs(data_dir, exist_ok=True)
             self._refresh_manifest(topic)
 
     # ------------------------------------------------------ consumer groups

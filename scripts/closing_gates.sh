@@ -35,8 +35,10 @@ n_ok=$(grep -aoE "OK  ?[a-zA-Z0-9_]+" /tmp/gates_oracle.log | awk '{print $2}' |
 SUMMARY+=("oracle sweep: rc=$rc, ${n_ok} unique OK, tail: $(tail -1 /tmp/gates_oracle.log)")
 
 echo "== gate 4/4: full pytest =="
+# --durations=30 lists the slowest tests; the full output (that list
+# included) stays in /tmp/gates_pytest_full.log next to the summary
 set -o pipefail
-python3 -m pytest tests/ -q 2>&1 | tail -2 > /tmp/gates_pytest.log
+python3 -m pytest tests/ -q --durations=30 2>&1 | tee /tmp/gates_pytest_full.log | tail -2 > /tmp/gates_pytest.log
 rc=$?; set +o pipefail; [ "$rc" -ne 0 ] && FAILED=1
 SUMMARY+=("pytest: rc=$rc, $(tail -1 /tmp/gates_pytest.log)")
 

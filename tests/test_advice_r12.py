@@ -1,7 +1,7 @@
 """Regression pins for the three ADVICE r11 findings (all in the
 topic-log swap/commit machinery):
 
-1. Read-path healing (_heal_if_swap_marked / scan_archive) must not
+1. Read-path healing (scan / scan_archive) must not
    destroy a HEALTHY live maintenance pass's state: healing now
    double-checks under the cross-process maintenance lock that
    compact()/optimize()/erase_keys() hold across their swaps, and two
@@ -16,7 +16,7 @@ topic-log swap/commit machinery):
    a truncated .parquet can never land in data/ in the first place.
 3. scan_archive's crashed-cold-swap heal delegates to
    _recover_compaction (full debris sweep: every <topic>.old-* and
-   <topic>.erase.*), not the old restore-olds[0]-only inline copy.
+   <topic>.compact.*), not the old restore-olds[0]-only inline copy.
 """
 
 from __future__ import annotations
@@ -61,54 +61,53 @@ def _rows(log, topic):
 
 
 def test_reader_heal_waits_for_live_maintenance(spark, log):
-    """A reader that observes an optimize-style marker while the
-    maintenance lock is HELD (a healthy live swap) must block, re-check,
-    and not heal — the marker's owner finishes its swap untouched."""
+    """A reader that observes swap evidence while the maintenance lock
+    is HELD (a healthy live swap) must block, re-check, and not heal —
+    the swap's owner finishes untouched."""
     log.create_topic("t", 2)
     log.produce("t", _records(spark, 12), order_by=["seq"])
     pre = _rows(log, "t")
     tdir = log._topic_dir("t")
-    live = os.path.join(tdir, "data", "partition=0")
-    marker = os.path.join(tdir, f"data.part-old-0-{uuid.uuid4().hex}")
-    # a staging dir a live optimize would be about to rename into place;
-    # an unlocked heal would rmtree it (the ADVICE scenario)
-    staging = os.path.join(tdir, f"opt.0.{uuid.uuid4().hex}")
-    os.makedirs(staging)
+    live = os.path.join(tdir, "data")
+    old = os.path.join(tdir, f"data.old-{uuid.uuid4().hex}")
+    # a stage a live rewrite would be about to rename into place; an
+    # unlocked heal would rmtree it (the ADVICE scenario)
+    stage = os.path.join(tdir, f"data.compact.{uuid.uuid4().hex}")
+    os.makedirs(stage)
 
     got: list = []
     with maintenance_lock(tdir):
-        # enter the marker window while holding the lock, as a live
-        # optimize does between its two renames
-        os.rename(live, marker)
+        # enter the swap window while holding the lock, as a live
+        # rewrite does between its two renames
+        os.rename(live, old)
         reader = threading.Thread(
             target=lambda: got.append(_rows(log, "t")), daemon=True
         )
         reader.start()
         reader.join(timeout=2.0)
-        # the reader observed the marker and must now be parked on the
+        # the reader observed the old copy and must now be parked on the
         # maintenance lock — not healing, not erroring
         assert reader.is_alive(), "reader healed inside a live maintenance window"
-        assert os.path.isdir(staging), "reader destroyed the live staging dir"
-        # the "optimize" finishes its swap: marker back to live (the
-        # degenerate but valid completion), staging consumed
-        os.rename(marker, live)
-        os.rmdir(staging)
+        assert os.path.isdir(stage), "reader destroyed the live stage"
+        # the "rewrite" finishes its swap: old copy back to live (the
+        # degenerate but valid completion), stage consumed
+        os.rename(old, live)
+        os.rmdir(stage)
     reader.join(timeout=30.0)
     assert not reader.is_alive()
     assert got and got[0] == pre
 
 
 def test_concurrent_readers_heal_genuine_crash_without_error(spark, log):
-    """Two readers racing to heal the SAME crashed optimize marker must
-    both succeed (the loser re-checks under the lock and no-ops) — the
-    old unlocked heal let the loser's os.rename raise FileNotFoundError
+    """Two readers racing to heal the SAME crashed swap must both
+    succeed (the loser re-checks under the lock and no-ops) — the old
+    unlocked heal let the loser's os.rename raise FileNotFoundError
     out of scan()."""
     log.create_topic("t", 2)
     log.produce("t", _records(spark, 12), order_by=["seq"])
     pre = _rows(log, "t")
     tdir = log._topic_dir("t")
-    live = os.path.join(tdir, "data", "partition=0")
-    os.rename(live, os.path.join(tdir, f"data.part-old-0-{uuid.uuid4().hex}"))
+    os.rename(os.path.join(tdir, "data"), os.path.join(tdir, f"data.old-{uuid.uuid4().hex}"))
 
     results: list = []
     errors: list = []
@@ -127,8 +126,8 @@ def test_concurrent_readers_heal_genuine_crash_without_error(spark, log):
     assert not errors, f"concurrent heal raced: {errors[0]!r}"
     assert results == [pre, pre]
     assert not any(
-        d.startswith("data.part-old-") for d in os.listdir(tdir)
-    ), "marker debris survived healing"
+        d.startswith("data.old-") for d in os.listdir(tdir)
+    ), "old-copy debris survived healing"
 
 
 def test_swap_ops_hold_maintenance_lock(spark, log):
@@ -294,9 +293,9 @@ def test_pyds_writer_stages_segments_atomically(spark, log, monkeypatch):
 
 def test_scan_archive_heals_all_cold_debris(spark):
     """scan_archive on a crashed cold-tier erasure swap must restore the
-    archive AND clear every piece of debris — extra <topic>.old-* and
-    <topic>.erase.* dirs included (the old inline heal restored olds[0]
-    and left the rest)."""
+    archive AND clear every piece of debris — the <topic>.compact.*
+    stage included (the old inline heal restored olds[0] and left the
+    rest)."""
     with tempfile.TemporaryDirectory(prefix="kcore_hot_") as hot, tempfile.TemporaryDirectory(
         prefix="kcore_cold_"
     ) as cold:
@@ -311,9 +310,9 @@ def test_scan_archive_heals_all_cold_debris(spark):
             for r in log.scan_archive("t").select("partition", "offset").collect()
         )
         assert archived
-        # crash state: archive renamed aside, plus erase staging debris
+        # crash state: archive renamed aside, plus the erasure's stage
         os.rename(adir, adir + f".old-{uuid.uuid4().hex}")
-        os.makedirs(adir + f".erase.{uuid.uuid4().hex}")
+        os.makedirs(adir + f".compact.{uuid.uuid4().hex}")
         got = sorted(
             (r.partition, r.offset)
             for r in log.scan_archive("t").select("partition", "offset").collect()

@@ -11,8 +11,9 @@ claims (sources/topic_log.py::_recover_compaction docstring):
    log: exactly the pre-image or exactly the post-image, never a torn
    mixture, with no reader-visible error.
 2. HEALING — re-running the operation afterwards succeeds and lands the
-   post-image, and no data.old-* / data.compact.* / opt.* debris
-   remains.
+   post-image, and no swap debris remains: all three operations swap
+   the whole data/ dir through one protocol (_swap_dir), whose debris is
+   a data.old-* copy and a data.compact.* stage.
 
 A new crash window introduced by a future edit (e.g. an extra rename
 slipped before the swap) is then caught by construction, not by
@@ -547,13 +548,14 @@ def test_pyds_commit_crash_is_exactly_once_at_every_mutation(spark, log, monkeyp
 
 
 def test_fetch_heals_optimize_marker_window(spark, log, monkeypatch):
-    """fetch() plans from the manifest; in the optimize crash window the
-    manifest's files for the swapped partition are gone and the only
-    complete copy is the data.part-old-<p>-* marker. The stale-manifest
-    branch must HEAL before re-planning — refreshing the manifest
-    against the torn data/ would persist an index that omits the
-    partition and return an empty fetch (found by driving fetch through
-    the same window the optimize fuzz exercises via scan)."""
+    """fetch() plans from the manifest; in a rewrite's crash window
+    (optimize's too, which swaps the whole data/ dir like compact) the
+    manifest's files are gone and the only complete copy is the
+    data.old-* dir. The stale-manifest branch must HEAL before
+    re-planning — refreshing the manifest against the torn log would
+    persist an index that omits the partition and return an empty fetch
+    (found by driving fetch through the same window the optimize fuzz
+    exercises via scan)."""
     import uuid
 
     log.create_topic("t", 2)
@@ -561,7 +563,6 @@ def test_fetch_heals_optimize_marker_window(spark, log, monkeypatch):
     pre = log.fetch("t", 0, 0, 100).count()
     assert pre > 0
     tdir = log._topic_dir("t")
-    live = os.path.join(tdir, "data", "partition=0")
-    os.rename(live, os.path.join(tdir, f"data.part-old-0-{uuid.uuid4().hex}"))
+    os.rename(os.path.join(tdir, "data"), os.path.join(tdir, f"data.old-{uuid.uuid4().hex}"))
     assert log.fetch("t", 0, 0, 100).count() == pre, "fetch saw a torn partition"
     _no_debris(log, "t")

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 import tempfile
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -198,14 +201,70 @@ def test_append_raw_rejects_out_of_range_partition(spark, log):
 
 
 def test_created_topic_without_segments_reads_empty(spark, log):
-    """A created topic that never landed a segment has no data/ dir.
+    """A created topic that never landed a segment, whose data/ dir is
+    missing (as an older build created it; create_topic now makes it).
     scan and list_offsets must read it as an empty log, as fetch
     does, not raise PATH_NOT_FOUND."""
+    import shutil
+
     log.create_topic("t", 2)
-    assert not os.path.exists(os.path.join(log._topic_dir("t"), "data"))
+    shutil.rmtree(os.path.join(log._topic_dir("t"), "data"))
     assert log.scan("t").count() == 0
     assert log.list_offsets("t").collect() == []
     assert all(log.fetch("t", p, 0, 10).count() == 0 for p in (0, 1))
+
+
+_NO_SEGMENT_MAINTENANCE = textwrap.dedent(
+    """
+    import json, os, shutil, sys
+    repo, root = sys.argv[1], sys.argv[2]
+    sys.path.insert(0, repo)
+    from pyspark.sql import SparkSession
+    from kcore_spark.sources.topic_log import TopicLog
+
+    spark = (
+        SparkSession.builder.master("local[1]")
+        .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    log = TopicLog(spark, root)
+    out = {}
+    for topic, drop_data in (("fresh", False), ("no_data_dir", True)):
+        log.create_topic(topic, 2, {"cleanup.policy": "compact"})
+        if drop_data:
+            shutil.rmtree(os.path.join(root, topic, "data"))
+        out[topic] = [
+            log.compact(topic),
+            log.erase_keys(topic, [b"k"]),
+            log.run_cleanup(topic)["retained"],
+        ]
+    print(json.dumps(out))
+    spark.stop()
+    """
+)
+
+
+def test_maintenance_finishes_on_topic_without_segments(tmp_path):
+    """compact, erase_keys and a cleanup.policy=compact run_cleanup on a
+    created topic with no segment — with its data/ dir, and without it
+    as an older build created it — each return 0. They hold the
+    maintenance lock, so reading a missing data/ as swap evidence made
+    their own scan block on that lock forever. Run in a child process
+    so a hang fails this test instead of stalling the suite."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    try:
+        done = subprocess.run(
+            [sys.executable, "-c", _NO_SEGMENT_MAINTENANCE, repo, str(tmp_path)],
+            capture_output=True,
+            text=True,
+            timeout=240,
+        )
+    except subprocess.TimeoutExpired:
+        pytest.fail("maintenance on a topic without segments hung")
+    assert done.returncode == 0, done.stderr[-2000:]
+    out = json.loads(done.stdout.strip().splitlines()[-1])
+    assert out == {"fresh": [0, 0, 0], "no_data_dir": [0, 0, 0]}
 
 
 # ------------------------------------------------------ compaction crash

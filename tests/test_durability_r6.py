@@ -1,5 +1,5 @@
 """Round-6 durability fixes (ADVICE r5): null-key-safe erasure, a
-crash-safe partition-scoped optimize swap, archive-tier swap healing,
+crash-safe optimize swap, archive-tier swap healing,
 per-job writer staging, and the cross-process commit lock."""
 
 from __future__ import annotations
@@ -85,17 +85,21 @@ def _small_segments(spark, log, n_batches=4, rows=5):
 
 
 def test_optimize_swap_survives_crash_between_renames(spark, log):
-    """Simulate dying after `rename(live, marker)` but before
-    `rename(tmp, live)`: the marker holds the only copy and recovery
-    must restore it — NOT classify it as mid-rmtree garbage."""
+    """Simulate dying after `rename(data, data.old-*)` but before
+    `rename(stage, data)`: the old copy holds the only complete log and
+    recovery must restore it — NOT classify it as mid-rmtree garbage —
+    and discard the stage."""
     _small_segments(spark, log)
     before = log.scan("t").orderBy("offset").collect()
     tdir = log._topic_dir("t")
-    live = os.path.join(tdir, "data", "partition=0")
-    marker = os.path.join(tdir, "data.part-old-0-deadbeef")
-    os.rename(live, marker)  # crash state: live gone, marker present
+    live = os.path.join(tdir, "data")
+    old = os.path.join(tdir, "data.old-deadbeef")
+    stage = os.path.join(tdir, "data.compact.cafe")
+    shutil.copytree(live, stage)  # a complete stage that never landed
+    os.rename(live, old)  # crash state: live gone, old copy present
     log._recover_compaction("t")
-    assert not os.path.exists(marker)
+    assert not os.path.exists(old)
+    assert not os.path.exists(stage)
     assert os.path.isdir(live)
     assert log.scan("t").orderBy("offset").collect() == before
     # fetch path healthy after heal (manifest re-indexed)
@@ -103,16 +107,16 @@ def test_optimize_swap_survives_crash_between_renames(spark, log):
 
 
 def test_optimize_swap_crash_after_swap_deletes_marker(spark, log):
-    """Crash state after both renames but before rmtree(marker): live
-    dir is complete, recovery finishes the delete."""
+    """Crash state after both renames but before rmtree(data.old-*):
+    the live dir is complete, recovery finishes the delete."""
     _small_segments(spark, log)
     before = log.scan("t").orderBy("offset").collect()
     tdir = log._topic_dir("t")
-    live = os.path.join(tdir, "data", "partition=0")
-    marker = os.path.join(tdir, "data.part-old-0-deadbeef")
-    shutil.copytree(live, marker)  # both present — live is authoritative
+    live = os.path.join(tdir, "data")
+    old = os.path.join(tdir, "data.old-deadbeef")
+    shutil.copytree(live, old)  # both present — live is authoritative
     log._recover_compaction("t")
-    assert not os.path.exists(marker)
+    assert not os.path.exists(old)
     assert log.scan("t").orderBy("offset").collect() == before
 
 
@@ -143,19 +147,19 @@ def test_archive_erase_swap_healed(spark):
         n_cold = log.scan_archive("t").count()
         assert n_cold > 0
         adir = os.path.join(cold, "t")
-        # crash state: archive dir renamed aside, erase tmp half-written
+        # crash state: archive dir renamed aside, erase stage half-written
         os.rename(adir, adir + ".old-deadbeef")
-        os.makedirs(adir + ".erase.cafe")
+        os.makedirs(adir + ".compact.cafe")
         # r11: scan_archive heals the swap window TRANSPARENTLY (it used
         # to return None until the next erase/compact ran recovery — the
         # same reader-invisibility class the crash fuzz caught on the
-        # hot tier's optimize markers)
+        # hot tier)
         assert log.scan_archive("t").count() == n_cold
         assert not os.path.exists(adir + ".old-deadbeef")
-        # staging debris is cleaned by full recovery, not the read path
+        # the stage is discarded by full recovery
         log._recover_compaction("t")
         assert log.scan_archive("t").count() == n_cold
-        assert not os.path.exists(adir + ".erase.cafe")
+        assert not os.path.exists(adir + ".compact.cafe")
 
 
 # ------------------------------------------------- per-job writer staging

@@ -275,9 +275,8 @@ def test_stream_restart_with_no_new_records_reads_nothing(spark):
 
 def test_corrupt_manifest_falls_back_to_listing(spark):
     # a manifest that isn't JSON must not poison reads: the planner
-    # both the DataSource and fetch use treats an unreadable manifest as
-    # absent and lists the directory (offsets_for_timestamp, which
-    # reads the manifest's timestamp index, still raises on it)
+    # the DataSource, fetch and offsets_for_timestamp use treats an
+    # unreadable manifest as absent and lists the directory
     import os
 
     log = _make_log(spark, n=30)
@@ -292,6 +291,7 @@ def test_corrupt_manifest_falls_back_to_listing(spark):
     )
     assert df.count() == 60
     assert log.fetch("t", 0, 0, 1000).count() == df.where("partition = 0").count() > 0
+    assert [tuple(r) for r in log.offsets_for_timestamp("t", 0).collect()] == [(0, 0), (1, 0), (2, 0)]
 
 
 def test_read_stops_at_the_committed_watermark(spark, tmp_path):

@@ -6,9 +6,9 @@
    leaves indexed-but-uncommitted segments, and an unclamped
    min(offset) would hand a consumer an offset whose records a
    retried produce later REASSIGNS.
-2. Post-swap crash debris (data.old-* next to a healthy data/, cold
-   .erase.* staging) must be cleared by the read path's evidence
-   check — not merely tolerated — so it cannot force the
+2. Post-swap crash debris (a data.old-* or cold <topic>.old-* copy
+   next to a healthy log dir) must be cleared by the read path's
+   evidence check — not merely tolerated — so it cannot force the
    swap-evidence rebuild on every later scan forever.
 """
 
@@ -102,9 +102,11 @@ def test_scan_archive_clears_cold_erase_debris(spark):
         log.truncate_before("t", {0: 5, 1: 5})
         n_cold = log.scan_archive("t").count()
         assert n_cold > 0
-        # crashed erase BEFORE its cold renames: .erase.* staging next
-        # to a healthy archive dir
-        os.makedirs(os.path.join(cold, f"t.erase.{uuid.uuid4().hex}"))
+        # crashed erase AFTER its cold swap, BEFORE rmtree: a t.old-*
+        # copy (and a leftover t.compact.* stage) next to a healthy
+        # archive dir
+        os.makedirs(os.path.join(cold, f"t.old-{uuid.uuid4().hex}", "partition=0"))
+        os.makedirs(os.path.join(cold, f"t.compact.{uuid.uuid4().hex}"))
         assert log.scan_archive("t").count() == n_cold
         left = [d for d in os.listdir(cold) if d != "t"]
         assert left == [], f"cold debris survived the read path: {left}"
