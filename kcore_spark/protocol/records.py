@@ -15,6 +15,7 @@ the broker answers CORRUPT_MESSAGE rather than crashing.
 
 from __future__ import annotations
 
+import functools
 import struct
 from dataclasses import dataclass, field
 
@@ -131,6 +132,26 @@ def decompress_block(name: str, data: bytes) -> bytes:
     raise UnsupportedCodecError(f"unknown codec {name!r}")
 
 # ------------------------------------------------------ CRC32C (software)
+#
+# Standard library only. A byte loop over a 256-entry table costs one
+# Python step per byte, so from _LANE_MIN bytes on the input is cut
+# into K = ceil(n / _LANE) lanes of _LANE bytes (zero padding at the
+# front) and the table step runs over all lanes at once:
+#
+# - lanes: byte position i of every lane is buf[i::_LANE], held as one
+#   K-byte int. Each lane's 32-bit register is four such ints, one per
+#   register byte. The table lookup is a bytes.translate with
+#   _CRC32C_BYTES (one 256-byte table per output byte of
+#   _CRC32C_TABLE); the XORs are big-int XORs.
+# - init: leading zero bytes leave a zero register at zero, and a
+#   reflected CRC started at register r equals one started at 0 with r
+#   XORed into its first 4 bytes (little-endian), so ~crc goes there.
+# - fold: the raw CRC is linear, crc(A + B) = Z_len(B)(crc(A)) ^
+#   crc(B), where Z_n is the GF(2) operator "append n zero bytes"
+#   (zlib's crc32_combine). Level j pairs neighbouring lanes of
+#   _LANE * 2**j bytes, after a zero lane in front if their count is
+#   odd; Z for that length is 16 translate tables (4 register bytes
+#   in, 4 out), built the first time a level is needed.
 
 _CRC32C_POLY = 0x82F63B78
 _CRC32C_TABLE = []
@@ -139,13 +160,94 @@ for _n in range(256):
     for _ in range(8):
         _c = (_c >> 1) ^ _CRC32C_POLY if _c & 1 else _c >> 1
     _CRC32C_TABLE.append(_c)
+_CRC32C_BYTES = [bytes((t >> s) & 0xFF for t in _CRC32C_TABLE) for s in (0, 8, 16, 24)]
+
+_LANE = 32  # bytes per lane
+_LANE_MIN = 512  # below this the byte loop is faster (break-even ~400 B)
+
+
+def _apply(cols: list[int], x: int) -> int:
+    """A GF(2)-linear map of a 32-bit register, given as the images of
+    its 32 bits."""
+    out = 0
+    while x:
+        low = x & -x
+        out ^= cols[low.bit_length() - 1]
+        x ^= low
+    return out
+
+
+@functools.cache
+def _zero_shift(level: int) -> tuple[list[int], list[list[bytes]]]:
+    """Z for _LANE * 2**level zero bytes: the images of the 32 register
+    bits, and the translate tables [input byte][output byte]."""
+    if level == 0:
+        cols = []
+        for i in range(32):
+            x = 1 << i
+            for _ in range(_LANE):
+                x = _CRC32C_TABLE[x & 0xFF] ^ (x >> 8)
+            cols.append(x)
+    else:  # Z_2n = Z_n after Z_n
+        half = _zero_shift(level - 1)[0]
+        cols = [_apply(half, c) for c in half]
+    translate = []
+    for b in range(4):
+        t = [0] * 256
+        for v in range(1, 256):
+            low = v & -v
+            t[v] = t[v ^ low] ^ cols[8 * b + low.bit_length() - 1]
+        translate.append([bytes((x >> s) & 0xFF for x in t) for s in (0, 8, 16, 24)])
+    return cols, translate
 
 
 def crc32c(data: bytes, crc: int = 0) -> int:
-    crc = ~crc & 0xFFFFFFFF
-    for b in data:
-        crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return ~crc & 0xFFFFFFFF
+    """CRC-32C (Castagnoli) of ``data``, continuing from ``crc``:
+    crc32c(b, crc32c(a)) == crc32c(a + b). Short inputs take the byte
+    loop; from _LANE_MIN bytes the lanes run in parallel and are
+    folded pairwise (see the section comment above)."""
+    n = len(data)
+    if n < _LANE_MIN:
+        crc = ~crc & 0xFFFFFFFF
+        for b in data:
+            crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
+        return ~crc & 0xFFFFFFFF
+    k = -(-n // _LANE)
+    pad = k * _LANE - n
+    buf = bytearray(pad)
+    buf += data
+    head = int.from_bytes(buf[pad : pad + 4], "little") ^ (~crc & 0xFFFFFFFF)
+    buf[pad : pad + 4] = head.to_bytes(4, "little")
+
+    frm = int.from_bytes
+    t0, t1, t2, t3 = _CRC32C_BYTES
+    c0 = c1 = c2 = c3 = 0
+    for i in range(_LANE):
+        x = (c0 ^ frm(buf[i::_LANE], "little")).to_bytes(k, "little")
+        c0 = frm(x.translate(t0), "little") ^ c1
+        c1 = frm(x.translate(t1), "little") ^ c2
+        c2 = frm(x.translate(t2), "little") ^ c3
+        c3 = frm(x.translate(t3), "little")
+
+    regs = [c.to_bytes(k, "little") for c in (c0, c1, c2, c3)]
+    level = 0
+    while k > 1:
+        shift = _zero_shift(level)[1]
+        if k & 1:  # a zero lane in front: more leading zeros
+            regs = [b"\0" + r for r in regs]
+            k += 1
+        early = [r[0::2] for r in regs]
+        k >>= 1
+        nxt = []
+        for o in range(4):
+            v = frm(regs[o][1::2], "little")
+            for b in range(4):
+                v ^= frm(early[b].translate(shift[b][o]), "little")
+            nxt.append(v.to_bytes(k, "little"))
+        regs = nxt
+        level += 1
+    raw = regs[0][0] | regs[1][0] << 8 | regs[2][0] << 16 | regs[3][0] << 24
+    return ~raw & 0xFFFFFFFF
 
 
 # ------------------------------------------------------ zigzag varints
@@ -296,7 +398,9 @@ def batch_producer_info(buf: bytes, pos: int = 0) -> tuple[int, int, int, int, b
 
 def decode_record_batch(buf: bytes, pos: int = 0) -> tuple[int, list[Record], int]:
     """Decode one batch at pos → (base_offset, records, new_pos).
-    Raises ValueError on CRC mismatch or unsupported magic/compression."""
+    Raises ValueError on CRC mismatch, unsupported magic/compression,
+    a record whose length prefix disagrees with its fields, or a record
+    count that does not end exactly at the end of the records block."""
     base_offset = struct.unpack_from(">q", buf, pos)[0]
     batch_len = struct.unpack_from(">i", buf, pos + 8)[0]
     end = pos + 12 + batch_len
@@ -335,10 +439,11 @@ def _decode_records(buf: bytes, pos: int, end: int) -> list[Record]:
     p += 4
     if codec != 0:
         buf = decompress_block(CODEC_NAMES[codec], buf[p:end])
-        p = 0
+        p, end = 0, len(buf)
     records = []
     for _ in range(n):
-        _rec_len, p = decode_varint(buf, p)
+        rec_len, p = decode_varint(buf, p)
+        rec_end = p + rec_len
         p += 1  # record attributes
         ts_delta, p = decode_varint(buf, p)
         off_delta, p = decode_varint(buf, p)
@@ -364,9 +469,15 @@ def _decode_records(buf: bytes, pos: int, end: int) -> list[Record]:
                 hv = buf[p : p + hvlen]
                 p += hvlen
             headers.append((hk, hv))
+        if p != rec_end:
+            raise ValueError(f"invalid record size {rec_len}: parsed {p - rec_end + rec_len}")
         records.append(
             Record(key, value, base_ts + ts_delta, base_offset + off_delta, headers)
         )
+    if p != end:
+        # as Kafka's "Incorrect declared batch size": the record count
+        # must account for every byte of the records block
+        raise ValueError(f"{n} records end at byte {p}, the records block at {end}")
     return records
 
 
